@@ -577,7 +577,9 @@ def assign_ids_batch(
     cmat = mat32.astype(np.float64)  # (C, DIM); f32→f64 exact
     cnrm = np.array([_np_norm(mat32[i]) for i in range(len(vids))], dtype=np.float64)
     vid_arr = np.array(vids, dtype=np.int64)
-    n = n_assign
+    # at most C distinct lists exist: a larger request (nprobe > codebook
+    # size) returns all C, never a broadcast error or a repeated id
+    n = min(n_assign, len(vids))
 
     @arrow_udf("array<bigint>")
     def _assign(emb: pa.Array) -> pa.Array:
@@ -625,7 +627,9 @@ def assign_ids_nrm_batch(
     cmat = mat32.astype(np.float64)
     cnrm = np.array([_np_norm(mat32[i]) for i in range(len(vids))], dtype=np.float64)
     vid_arr = np.array(vids, dtype=np.int64)
-    n = n_assign
+    # at most C distinct lists exist: a larger request (nprobe > codebook
+    # size) returns all C, never a broadcast error or a repeated id
+    n = min(n_assign, len(vids))
 
     # annotation must be the generic pa.Array: arrow_udf's type-hint
     # inference treats a non-Array-hinted return as a grouped aggregate
@@ -992,12 +996,13 @@ def ivf_topk(
         if not seeds:
             from pyspark.sql import types as T
 
+            id_type = df.schema[id_col].dataType
             return df.sparkSession.createDataFrame(
                 [],
                 T.StructType(
                     [
-                        T.StructField("query_id", T.LongType()),
-                        T.StructField("neighbor_id", T.LongType()),
+                        T.StructField("query_id", id_type),
+                        T.StructField("neighbor_id", id_type),
                         T.StructField("cosine", T.DoubleType()),
                     ]
                 ),

@@ -56,15 +56,22 @@ Scale notes (the honest 100 TB picture):
     + partition values — Iceberg's lower/upper_bounds) consumed by
     ``plan_scan``/``read_where`` for driver-side FILE pruning before
     the engine sees a split;
-  * DELETE comes in both industry shapes: copy-on-write —
-    ``delete_rows`` (conjunctions of simple comparisons) rewrites ONLY
-    the files whose bounds may match, untouched files carry into the
-    new snapshot by reference, the way Iceberg COW plans its rewrite
-    set; ``delete_where`` (arbitrary SQL predicates) remains
-    table-granular — and merge-on-read: ``delete_rows_mor`` commits a
+  * DELETE comes in both industry shapes: copy-on-write — one DELETE
+    body (_delete) behind two entry points: ``delete_rows``
+    (conjunctions of simple comparisons) rewrites ONLY the files whose
+    bounds may match, untouched files carry into the new snapshot by
+    reference, the way Iceberg COW plans its rewrite set;
+    ``delete_where`` (arbitrary SQL predicates) rewrites every file —
+    and merge-on-read: ``delete_rows_mor`` commits a
     deletion-vector sidecar of (file, row_index) positions that reads
     anti-join out (Delta deletion vectors / Iceberg position deletes);
     the next compact/rewrite materializes and clears them;
+  * every copy-on-write verb (overwrite, both DELETEs, update_where,
+    merge, the compactions, zorder, the CDC apply) keeps only its own
+    row logic and commits through ONE rewrite-and-commit tail
+    (_rewrite): write, stats, constraints, carried-file stats and
+    deletion vectors, evolution metadata and txns, commit at the pinned
+    snapshot + 1;
   * ALTER TABLE schema evolution (add/rename/widen/drop) is
     metadata-only — see the "Schema evolution" section below.
 """
@@ -294,8 +301,8 @@ def _reject_reserved_columns(cols) -> None:
     table: the namespace is reserved for internal machinery (__nrows
     stats, __fname/__ri MoR lineage, __z clustering), which a same-named
     user column would silently corrupt. create() and the
-    format("table_log") writer's create path both route here; appends
-    onto an existing table re-check only NEW fields (_append_loop)."""
+    format("table_log") writer's create path both route here; writes
+    onto an existing table re-check only NEW fields (_evolve_schema)."""
     bad = [c for c in cols if c.startswith("__")]
     if bad:
         raise ValueError(
@@ -547,37 +554,8 @@ def _append_loop(path, write_files, new_schema_json: str,
         # the unproven files otherwise; re-checked per retry because a
         # concurrent alter may have added a constraint we rebased onto
         _enforce_constraints(path, prev, files, new_stats)
-        # Additive schema evolution: the committed schema is the true
-        # UNION — previous fields (order preserved) + new-data-only
-        # fields — so a later append that itself drops a column can't
-        # erase earlier columns from the recorded schema.
-        prev_schema = json.loads(prev["schema"])
-        prev_cols = {f["name"] for f in prev_schema["fields"]}
-        new_fields = [
-            f for f in json.loads(new_schema_json)["fields"]
-            if f["name"] not in prev_cols
-        ]
-        reused = {f["name"] for f in new_fields} & _reserved_names(prev)
-        if reused:
-            raise ValueError(
-                f"column name(s) {sorted(reused)} were previously dropped or "
-                "renamed away; reuse would resurrect old physical values "
-                "(see schema-evolution docstring)"
-            )
-        internal = [f["name"] for f in new_fields if f["name"].startswith("__")]
-        if internal:
-            raise ValueError(
-                f"column name(s) {internal}: the __ prefix is reserved for "
-                "internal columns"
-            )
-        evolved = bool(new_fields)
-        if evolved:
-            union_schema = dict(prev_schema)
-            union_schema["fields"] = prev_schema["fields"] + new_fields
-            schema_json = json.dumps(union_schema)
-        else:
-            schema_json = prev["schema"]
-        extra: dict = {"schema_evolved": evolved, "txns": txns,
+        schema_json = _evolve_schema(prev, new_schema_json)
+        extra: dict = {"schema_evolved": schema_json != prev["schema"], "txns": txns,
                        **_evo_carry(prev), **_dv_carry(prev)}
         if txn is not None:
             extra["txns"] = {**txns, txn[0]: txn[1]}
@@ -632,8 +610,8 @@ def foreach_batch_appender(path: str, writer_id: str):
 
 def _pin_latest(path: str) -> tuple[int, dict, dict[str, int]]:
     """Pin the rewrite base ONCE: (latest snapshot id, its manifest, the
-    carried txns map). Every rewrite op (overwrite/delete/merge/compact)
-    must derive BOTH its source rows and its commit id from this single
+    carried txns map). Every rewrite verb derives BOTH its source rows
+    and its commit id (_rewrite commits at pinned + 1) from this single
     pin — re-listing snapshots after reading would let a concurrent
     append advance 'latest' and get silently clobbered without a
     CommitConflict (the lost-update race)."""
@@ -643,6 +621,138 @@ def _pin_latest(path: str) -> tuple[int, dict, dict[str, int]]:
     latest = snaps[-1]
     prev = _read_manifest(path, latest)
     return latest, prev, _txns_of(path, snaps, prev)
+
+
+def _evolve_schema(prev: dict, new_schema_json: str) -> str:
+    """THE additive schema evolution, shared by _append_loop and the CDC
+    apply's merge (overwrite runs it for its guards alone): the committed
+    schema is the true UNION — previous fields (order preserved) plus
+    new-data-only fields — so a write that itself drops a column can't
+    erase earlier columns from the recorded schema. A new field may not
+    reuse a retired name (reuse would resurrect old physical values; see
+    the schema-evolution section) nor take the reserved __ prefix.
+    Returns the pinned schema unchanged when nothing is new."""
+    prev_schema = json.loads(prev["schema"])
+    prev_cols = {f["name"] for f in prev_schema["fields"]}
+    new_fields = [
+        f for f in json.loads(new_schema_json)["fields"] if f["name"] not in prev_cols
+    ]
+    reused = {f["name"] for f in new_fields} & _reserved_names(prev)
+    if reused:
+        raise ValueError(
+            f"column name(s) {sorted(reused)} are retired (previously dropped "
+            "or renamed away); reuse would resurrect old physical values "
+            "(see schema-evolution docstring)"
+        )
+    _reject_reserved_columns([f["name"] for f in new_fields])
+    if not new_fields:
+        return prev["schema"]
+    return json.dumps({**prev_schema, "fields": prev_schema["fields"] + new_fields})
+
+
+def _rewrite(
+    path: str,
+    pin: tuple[int, dict, dict[str, int]],
+    operation: str,
+    rows: DataFrame,
+    carried: tuple[str, ...] | list[str] = (),
+    schema_json: str | None = None,
+    **extra,
+) -> int:
+    """THE copy-on-write rewrite-and-commit tail every rewrite verb
+    shares (overwrite, delete_where, delete_rows, update_where, merge,
+    compact, compact_small_files, optimize_zorder and the CDC apply's
+    merge — each keeps only its own row logic): write ``rows`` as new
+    data files, collect their stats, enforce the CHECK constraints on
+    them (free when the table has none), and commit them plus the
+    ``carried`` files (kept by reference with their stats; deletion
+    vectors survive only while they name one — _dv_shed) at the pinned
+    snapshot + 1, so a concurrent commit since ``pin`` raises
+    CommitConflict. The manifest carries the pinned txns and evolution
+    metadata plus the verb's ``extra`` keys; ``schema_json`` defaults
+    to the pinned schema."""
+    latest, prev, txns = pin
+    partition_by = prev["partition_by"] or None
+    new_files = _write_data_files(rows, path, partition_by)
+    new_stats = _collect_stats(path, new_files)
+    _enforce_constraints(path, prev, new_files, new_stats)
+    stats_map = prev.get("file_stats", {})
+    file_stats = {f: stats_map[f] for f in carried if f in stats_map}
+    _commit(
+        path,
+        latest + 1,
+        _manifest(
+            operation, sorted([*carried, *new_files]),
+            schema_json or prev["schema"], partition_by,
+            {"txns": txns, **_evo_carry(prev),
+             **_dv_shed(path, prev, set(carried)), **extra},
+            file_stats={**file_stats, **new_stats},
+        ),
+    )
+    return latest + 1
+
+
+def _changes_first(spark: SparkSession, path: str, cols: list[str], changes):
+    """THE change-data sidecar step every change-recording rewrite shares
+    (the DELETE body, update_where, merge, the CDC apply): write the
+    ``changes()`` rows to ``_changes/`` FIRST and hand back their
+    materialized read-back, which the rewrite then consumes instead of
+    re-evaluating the predicate, SET expressions or merge source — so
+    even non-deterministic input cannot make the feed disagree with the
+    table. Returns ``({"change_data": files}, read-back)``; a table whose
+    own ``cols`` collide with the CDF namespace skips the sidecar and
+    gets ``({}, None)`` (the feed refuses such tables anyway)."""
+    if set(_CDF_COLS) & set(cols):
+        return {}, None
+    df = changes()
+    files = _write_change_data(df, path)
+    back = (spark.read.parquet(*[os.path.join(path, f) for f in files])
+            if files else df.limit(0))
+    return {"change_data": files}, back
+
+
+def _delete(
+    spark: SparkSession,
+    path: str,
+    pin: tuple[int, dict, dict[str, int]],
+    files: list[str],
+    predicate_sql: str,
+    carried: tuple[str, ...] | list[str] = (),
+    **extra,
+) -> int:
+    """THE copy-on-write DELETE body: delete_where (every file, arbitrary
+    SQL) and delete_rows (the stats-pruned candidates, where-tuples)
+    differ only in which ``files`` they rewrite and which they carry.
+    SQL DELETE removes rows where the predicate is TRUE; rows where it is
+    NULL (e.g. the column is null, or absent from pre-evolution files and
+    read back as null) SURVIVE — a bare NOT(pred) filter would silently
+    delete them. The predicate (possibly non-deterministic) is evaluated
+    ONCE: the matched rows go to the change-data sidecar WITH their
+    (__fname, __ri) lineage, and the rewrite keeps exactly the rows whose
+    identity is NOT in the materialized sidecar, so the feed's
+    retractions are, row for row, the rows the table lost."""
+    from pyspark.sql import functions as F
+
+    prev = pin[1]
+    cols = [f["name"] for f in json.loads(prev["schema"])["fields"]]
+    src = _fill_to_contract(
+        _scan(spark, path, prev, files, with_lineage=True), prev["schema"]
+    )
+    hit = f"coalesce(({predicate_sql}), false)"
+    cd, gone = _changes_first(spark, path, cols, lambda: (
+        src.filter(hit).select(*cols, "__fname", "__ri")
+        .withColumn("_change_type", F.lit("delete"))
+    ))
+    if gone is None:  # CDF-namespace-colliding table: one-pass rewrite
+        kept = src.filter(f"NOT {hit}")
+    else:
+        gone = _maybe_broadcast_dvs(
+            gone.select("__fname", "__ri"),
+            [os.path.join(path, f) for f in cd["change_data"]],
+        )
+        kept = src.join(gone, ["__fname", "__ri"], "left_anti")
+    return _rewrite(path, pin, "delete", kept.select(*cols), carried,
+                    predicate=predicate_sql, **cd, **extra)
 
 
 def overwrite(spark: SparkSession, path: str, df: DataFrame) -> int:
@@ -655,33 +765,11 @@ def overwrite(spark: SparkSession, path: str, df: DataFrame) -> int:
     append/add_column reject it would make the name-reuse guard
     depend on which write op you used."""
     latest, prev, txns = _pin_latest(path)
-    reused = set(df.columns) & _reserved_names(prev)
-    if reused:
-        raise ValueError(
-            f"column name(s) {sorted(reused)} are retired (dropped or renamed "
-            "away) and cannot be reintroduced"
-        )
-    internal = [c for c in df.columns if c.startswith("__")]
-    if internal:
-        raise ValueError(
-            f"column name(s) {internal}: the __ prefix is reserved for internal columns"
-        )
-    evo = _evo_carry(prev)
-    evo.pop("physical_names", None)  # all files replaced: mapping is moot
-    partition_by = prev["partition_by"] or None
-    files = _write_data_files(df, path, partition_by)
-    stats = _collect_stats(path, files)
-    _enforce_constraints(path, prev, files, stats)
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "overwrite", files, df.schema.json(), partition_by,
-            {"txns": txns, **evo},
-            file_stats=stats,
-        ),
-    )
-    return latest + 1
+    _evolve_schema(prev, df.schema.json())  # guards only: the schema is replaced
+    # all files replaced: the physical-name mapping is moot
+    prev = {k: v for k, v in prev.items() if k != "physical_names"}
+    return _rewrite(path, (latest, prev, txns), "overwrite", df,
+                    schema_json=df.schema.json())
 
 
 def delete_where(spark: SparkSession, path: str, predicate_sql: str) -> int:
@@ -697,68 +785,10 @@ def delete_where(spark: SparkSession, path: str, predicate_sql: str) -> int:
     CHANGE FEED (r12): the deleted rows land in a ``_changes/`` sidecar
     as retractions, so the feed represents this DELETE too. The
     predicate here is ARBITRARY SQL (possibly non-deterministic), so
-    single evaluation is enforced through ROW IDENTITY: the matched
-    rows are written to the sidecar WITH their (__fname, __ri) lineage,
-    and the rewrite keeps exactly the rows whose identity is NOT in the
-    materialized sidecar — the predicate is evaluated once, and the
-    feed's retractions are, row for row, the rows the table lost."""
-    from pyspark.sql import functions as F
-
-    latest, prev, txns = _pin_latest(path)
-    contract_cols = [f["name"] for f in json.loads(prev["schema"])["fields"]]
-    partition_by = prev["partition_by"] or None
-    cd: dict = {}
-    if not (set(_CDF_COLS) & set(contract_cols)):
-        src = _fill_to_contract(
-            _scan(spark, path, prev, prev["files"], with_lineage=True),
-            prev["schema"],
-        )
-        # SQL DELETE removes rows where the predicate is TRUE; NULL
-        # survives (see the else branch's comment)
-        matched = src.filter(f"coalesce(({predicate_sql}), false)")
-        cd_files = _write_change_data(
-            matched.select(*contract_cols, "__fname", "__ri")
-            .withColumn("_change_type", F.lit("delete")),
-            path,
-        )
-        cd = {"change_data": cd_files}
-        if cd_files:
-            gone = _maybe_broadcast_dvs(
-                spark.read.parquet(
-                    *[os.path.join(path, f) for f in cd_files]
-                ).select("__fname", "__ri"),
-                [os.path.join(path, f) for f in cd_files],
-            )
-            kept = (
-                src.join(gone, ["__fname", "__ri"], "left_anti")
-                .select(*contract_cols)
-            )
-        else:
-            kept = src.select(*contract_cols)
-    else:
-        # CDF-namespace-colliding tables: the original one-pass rewrite.
-        # SQL DELETE removes rows where the predicate is TRUE; rows
-        # where it is NULL (e.g. the column is null, or absent from
-        # pre-evolution files and read back as null) SURVIVE — a bare
-        # NOT(pred) filter would silently delete them
-        kept = read(spark, path, snapshot=latest).filter(
-            f"NOT coalesce(({predicate_sql}), false)"
-        )
-    files = _write_data_files(kept, path, partition_by)
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "delete",
-            files,
-            prev["schema"],
-            partition_by,
-            {"predicate": predicate_sql, "txns": txns, **cd,
-             **_evo_carry(prev)},
-            file_stats=_collect_stats(path, files),
-        ),
-    )
-    return latest + 1
+    single evaluation is enforced through ROW IDENTITY (the shared
+    DELETE body, _delete)."""
+    pin = _pin_latest(path)
+    return _delete(spark, path, pin, pin[1]["files"], predicate_sql)
 
 
 def merge(
@@ -793,8 +823,9 @@ def merge(
 
     from pyspark.sql import types as T
 
-    latest, prev, txns = _pin_latest(path)
-    target = read(spark, path, snapshot=latest)
+    pin = _pin_latest(path)
+    prev = pin[1]
+    target = _scan(spark, path, prev, prev["files"])
     cols = target.columns
     # Conform the source to the target's declared types (r12: an INT
     # source column merged into a BIGINT table used to write mixed-type
@@ -832,55 +863,32 @@ def merge(
                 "explicitly if that is intended"
             )
     source = source.select(*exprs)
-    partition_by = prev["partition_by"] or None
-    cd: dict = {}
-    if not (set(_CDF_COLS) & set(cols)):
-        tkeys = target.select(*on).distinct()
-        classified = source.select(*cols).join(
-            tkeys.withColumn("__hit", F.lit(True)), on, "left"
-        )
-        post_ins = classified.select(
+
+    def _changes() -> DataFrame:
+        tkeys = target.select(*on).distinct().withColumn("__hit", F.lit(True))
+        return source.select(*cols).join(tkeys, on, "left").select(
             *cols,
             F.when(F.col("__hit").isNotNull(), F.lit("update_postimage"))
             .otherwise(F.lit("insert")).alias("_change_type"),
         )
-        cd_files = _write_change_data(post_ins, path)
-        msrc = (
-            spark.read.parquet(*[os.path.join(path, f) for f in cd_files])
-            if cd_files else None
-        )
-        if msrc is not None:
-            upd_keys = (
-                msrc.filter(F.col("_change_type") == "update_postimage")
-                .select(*on).distinct()
-            )
-            pre = (
-                target.join(upd_keys, on, "left_semi").select(*cols)
-                .withColumn("_change_type", F.lit("update_preimage"))
-            )
-            cd_files = cd_files + _write_change_data(pre, path)
-            src_rows = msrc.drop("_change_type").select(*cols)
-        else:
-            src_rows = source.select(*cols).limit(0)
-        cd = {"change_data": cd_files}
-        survivors = target.join(src_rows.select(*on).distinct(), on, "left_anti")
-        merged = survivors.select(*cols).unionByName(src_rows)
+
+    cd, msrc = _changes_first(spark, path, cols, _changes)
+    if msrc is None:
+        src_rows = source.select(*cols)
     else:
-        survivors = target.join(source.select(*on).distinct(), on, "left_anti")
-        merged = survivors.select(*cols).unionByName(source.select(*cols))
-    files = _write_data_files(merged, path, partition_by)
-    stats = _collect_stats(path, files)
-    _enforce_constraints(path, prev, files, stats)
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "merge", files, prev["schema"], partition_by,
-            {"merge_on": on, "txns": txns, **cd, **_evo_carry(prev)},
-            file_stats=stats,
-        ),
-    )
-    return latest + 1
+        upd_keys = (
+            msrc.filter(F.col("_change_type") == "update_postimage")
+            .select(*on).distinct()
+        )
+        pre = (
+            target.join(upd_keys, on, "left_semi").select(*cols)
+            .withColumn("_change_type", F.lit("update_preimage"))
+        )
+        cd["change_data"] += _write_change_data(pre, path)
+        src_rows = msrc.drop("_change_type").select(*cols)
+    survivors = target.join(src_rows.select(*on).distinct(), on, "left_anti")
+    merged = survivors.select(*cols).unionByName(src_rows)
+    return _rewrite(path, pin, "merge", merged, merge_on=on, **cd)
 
 
 def compact(spark: SparkSession, path: str, target_files: int = 1) -> int:
@@ -894,23 +902,11 @@ def compact(spark: SparkSession, path: str, target_files: int = 1) -> int:
     guarantee requires the rewrite source and the commit id to come
     from one pinned snapshot (_pin_latest); a concurrent append
     conflicts rather than losing its rows."""
-    latest, prev, txns = _pin_latest(path)
-    current = read(spark, path, snapshot=latest)
-    partition_by = prev["partition_by"] or None
-    files = _write_data_files(current.coalesce(target_files), path, partition_by)
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "compact",
-            files,
-            prev["schema"],
-            partition_by,
-            {"compacted_from": len(prev["files"]), "txns": txns, **_evo_carry(prev)},
-            file_stats=_collect_stats(path, files),
-        ),
-    )
-    return latest + 1
+    pin = _pin_latest(path)
+    prev = pin[1]
+    current = _scan(spark, path, prev, prev["files"])
+    return _rewrite(path, pin, "compact", current.coalesce(target_files),
+                    compacted_from=len(prev["files"]))
 
 
 def compact_small_files(
@@ -943,7 +939,8 @@ def compact_small_files(
     the new snapshot id (or the current one when nothing qualifies)."""
     import math
 
-    latest, prev, txns = _pin_latest(path)
+    pin = _pin_latest(path)
+    latest, prev, _txns = pin
     by_dir: dict[str, list[str]] = {}
     sizes: dict[str, int] = {}
     for f in prev["files"]:
@@ -960,27 +957,9 @@ def compact_small_files(
     carried = [f for f in prev["files"] if f not in small_set]
     src = _scan(spark, path, prev, small)
     n_out = max(1, math.ceil(sum(sizes[f] for f in small) / target_bytes))
-    partition_by = prev["partition_by"] or None
-    new_files = _write_data_files(src.coalesce(n_out), path, partition_by)
-    stats_map = prev.get("file_stats", {})
-    file_stats = {f: stats_map[f] for f in carried if f in stats_map}
-    file_stats.update(_collect_stats(path, new_files))
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "compact",
-            sorted(carried + new_files),
-            prev["schema"],
-            partition_by,
-            {"compacted_from": len(small), "skipped_files": len(carried),
-             "target_bytes": target_bytes, "txns": txns,
-             **_evo_carry(prev),
-             **_dv_shed(path, prev, set(carried))},
-            file_stats=file_stats,
-        ),
-    )
-    return latest + 1
+    return _rewrite(path, pin, "compact", src.coalesce(n_out), carried,
+                    compacted_from=len(small), skipped_files=len(carried),
+                    target_bytes=target_bytes)
 
 
 def optimize_zorder(
@@ -1001,29 +980,16 @@ def optimize_zorder(
     compact."""
     from open_data_lakehouse_demo_spark.sources.layout import zorder_key
 
-    latest, prev, txns = _pin_latest(path)
-    current = read(spark, path, snapshot=latest)
-    partition_by = prev["partition_by"] or None
+    pin = _pin_latest(path)
+    prev = pin[1]
+    current = _scan(spark, path, prev, prev["files"])
     keyed = current.withColumn("__z", zorder_key(current, cols))
     clustered = (
         keyed.repartitionByRange(target_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    files = _write_data_files(clustered, path, partition_by)
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "optimize_zorder",
-            files,
-            prev["schema"],
-            partition_by,
-            {"zorder_by": cols, "txns": txns, **_evo_carry(prev)},
-            file_stats=_collect_stats(path, files),
-        ),
-    )
-    return latest + 1
+    return _rewrite(path, pin, "optimize_zorder", clustered, zorder_by=cols)
 
 
 def rollback(spark: SparkSession, path: str, snapshot: int) -> int:
@@ -1342,27 +1308,30 @@ def _scan(
 def _dv_carry(prev: dict) -> dict:
     """Deletion-vector list an op that keeps ALL of prev's data files BY
     REFERENCE must carry forward (append / alters / rollback-to-target).
-    Ops that rewrite every file (overwrite/delete_where/merge/compact/
-    zorder) read through the DVs and so materialize the deletes — they
-    deliberately do NOT call this, which clears the vectors. PARTIAL
-    rewrites (compact_small_files/update_where/delete_rows) use
-    _dv_shed instead, dropping vectors the rewrite made fully inert."""
+    Every copy-on-write rewrite commits through _rewrite instead, whose
+    _dv_shed keeps only the vectors still naming a carried file: a full
+    rewrite (overwrite/delete_where/merge/compact/zorder/the CDC apply)
+    carries nothing and so clears them, a partial one
+    (compact_small_files/update_where/delete_rows) drops those it made
+    fully inert."""
     return {"delete_vectors": prev["delete_vectors"]} if prev.get("delete_vectors") else {}
 
 
 def _dv_shed(path: str, prev: dict, carried: set[str]) -> dict:
-    """Deletion vectors still worth carrying after a PARTIAL copy-on-write
-    rewrite (compact_small_files / update_where / delete_rows): the
-    rewritten files read THROUGH their vectors, so entries naming them
-    are fully materialized — a vector whose every entry names a
-    rewritten file is inert and is SHED here instead of ratcheting the
-    per-read MoR anti-join tax forever (r11 review found the ratchet in
-    compaction; r12 ADVICE found update_where/delete_rows carrying it
-    via the plain _dv_carry). Vectors still naming any carried
-    (untouched) file stay live — their entries for rewritten files are
-    harmless, every DV consumer filters to manifest-present names."""
+    """Deletion vectors still worth carrying after a copy-on-write
+    rewrite (_rewrite, for every rewrite verb): the rewritten files read
+    THROUGH their vectors, so entries naming them are fully materialized
+    — a vector whose every entry names a rewritten file is inert and is
+    SHED here instead of ratcheting the per-read MoR anti-join tax
+    forever (r11 review found the ratchet in compaction; r12 ADVICE
+    found update_where/delete_rows carrying it via the plain _dv_carry).
+    Vectors still naming any carried (untouched) file stay live — their
+    entries for rewritten files are harmless, every DV consumer filters
+    to manifest-present names. A full rewrite carries nothing and sheds
+    every vector without opening one (no added I/O for e.g. the
+    streaming overwrite sink)."""
     dvs = prev.get("delete_vectors") or []
-    if not dvs:
+    if not dvs or not carried:
         return {}
     import pyarrow.parquet as pq
 
@@ -1715,23 +1684,29 @@ def _ensure_predicate_columns(df: DataFrame, schema_json: str,
     return df
 
 
-def _plan(
-    path: str, where: list[tuple], snapshot: int | None
-) -> tuple[dict, list[str], list[str]]:
-    """(manifest, candidates, skipped) for a snapshot + predicate — the
-    ONE manifest-read + bounds-pruning implementation behind plan_scan
-    and read_where, so the documented planning entry point and the
-    reading path can never drift (r9 review finding)."""
-    snaps = _list_snapshots(path)
-    if not snaps:
-        raise ValueError(f"no table at {path}")
-    m = _read_manifest(path, snaps[-1] if snapshot is None else snapshot)
+def _prune(m: dict, where: list[tuple]) -> tuple[list[str], list[str]]:
+    """(candidates, skipped) of manifest ``m``'s files for a conjunction
+    — THE bounds-pruning loop behind scan planning (plan_scan,
+    read_where) and the stats-pruned rewrites (delete_rows,
+    update_where, delete_rows_mor), so the documented planning entry
+    point and every path that acts on it can never drift."""
     stats_map = m.get("file_stats", {})
     keep, skip = [], []
     for f in m["files"]:
         s = stats_map.get(f)
         (keep if _may_match(s, _translate_where(m, where, s)) else skip).append(f)
-    return m, keep, skip
+    return keep, skip
+
+
+def _plan(
+    path: str, where: list[tuple], snapshot: int | None
+) -> tuple[dict, list[str], list[str]]:
+    """(manifest, candidates, skipped) for a snapshot + predicate."""
+    snaps = _list_snapshots(path)
+    if not snaps:
+        raise ValueError(f"no table at {path}")
+    m = _read_manifest(path, snaps[-1] if snapshot is None else snapshot)
+    return (m, *_prune(m, where))
 
 
 def plan_scan(
@@ -1778,60 +1753,15 @@ def delete_rows(spark: SparkSession, path: str, where: list[tuple]) -> int:
     when stats are absent (legacy manifests). Pinned-snapshot source +
     commit id (_pin_latest), so concurrent appends conflict, never
     vanish. Returns the new snapshot id (or the current one when the
-    predicate provably matches nothing — a metadata-only no-op)."""
-    latest, prev, txns = _pin_latest(path)
-    stats_map = prev.get("file_stats", {})
-    touched = [
-        f for f in prev["files"]
-        if _may_match(stats_map.get(f),
-                      _translate_where(prev, where, stats_map.get(f)))
-    ]
-    touched_set = set(touched)
-    untouched = [f for f in prev["files"] if f not in touched_set]
+    predicate provably matches nothing — a metadata-only no-op). The
+    deleted rows land in the change-data sidecar as retractions, with
+    the predicate evaluated once (the shared DELETE body, _delete)."""
+    pin = _pin_latest(path)
+    touched, untouched = _prune(pin[1], where)
     if not touched:
-        return latest  # nothing can match: no rewrite, no new snapshot
-    partition_by = prev["partition_by"] or None
-    src = _scan(spark, path, prev, touched)
-    src = _ensure_predicate_columns(src, prev["schema"], where)
-    # DELETE semantics: NULL-predicate rows survive (see delete_where)
-    kept_rows = src.filter(f"NOT coalesce(({_where_sql(where)}), false)")
-    new_files = _write_data_files(kept_rows, path, partition_by)
-    file_stats = {f: stats_map[f] for f in untouched if f in stats_map}
-    file_stats.update(_collect_stats(path, new_files))
-    from pyspark.sql import functions as F
-
-    contract_cols = [f["name"] for f in json.loads(prev["schema"])["fields"]]
-    cd: dict = {}
-    if not (set(_CDF_COLS) & set(contract_cols)):
-        # change-data sidecar (r12): the deleted rows as retraction
-        # records, so the change feed represents this COW DELETE
-        # instead of raising (same design as update_where; MoR deletes
-        # were already represented via their deletion vectors)
-        dels = _fill_to_contract(src, prev["schema"]).filter(
-            f"coalesce(({_where_sql(where)}), false)"
-        ).select(*contract_cols).withColumn("_change_type", F.lit("delete"))
-        cd = {"change_data": _write_change_data(dels, path)}
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "delete",
-            sorted(untouched + new_files),
-            prev["schema"],
-            partition_by,
-            {
-                "predicate": _where_sql(where),
-                "txns": txns,
-                "rewritten_files": len(touched),
-                "skipped_files": len(untouched),
-                **cd,
-                **_evo_carry(prev),
-                **_dv_shed(path, prev, set(untouched)),
-            },
-            file_stats=file_stats,
-        ),
-    )
-    return latest + 1
+        return pin[0]  # nothing can match: no rewrite, no new snapshot
+    return _delete(spark, path, pin, touched, _where_sql(where), untouched,
+                   rewritten_files=len(touched), skipped_files=len(untouched))
 
 
 def update_where(
@@ -1876,7 +1806,8 @@ def update_where(
     sidecar: the feed refuses such tables anyway."""
     from pyspark.sql import functions as F
 
-    latest, prev, txns = _pin_latest(path)
+    pin = _pin_latest(path)
+    latest, prev, _txns = pin
     schema = _schema_of(prev)
     types_by_col = {f.name: f.dataType for f in schema.fields}
     missing = [c for c in set_exprs if c not in types_by_col]
@@ -1889,96 +1820,50 @@ def update_where(
             f"cannot update partition column(s) {part_hit}: rows would "
             "move between hive directories; delete + append instead"
         )
-    stats_map = prev.get("file_stats", {})
-    touched = [
-        f for f in prev["files"]
-        if _may_match(stats_map.get(f),
-                      _translate_where(prev, where, stats_map.get(f)))
-    ]
+    touched, untouched = _prune(prev, where)
     if not touched:
         return latest
-    touched_set = set(touched)
-    untouched = [f for f in prev["files"] if f not in touched_set]
     # conform the SUBSET scan to the full contract before applying SETs:
     # a touched file may predate a column an additive append introduced,
     # and mergeSchema only unions the files actually read — without the
     # fill, a SET on such a column would silently vanish from the
     # rewrite (r11 review: lost update, manifest claiming otherwise)
     src = _fill_to_contract(_scan(spark, path, prev, touched), prev["schema"])
-    src = _ensure_predicate_columns(src, prev["schema"], where)
     cond = F.expr(f"coalesce(({_where_sql(where)}), false)")
-    contract_cols = [f.name for f in schema.fields]
+    cols = [f.name for f in schema.fields]
 
-    def _post_select(df: DataFrame) -> DataFrame:
-        return df.select(*[
-            (F.expr(set_exprs[c]).cast(types_by_col[c]).alias(c))
-            if c in set_exprs else F.col(c)
-            for c in contract_cols
-        ])
+    def _set(c: str):
+        return F.expr(set_exprs[c]).cast(types_by_col[c])
 
-    cd: dict = {}
-    if not (set(_CDF_COLS) & set(contract_cols)):
-        # Change-data sidecar FIRST, then the rewrite REUSES its
-        # materialized postimages: the SET expressions are evaluated in
-        # exactly ONE job, so a non-deterministic expression (rand(),
-        # current_timestamp(), uuid()) cannot make the feed disagree
-        # with the table (r12 review — the predicate itself is
-        # deterministic by construction: where-tuples are col-op-
-        # literal). The key's PRESENCE signals feed representability,
-        # even when a stats false-positive rewrote files but matched
-        # zero rows.
+    def _changes() -> DataFrame:
+        # the predicate itself is deterministic by construction
+        # (where-tuples are col-op-literal); the SET expressions may not
+        # be, so the rewrite reuses the sidecar's postimages (the key's
+        # PRESENCE signals feed representability, even when a stats
+        # false-positive rewrote files but matched zero rows)
         matched = src.filter(cond)
-        pre = matched.select(*contract_cols).withColumn(
+        pre = matched.select(*cols).withColumn(
             "_change_type", F.lit("update_preimage"))
-        post = _post_select(matched).withColumn(
-            "_change_type", F.lit("update_postimage"))
-        cd_files = _write_change_data(pre.unionByName(post), path)
-        cd = {"change_data": cd_files}
-        unmatched = src.filter(~cond).select(*contract_cols)
-        if cd_files:
-            post_rows = (
-                spark.read.parquet(*[os.path.join(path, f) for f in cd_files])
-                .filter(F.col("_change_type") == "update_postimage")
-                .drop("_change_type")
-            )
-            updated = unmatched.unionByName(post_rows.select(*contract_cols))
-        else:
-            updated = unmatched
-    else:
-        # CDF-namespace-colliding tables (the feed refuses them anyway):
-        # the original one-pass rewrite
+        post = matched.select(*[
+            _set(c).alias(c) if c in set_exprs else F.col(c) for c in cols
+        ]).withColumn("_change_type", F.lit("update_postimage"))
+        return pre.unionByName(post)
+
+    cd, back = _changes_first(spark, path, cols, _changes)
+    if back is None:  # CDF-namespace-colliding table: one-pass rewrite
         updated = src.select(*[
-            (F.when(cond, F.expr(set_exprs[c]).cast(types_by_col[c]))
-             .otherwise(F.col(c)).alias(c)) if c in set_exprs else F.col(c)
-            for c in contract_cols
+            F.when(cond, _set(c)).otherwise(F.col(c)).alias(c)
+            if c in set_exprs else F.col(c)
+            for c in cols
         ])
-    new_files = _write_data_files(updated, path, pb or None)
-    new_stats = _collect_stats(path, new_files)
-    _enforce_constraints(path, prev, new_files, new_stats)
-    file_stats = {f: stats_map[f] for f in untouched if f in stats_map}
-    file_stats.update(new_stats)
-    _commit(
-        path,
-        latest + 1,
-        _manifest(
-            "update",
-            sorted(untouched + new_files),
-            prev["schema"],
-            pb or None,
-            {
-                "predicate": _where_sql(where),
-                "set": dict(set_exprs),
-                "txns": txns,
-                "rewritten_files": len(touched),
-                "skipped_files": len(untouched),
-                **cd,
-                **_evo_carry(prev),
-                **_dv_shed(path, prev, set(untouched)),
-            },
-            file_stats=file_stats,
-        ),
-    )
-    return latest + 1
+    else:
+        post_rows = back.filter(F.col("_change_type") == "update_postimage")
+        updated = src.filter(~cond).select(*cols).unionByName(
+            post_rows.select(*cols))
+    return _rewrite(path, pin, "update", updated, untouched,
+                    predicate=_where_sql(where), set=dict(set_exprs),
+                    rewritten_files=len(touched), skipped_files=len(untouched),
+                    **cd)
 
 
 def _write_sidecar(df: DataFrame, path: str, dirname: str) -> list[str]:
@@ -2055,12 +1940,7 @@ def delete_rows_mor(spark: SparkSession, path: str, where: list[tuple]) -> int:
             f"table columns {sorted(clash)} collide with the MoR lineage "
             "namespace; use the copy-on-write delete_rows instead"
         )
-    stats_map = prev.get("file_stats", {})
-    touched = [
-        f for f in prev["files"]
-        if _may_match(stats_map.get(f),
-                      _translate_where(prev, where, stats_map.get(f)))
-    ]
+    touched, _skipped = _prune(prev, where)
     if not touched:
         return latest
     src = _scan(spark, path, prev, touched, with_lineage=True)
@@ -2650,6 +2530,7 @@ def _apply_changes(
     latest, prev, txns = _pin_latest(dst_path)
     if txns.get(txn[0], -1) >= txn[1]:
         return 0  # replayed batch: already applied
+    pin = (latest, prev, {**txns, txn[0]: txn[1]})
     _INS_TYPES = ("insert", "update_postimage")
     _DEL_TYPES = ("delete", "update_preimage")
     out = changes.persist()
@@ -2676,7 +2557,7 @@ def _apply_changes(
             # append is naturally change-feed-representable — no sidecar)
             append(spark, dst_path, ins.select(*data_cols), txn=txn)
             return n_ins
-        target = read(spark, dst_path, snapshot=latest)
+        target = _scan(spark, dst_path, prev, prev["files"])
         dels = out.filter(F.col("_change_type").isin(*_DEL_TYPES))
         last_del = dels.groupBy(*keys).agg(
             F.max("_commit_snapshot").alias("__del_snap")
@@ -2701,9 +2582,8 @@ def _apply_changes(
         # sidecar is written FIRST and the rewrite reuses its
         # materialized rows (the single-evaluation contract). Skipped
         # when the destination's columns collide with the CDF namespace.
-        cd: dict = {}
-        new_rows = ins_keep
-        if not (set(_CDF_COLS) & set(target.columns)):
+
+        def _changes() -> DataFrame:
             # keys whose target row is retracted in this batch — the only
             # set the classifier needs (distincting target ∩ del_keys
             # bounds the aggregation by the retraction set, never the
@@ -2712,27 +2592,22 @@ def _apply_changes(
                 target.join(del_keys, keys, "left_semi")
                 .select(*keys).distinct().withColumn("__t", F.lit(True))
             )
-            ins_cls = (
-                ins_keep.join(upd_cand, keys, "left")
-                .select(
-                    *data_cols,
-                    F.when(F.coalesce(F.col("__t"), F.lit(False)),
-                           F.lit("update_postimage"))
-                    .otherwise(F.lit("insert")).alias("_change_type"),
-                )
+            return ins_keep.join(upd_cand, keys, "left").select(
+                *data_cols,
+                F.when(F.coalesce(F.col("__t"), F.lit(False)),
+                       F.lit("update_postimage"))
+                .otherwise(F.lit("insert")).alias("_change_type"),
             )
-            cd_files = _write_change_data(ins_cls, dst_path)
-            if cd_files:
-                msrc = spark.read.parquet(
-                    *[os.path.join(dst_path, f) for f in cd_files])
-                new_rows = msrc.drop("_change_type")
-                upd_keys = (
-                    msrc.filter(F.col("_change_type") == "update_postimage")
-                    .select(*keys).distinct().withColumn("__u", F.lit(True))
-                )
-            else:
-                new_rows = ins_keep.limit(0)
-                upd_keys = del_keys.limit(0).withColumn("__u", F.lit(True))
+
+        cd, msrc = _changes_first(spark, dst_path, target.columns, _changes)
+        if msrc is None:
+            new_rows = ins_keep
+        else:
+            new_rows = msrc.drop("_change_type")
+            upd_keys = (
+                msrc.filter(F.col("_change_type") == "update_postimage")
+                .select(*keys).distinct().withColumn("__u", F.lit(True))
+            )
             outgoing = (
                 target.join(del_keys, keys, "left_semi")
                 .join(upd_keys, keys, "left")
@@ -2743,8 +2618,7 @@ def _apply_changes(
                     .otherwise(F.lit("delete")).alias("_change_type"),
                 )
             )
-            cd_files = cd_files + _write_change_data(outgoing, dst_path)
-            cd = {"change_data": cd_files}
+            cd["change_data"] += _write_change_data(outgoing, dst_path)
         # additive schema evolution, SAME contract as the append branch
         # (review finding: projecting inserts onto target.columns made a
         # source-evolved column's survival depend on batch composition —
@@ -2752,41 +2626,9 @@ def _apply_changes(
         # values). The union null-fills both sides; the committed schema
         # evolves exactly like _append_loop's.
         merged = survivors.unionByName(new_rows, allowMissingColumns=True)
-        prev_schema = json.loads(prev["schema"])
-        prev_cols = {f["name"] for f in prev_schema["fields"]}
-        new_fields = [
-            f for f in json.loads(merged.schema.json())["fields"]
-            if f["name"] not in prev_cols
-        ]
-        reused = {f["name"] for f in new_fields} & _reserved_names(prev)
-        if reused:
-            raise ValueError(
-                f"column name(s) {sorted(reused)} were previously dropped or "
-                "renamed away; reuse would resurrect old physical values "
-                "(see schema-evolution docstring)"
-            )
-        _reject_reserved_columns([f["name"] for f in new_fields])
-        if new_fields:
-            schema_json = json.dumps(
-                {**prev_schema, "fields": prev_schema["fields"] + new_fields}
-            )
-        else:
-            schema_json = prev["schema"]
-        partition_by = prev["partition_by"] or None
-        files = _write_data_files(merged, dst_path, partition_by)
-        stats = _collect_stats(dst_path, files)
-        _enforce_constraints(dst_path, prev, files, stats)
-        _commit(
-            dst_path,
-            latest + 1,
-            _manifest(
-                "merge", files, schema_json, partition_by,
-                {"merge_on": keys, "txns": {**txns, txn[0]: txn[1]},
-                 "txn_app": txn[0], "txn_version": txn[1], **cd,
-                 **_evo_carry(prev)},
-                file_stats=stats,
-            ),
-        )
+        _rewrite(dst_path, pin, "merge", merged,
+                 schema_json=_evolve_schema(prev, merged.schema.json()),
+                 merge_on=keys, txn_app=txn[0], txn_version=txn[1], **cd)
         return n_ins + n_del
     finally:
         out.unpersist()
@@ -3040,9 +2882,9 @@ def files_table(spark: SparkSession, path: str, snapshot: int | None = None) -> 
 # common case is a metadata check per file. Only unproven files are
 # scanned (single column, pyarrow, violation count). The constraint set
 # rides the manifest like the evolution metadata, so every successor
-# snapshot enforces it at the one commit choke point (_append_loop:
-# append / sync_increment / both data-source writers) plus overwrite
-# and merge, the ops that introduce new rows.
+# snapshot enforces it at the two commit choke points: _append_loop
+# (append / sync_increment / both data-source writers) and _rewrite
+# (every copy-on-write verb).
 
 _CONSTRAINT_OPS = {"=", "<", "<=", ">", ">="}
 

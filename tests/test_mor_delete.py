@@ -97,6 +97,24 @@ def test_compact_materializes_and_vacuum_expires_vectors(spark, tbl):
     assert _rows(tl.read(spark, tbl)) == [(i, i * 10) for i in range(3, 10)]
 
 
+def test_overwrite_clears_vectors_without_opening_them(spark, tbl, monkeypatch):
+    """A full rewrite carries no file, so it sheds every deletion vector
+    without opening one: the streaming overwrite sink pays no DV I/O."""
+    import pyarrow.parquet as pq
+
+    tl.delete_rows_mor(spark, tbl, [("v", "<", 30)])
+    opened = []
+    real = pq.read_table
+    monkeypatch.setattr(
+        pq, "read_table", lambda p, *a, **k: opened.append(p) or real(p, *a, **k)
+    )
+    tl.overwrite(spark, tbl, spark.range(3).select(
+        F.col("id"), (F.col("id") * 10).alias("v")))
+    assert opened == []
+    assert "delete_vectors" not in _manifest(tbl)
+    assert _rows(tl.read(spark, tbl)) == [(0, 0), (1, 10), (2, 20)]
+
+
 def test_vacuum_keeps_live_vectors(spark, tbl):
     tl.delete_rows_mor(spark, tbl, [("v", "<", 30)])
     dv_rel = _manifest(tbl)["delete_vectors"]

@@ -719,27 +719,54 @@ def test_assign_ids_nrm_batch_parity(emb_df):
     byte-identical to assign_ids_batch and its nrm bit-identical to the
     norm() expression fold (the trained-IVF arm substitutes it for the
     _ensure_base norm column, so the downstream cosine hashes depend on
-    exact equality)."""
+    exact equality). Codebooks smaller than the request (nprobe > C,
+    and C = 1) return each of the C ids once."""
     df, _ = emb_df
     base = df.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
-    rows = base.orderBy("vid").limit(4).collect()
-    vids = [r["vid"] for r in rows]
-    mat = np.array([r["vec"] for r in rows], dtype=np.float32)
-    fused = {
-        r["vid"]: (tuple(r["an"]["assigns"]), r["an"]["nrm"])
-        for r in base.select(
-            "vid", sim.assign_ids_nrm_batch("vec", vids, mat, n_assign=2).alias("an")
-        ).collect()
-    }
-    ref = {
-        r["vid"]: (tuple(r["assigns"]), r["nrm"])
-        for r in base.select(
-            "vid",
-            sim.assign_ids_batch("vec", vids, mat, n_assign=2).alias("assigns"),
-            sim.norm(F.col("vec")).alias("nrm"),
-        ).collect()
-    }
-    assert fused == ref  # exact equality incl. the norm doubles
+    for n_cent, n_assign in [(4, 2), (3, 5), (1, 2)]:
+        rows = base.orderBy("vid").limit(n_cent).collect()
+        vids = [r["vid"] for r in rows]
+        mat = np.array([r["vec"] for r in rows], dtype=np.float32)
+        fused = {
+            r["vid"]: (tuple(r["an"]["assigns"]), r["an"]["nrm"])
+            for r in base.select(
+                "vid",
+                sim.assign_ids_nrm_batch("vec", vids, mat, n_assign=n_assign).alias("an"),
+            ).collect()
+        }
+        ref = {
+            r["vid"]: (tuple(r["assigns"]), r["nrm"])
+            for r in base.select(
+                "vid",
+                sim.assign_ids_batch("vec", vids, mat, n_assign=n_assign).alias("assigns"),
+                sim.norm(F.col("vec")).alias("nrm"),
+            ).collect()
+        }
+        assert fused == ref  # exact equality incl. the norm doubles
+        want = min(n_assign, n_cent)
+        assert all(
+            len(a) == want and len(set(a)) == want and set(a) <= set(vids)
+            for a, _nrm in fused.values()
+        ), (n_cent, n_assign)
+
+
+def test_ivf_topk_small_codebook_and_empty_int_ids(emb_df):
+    """The sampled-codebook arm with nprobe above the codebook size probes
+    every list (here: exact top-k), and an empty corpus keeps the id
+    column's own type, so both results share one schema."""
+    df, vecs = emb_df
+    ints = df.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").cast("int").alias("vec_id"), "embedding"
+    )
+    got = sim.ivf_topk(ints, k=2, n_centroids=3, nprobe=5).collect()
+    by_q = {}
+    for r in sorted(got, key=lambda r: (r["query_id"], -r["cosine"], r["neighbor_id"])):
+        by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
+    assert by_q == _numpy_topk(vecs[:6], range(6), 2)
+    full = sim.ivf_topk(ints, k=2, n_centroids=3, nprobe=5)
+    empty = sim.ivf_topk(ints.limit(0), k=2, n_centroids=3, nprobe=5)
+    assert empty.collect() == []
+    assert empty.schema == full.schema
 
 
 def test_kmeans_distributed_rounds_match_local(emb_df, monkeypatch):

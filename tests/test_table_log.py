@@ -416,13 +416,70 @@ def test_vacuum_expires_old_snapshots(spark, base, tmp_path):
         tl._read_manifest(path, 0)
 
 
-def test_rewrite_conflicts_with_concurrent_append(spark, base, tmp_path, monkeypatch, commit_protocol):
+#: the copy-on-write rewrite verbs; "apply_changes" is the CDC apply's
+#: merge branch, reached through sync_increment(keys=...)
+REWRITE_VERBS = [
+    "overwrite", "delete_where", "delete_rows", "update_where", "merge",
+    "compact", "compact_small_files", "optimize_zorder", "apply_changes",
+]
+
+
+def _ten_rows(spark, lo):
+    return spark.range(lo, lo + 10).select(
+        F.col("id"), (F.col("id") % 3).alias("bucket"), F.lit("v1").alias("tag")
+    ).coalesce(1)
+
+
+def _rewrite_case(spark, path, verb, evolved=False):
+    """Build a two-file table at ``path`` (ids 0..9 and 100..109) and
+    return a zero-arg call of ``verb`` on it. ``evolved`` additionally
+    renames bucket -> b, adds a constraint and MoR-deletes id 105 (a row
+    of the SECOND file, so the stats-pruned verbs carry its vector)."""
+    b = "b" if evolved else "bucket"
+    if verb == "apply_changes":
+        src = path + "_src"
+        tl.create(spark, src, _ten_rows(spark, 0))
+        tl.append(spark, src, _ten_rows(spark, 100))
+        tl.sync_increment(spark, src, path, keys=["id"], writer_id="w")
+        tl.delete_rows(spark, src, [("id", "<", 3)])  # retractions -> merge
+    else:
+        tl.create(spark, path, _ten_rows(spark, 0))
+        tl.append(spark, path, _ten_rows(spark, 100))
+    if evolved:
+        tl.rename_column(path, "bucket", "b")
+        tl.add_constraint(path, "id_nonneg", "id", ">=", 0)
+        tl.delete_rows_mor(spark, path, [("id", "=", 105)])
+    xf = (lambda df: df.withColumnRenamed("bucket", "b")) if evolved else None
+    return {
+        "overwrite": lambda: tl.overwrite(
+            spark, path, tl.read(spark, path).filter("id < 5")),
+        "delete_where": lambda: tl.delete_where(spark, path, "id < 5"),
+        "delete_rows": lambda: tl.delete_rows(spark, path, [("id", "<", 5)]),
+        "update_where": lambda: tl.update_where(
+            spark, path, [("id", "<", 5)], {"tag": "'u'"}),
+        "merge": lambda: tl.merge(spark, path, spark.range(3, 13).select(
+            F.col("id"), F.lit(1).cast("long").alias(b), F.lit("m").alias("tag")),
+            on=["id"]),
+        "compact": lambda: tl.compact(spark, path),
+        "compact_small_files": lambda: tl.compact_small_files(
+            spark, path, target_bytes=10**9),
+        "optimize_zorder": lambda: tl.optimize_zorder(
+            spark, path, ["id", b], target_files=2),
+        "apply_changes": lambda: tl.sync_increment(
+            spark, path + "_src", path, transform=xf, keys=["id"], writer_id="w"),
+    }[verb]
+
+
+@pytest.mark.parametrize("verb", REWRITE_VERBS)
+def test_rewrite_conflicts_with_concurrent_append(
+    spark, tmp_path, monkeypatch, commit_protocol, verb
+):
     """Lost-update race (r6 advice): an append that commits AFTER a
-    rewrite op (delete_where/merge/compact) pinned its base snapshot
-    must surface as CommitConflict for the rewriter — never a silent
-    clobber of the appended rows."""
+    rewrite verb pinned its base snapshot must surface as CommitConflict
+    for the rewriter — never a silent clobber of the appended rows."""
     path = str(tmp_path / "t")
-    tl.create(spark, path, base)
+    run = _rewrite_case(spark, path, verb)
+    before = tl.read(spark, path).count()
     real = tl._write_data_files
     raced = {"done": False}
 
@@ -430,34 +487,123 @@ def test_rewrite_conflicts_with_concurrent_append(spark, base, tmp_path, monkeyp
         files = real(df, p, partition_by)
         if not raced["done"]:
             raced["done"] = True  # append below re-enters this hook; fire once
-            tl.append(spark, path, base.withColumn("tag", F.lit("concurrent")))
+            tl.append(spark, path, _ten_rows(spark, 1000))
         return files
 
     monkeypatch.setattr(tl, "_write_data_files", racing_write)
     with pytest.raises(tl.CommitConflict):
-        tl.delete_where(spark, path, "id < 5")
+        run()
+    assert raced["done"]
     # the concurrent append's rows survived intact
-    assert tl.read(spark, path).count() == 20
+    assert tl.read(spark, path).count() == before + 10
     assert tl.history(path)[-1]["operation"] == "append"
 
 
-def test_compact_conflicts_with_concurrent_append(spark, base, tmp_path, monkeypatch, commit_protocol):
+def test_threaded_writers_race_posix_link(spark, tmp_path, monkeypatch):
+    """N real writer threads against PosixLinkCommit: appends, a merge
+    and a delete_rows run at once. Every append that returned is
+    readable exactly once, each rewrite either committed or raised
+    CommitConflict (nothing else), and no row is lost — the rewrites
+    touch only base ids, which the appends never reuse."""
+    import sys
+    import threading
+
+    monkeypatch.setattr(tl, "DEFAULT_COMMIT_PROTOCOL", tl.PosixLinkCommit())
     path = str(tmp_path / "t")
-    tl.create(spark, path, base)
-    real = tl._write_data_files
-    raced = {"done": False}
+    tl.create(spark, path, _ten_rows(spark, 0))
+    start = threading.Barrier(5)
+    appended: list[int] = []
+    outcome: dict[str, object] = {}
+    lock = threading.Lock()
 
-    def racing_write(df, p, partition_by):
-        files = real(df, p, partition_by)
-        if not raced["done"]:
-            raced["done"] = True
-            tl.append(spark, path, base)
-        return files
+    def appender(k):
+        start.wait()
+        for j in range(3):
+            lo = 1000 * (k + 1) + 10 * j
+            tl.append(spark, path, _ten_rows(spark, lo))
+            with lock:
+                appended.append(lo)
 
-    monkeypatch.setattr(tl, "_write_data_files", racing_write)
-    with pytest.raises(tl.CommitConflict):
-        tl.compact(spark, path)
-    assert tl.read(spark, path).count() == 20
+    def rewriter(name, fn):
+        start.wait()
+        try:
+            outcome[name] = fn()
+        except tl.CommitConflict:
+            outcome[name] = "conflict"
+        except Exception as exc:  # noqa: BLE001 — recorded, asserted below
+            outcome[name] = exc
+
+    threads = [threading.Thread(target=appender, args=(k,)) for k in range(3)]
+    threads.append(threading.Thread(target=rewriter, args=(
+        "merge", lambda: tl.merge(spark, path, spark.range(5, 8).select(
+            F.col("id"), F.lit(7).cast("long").alias("bucket"),
+            F.lit("m").alias("tag")), on=["id"]))))
+    threads.append(threading.Thread(target=rewriter, args=(
+        "delete_rows", lambda: tl.delete_rows(spark, path, [("id", "<", 3)]))))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # interleave the writer threads' Python steps
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(appended) == 9
+    ops = {h["snapshot"]: h["operation"] for h in tl.history(path)}
+    for name, op in (("merge", "merge"), ("delete_rows", "delete")):
+        got = outcome[name]
+        assert got == "conflict" or ops.get(got) == op, (name, got)
+    rows = tl.read(spark, path).collect()
+    ids = [r["id"] for r in rows]
+    assert len(ids) == len(set(ids))  # nothing duplicated
+    want = {lo + i for lo in appended for i in range(10)} | set(range(3, 10))
+    if outcome["delete_rows"] == "conflict":
+        want |= {0, 1, 2}
+    assert set(ids) == want
+    tags = {r["id"]: r["tag"] for r in rows}
+    merged = outcome["merge"] != "conflict"
+    assert all((tags[i] == "m") == merged for i in (5, 6, 7))
+
+
+#: manifest keys every rewrite commits, beside the verb's own
+_MANIFEST_BASE = {"operation", "ts_ms", "files", "schema", "partition_by",
+                  "file_stats", "txns"}
+_EVOLUTION_KEYS = {"physical_names", "retired_names", "conform", "constraints"}
+_VERB_KEYS = {
+    "overwrite": set(),
+    "delete_where": {"predicate", "change_data"},
+    "delete_rows": {"predicate", "change_data", "rewritten_files",
+                    "skipped_files"},
+    "update_where": {"predicate", "set", "change_data", "rewritten_files",
+                     "skipped_files"},
+    "merge": {"merge_on", "change_data"},
+    "compact": {"compacted_from"},
+    "compact_small_files": {"compacted_from", "skipped_files", "target_bytes"},
+    "optimize_zorder": {"zorder_by"},
+    "apply_changes": {"merge_on", "change_data", "txn_app", "txn_version"},
+}
+
+
+@pytest.mark.parametrize("verb", REWRITE_VERBS)
+def test_rewrite_manifest_keys(spark, tmp_path, verb):
+    """The committed manifest's key set per rewrite verb — what
+    history(), the change walkers and the benchmark's table stats read.
+    On an evolved table (rename + constraint + a live deletion vector)
+    every verb carries the evolution metadata (overwrite resets the
+    physical-name mapping), and only the stats-pruned verbs that carry
+    the vector's file keep it."""
+    for evolved in (False, True):
+        path = str(tmp_path / f"t{int(evolved)}")
+        _rewrite_case(spark, path, verb, evolved)()
+        m = tl._read_manifest(path, tl._list_snapshots(path)[-1])
+        want = _MANIFEST_BASE | _VERB_KEYS[verb]
+        if evolved:
+            want |= _EVOLUTION_KEYS - ({"physical_names"} if verb == "overwrite" else set())
+            if verb in ("delete_rows", "update_where"):
+                want |= {"delete_vectors"}
+        assert set(m) == want, (evolved, sorted(set(m) ^ want))
 
 
 def test_txn_idempotency_survives_compact_and_is_o1(spark, base, tmp_path, commit_protocol):
