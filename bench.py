@@ -97,20 +97,20 @@ def _stdout_lines(base: dict, per_query: dict[str, float]) -> list[str]:
     one = json.dumps({**base, "queries": compact}, separators=(",", ":"))
     if len(one) <= _STDOUT_BUDGET:
         return [one]
+
+    def sibling(part: int, of: int, queries: dict[str, float]) -> str:
+        return json.dumps({"metric": "inventory_suite_queries", "part": part, "of": of,
+                           "sf": base.get("sf"), "queries": queries}, separators=(",", ":"))
+
+    # part/of never exceed the entry count, so a line sized with that
+    # count in both fields stays within budget once numbered
+    n = len(compact)
     chunks: list[dict[str, float]] = [{}]
     for name, t in compact.items():
-        trial = {**chunks[-1], name: t}
-        if chunks[-1] and len(json.dumps(trial, separators=(",", ":"))) > \
-                _SIBLING_BUDGET - 80:  # 80 B of envelope fields
+        if chunks[-1] and len(sibling(n, n, {**chunks[-1], name: t})) > _SIBLING_BUDGET:
             chunks.append({})
         chunks[-1][name] = t
-    lines = [
-        json.dumps(
-            {"metric": "inventory_suite_queries", "part": i + 1,
-             "of": len(chunks), "sf": base.get("sf"), "queries": c},
-            separators=(",", ":"))
-        for i, c in enumerate(chunks)
-    ]
+    lines = [sibling(i + 1, len(chunks), c) for i, c in enumerate(chunks)]
     lines.append(json.dumps(
         {**base, "n_queries": len(per_query),
          "queries_file": "BENCH_QUERIES.json"},

@@ -611,7 +611,6 @@ def ivf_sq8_topk(
     n_centroids: int = 16,
     nprobe: int = 2,
     probe_filter: Column | None = None,
-    index_cache: dict | None = None,
     index_cache_key=None,
 ) -> DataFrame:
     """IVF + SQ8 composition (V8) — the pruned counterpart of
@@ -638,30 +637,27 @@ def ivf_sq8_topk(
     """
     from open_data_lakehouse_demo_spark.operators import similarity as sim
 
-    # Optional session-scoped index reuse (same contract as ivf_topk's
-    # index_cache / build_sq8_ivf_index's persisted form): the encoded +
-    # coarse-assigned lists and the collected codebooks are immutable
-    # for a given corpus — build once, search repeatedly. The assigned
-    # table is materialized when cached so warm searches read blocks
-    # instead of re-running the encode/assign pass.
-    # the cached structures bake in n_centroids — compose it into the
-    # key so a same-corpus call with a different list count can never
-    # silently reuse a mismatched index (r9 review finding)
-    cache_key = (index_cache_key, n_centroids)
-    cached = index_cache.get(cache_key) if index_cache is not None else None
-    if cached is not None:
-        base, assigned, cvids, cmat, mns, scales = cached
-    else:
-        base, assigned, cvids, cmat, mns, scales = _sq8_ivf_lists(
-            df, id_col, vec_col, n_centroids
-        )
-        if index_cache is not None:
-            from open_data_lakehouse_demo_spark.sources.io import materialize
+    from open_data_lakehouse_demo_spark.sources.io import materialize, session_cached
 
-            assigned = materialize(assigned)
-            if len(index_cache) >= 8:
-                index_cache.clear()
-            index_cache[cache_key] = (base, assigned, cvids, cmat, mns, scales)
+    def build(cached: bool) -> tuple:
+        base, assigned, *codebooks = _sq8_ivf_lists(df, id_col, vec_col, n_centroids)
+        return (base, materialize(assigned) if cached else assigned, *codebooks)
+
+    # Optional session-scoped index reuse (the ``ivf_index`` cache, same
+    # contract as ivf_topk's; build_sq8_ivf_index is the persisted form):
+    # the encoded + coarse-assigned lists and the collected codebooks are
+    # immutable for a given corpus — build once, search repeatedly. The
+    # cached assigned table is materialized so warm searches read blocks
+    # instead of re-running the encode/assign pass. The key composes in
+    # n_centroids, which the structures bake in, so a same-corpus call
+    # with a different list count can never silently reuse a mismatched
+    # index (r9 review finding).
+    base, assigned, cvids, cmat, mns, scales = (
+        build(False) if index_cache_key is None else session_cached(
+            df.sparkSession, "ivf_index", (index_cache_key, n_centroids),
+            lambda: build(True),
+        )
+    )
     lists = _sq_recon(assigned, mns, scales, extra_cols=("centroid_id",))
     probes = base.filter(probe_filter) if probe_filter is not None else base
     probe_side = probes.select(
@@ -911,7 +907,6 @@ def ivf_pq_topk(
     n_centroids: int = 16,
     nprobe: int = 2,
     probe_filter: Column | None = None,
-    index_cache: dict | None = None,
     index_cache_key=None,
 ) -> DataFrame:
     """IVF + PQ composition — the billion-vector full-corpus search path.
@@ -950,17 +945,14 @@ def ivf_pq_topk(
     # assign_centroids join path), encode (pq_codes_batch ≡ pq_encode),
     # probe LUTs (pq_lut_batch ≡ _probe_lut). The only shuffle left is
     # the centroid_id candidate equi-join itself.
-    # Session-scoped index reuse (same contract as ivf_sq8_topk): the
-    # seed codebooks and the encoded inverted lists are immutable per
-    # corpus — build once, search repeatedly; cached lists materialize
-    # so warm searches read blocks instead of re-encoding.
-    # n_centroids is baked into the cached lists/codebooks — compose it
-    # into the key (same contract as ivf_topk/ivf_sq8_topk; r9 review)
-    cache_key = (index_cache_key, n_centroids)
-    cached = index_cache.get(cache_key) if index_cache is not None else None
-    if cached is not None:
-        base, lists, cvids, cmat_coarse, pq_mat = cached
-    else:
+    # Session-scoped index reuse (the ``ivf_index`` cache, same contract
+    # as ivf_sq8_topk, n_centroids composed into the key): the seed
+    # codebooks and the encoded inverted lists are immutable per corpus
+    # — build once, search repeatedly; cached lists materialize so warm
+    # searches read blocks instead of re-encoding.
+    from open_data_lakehouse_demo_spark.sources.io import materialize, session_cached
+
+    def build(cached: bool) -> tuple:
         cvids, cmat = pq_seed_matrix(base, n=max(NCODES, n_centroids))
         cvids, cmat_coarse = cvids[:n_centroids], cmat[:n_centroids]
         pq_mat = cmat[:NCODES]
@@ -973,13 +965,14 @@ def ivf_pq_topk(
             "vid",
             pq_codes_batch("vec", pq_mat).alias("codes"),
         )
-        if index_cache is not None:
-            from open_data_lakehouse_demo_spark.sources.io import materialize
+        return (base, materialize(lists) if cached else lists, cvids, cmat_coarse, pq_mat)
 
-            lists = materialize(lists)
-            if len(index_cache) >= 8:
-                index_cache.clear()
-            index_cache[cache_key] = (base, lists, cvids, cmat_coarse, pq_mat)
+    base, lists, cvids, cmat_coarse, pq_mat = (
+        build(False) if index_cache_key is None else session_cached(
+            df.sparkSession, "ivf_index", (index_cache_key, n_centroids),
+            lambda: build(True),
+        )
+    )
 
     probes = base.filter(probe_filter) if probe_filter is not None else base
     # explode duplicates the already-computed LUT across the probe's

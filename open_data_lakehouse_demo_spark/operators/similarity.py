@@ -869,7 +869,6 @@ def ivf_topk(
     probe_filter: Column | None = None,
     codebook: DataFrame | None = None,
     train_iterations: int = 0,
-    index_cache: dict | None = None,
     index_cache_key=None,
 ) -> DataFrame:
     """IVF-Flat approximate top-k: coarse-quantize, search nprobe lists.
@@ -909,26 +908,12 @@ def ivf_topk(
         # needed norms, and a >cap distributed round is a column-pruned
         # corpus scan per Lloyd round — the textbook k-means shape — with
         # no corpus checkpoint write ahead of it.
-        from open_data_lakehouse_demo_spark.sources.io import materialize
+        from open_data_lakehouse_demo_spark.sources.io import materialize, session_cached
 
-        # The trained index (codebook + per-vector assignments) is
-        # immutable for a given corpus AND build/search configuration:
-        # callers pass an ``index_cache`` keyed by their corpus identity
-        # and the operator composes in every parameter the cached table
-        # bakes in (n_centroids, train_iterations, nprobe — the assigns
-        # arrays are nprobe-wide), so a same-corpus call with a
-        # different recall knob can never silently reuse a mismatched
-        # index (r9 review finding). Production shape: a vector index is
-        # built once and queried many times; same session-scoped/
-        # clear-hook contract as the ANN ground-truth arm
-        # (inventory_vectors) and the t() scan cache. Without a cache
-        # the behavior is unchanged.
-        cache_key = (index_cache_key, n_centroids, train_iterations, nprobe)
-        assigned = index_cache.get(cache_key) if index_cache is not None else None
-        if assigned is None:
+        def build() -> DataFrame:
             raw = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
             vids, mat = _kmeans_train(raw, n_centroids, train_iterations)
-            assigned = materialize(
+            return materialize(
                 raw.select(
                     assign_ids_nrm_batch(
                         "vec", vids, mat, n_assign=nprobe
@@ -942,10 +927,20 @@ def ivf_topk(
                     F.col("an.nrm").alias("nrm"),
                 )
             )
-            if index_cache is not None:
-                if len(index_cache) >= 8:  # a handful of (app, corpus) pairs
-                    index_cache.clear()
-                index_cache[cache_key] = assigned
+
+        # The trained index (codebook + per-vector assignments) is
+        # immutable for a given corpus AND build/search configuration:
+        # callers name their corpus with ``index_cache_key`` and the
+        # operator composes in every parameter the cached table bakes in
+        # (n_centroids, train_iterations, nprobe — the assigns arrays are
+        # nprobe-wide), so a same-corpus call with a different recall
+        # knob can never silently reuse a mismatched index (r9 review
+        # finding). Production shape: a vector index is built once and
+        # queried many times. Without a key nothing is cached.
+        assigned = build() if index_cache_key is None else session_cached(
+            df.sparkSession, "ivf_index",
+            (index_cache_key, n_centroids, train_iterations, nprobe), build,
+        )
         corpus = assigned.select(
             F.col("assigns")[0].alias("centroid_id"), "vid", "vec", "nrm"
         )

@@ -10,46 +10,41 @@ eval-hash literal sets). One list, two consumers:
   AND what one session pays before it applies, without cross-referencing
   BENCH_VS_DUCK.md.
 
-Each entry: (query_name, clear_cache_fn, cached_structure_description).
-``clear_cache_fn`` drops exactly the session cache(s) the query's warm
+Each row: (query_name, session cache names, cached_structure_description).
+The names are the ``sources.io.SESSION_CACHES`` entries the query's warm
 run reuses; the scan cache stays warm so a cold run prices the
 index/arm/eval build itself, not parquet footer resolution.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable
 
+from open_data_lakehouse_demo_spark.sources.io import clear_session_cache
 
-def cold_specs() -> list[tuple[str, Callable[[], object], str]]:
-    from open_data_lakehouse_demo_spark.plans import inventory_corpus as ic
-    from open_data_lakehouse_demo_spark.plans import inventory_vectors as iv
+_SCRUB = ("substr_index", "scrub_result")
 
-    def _clear_scrub():
-        ic.clear_substr_index_cache()
-        ic.clear_scrub_result_cache()
+COLD_ROWS: list[tuple[str, tuple[str, ...], str]] = [
+    ("cosine_topk_ivf_kmeans", ("ivf_index",), "trained-IVF index"),
+    ("cosine_topk_ivf_kmeans1", ("ivf_index",), "trained-IVF index"),
+    ("ivf_pq_topk", ("ivf_index",), "IVF+PQ codebooks+codes"),
+    ("ivf_sq8_topk", ("ivf_index",), "IVF+SQ8 encoded lists"),
+    ("ann_recall_eval", ("ann_ranked",), "ground-truth arm"),
+    ("ann_recall_sweep", ("ann_ranked",), "ground-truth arm"),
+    ("shared_substring_spans", ("substr_index",), "positioned-hash index"),
+    # the scrub family's cold runs clear BOTH caches — the
+    # positioned-hash index AND the shared merged-interval relation
+    ("scrub_duplicated_spans", _SCRUB, "positioned-hash index + merged intervals"),
+    ("scrub_spans_meta", _SCRUB, "positioned-hash index + merged intervals"),
+    ("scrub_text_digest", _SCRUB, "positioned-hash index + merged intervals"),
+    ("incremental_scrub_batch", ("substr_index",), "positioned-hash index"),
+    ("benchmark_decontaminate", ("decon_eval",), "eval hash literals"),
+    ("bloom_decontaminate", ("bloom_eval",), "bloom+audit eval literals"),
+]
 
-    return [
-        ("cosine_topk_ivf_kmeans", iv.clear_ivf_index_cache, "trained-IVF index"),
-        ("cosine_topk_ivf_kmeans1", iv.clear_ivf_index_cache, "trained-IVF index"),
-        ("ivf_pq_topk", iv.clear_ivf_index_cache, "IVF+PQ codebooks+codes"),
-        ("ivf_sq8_topk", iv.clear_ivf_index_cache, "IVF+SQ8 encoded lists"),
-        ("ann_recall_eval", iv.clear_ann_ranked_cache, "ground-truth arm"),
-        ("ann_recall_sweep", iv.clear_ann_ranked_cache, "ground-truth arm"),
-        ("shared_substring_spans", ic.clear_substr_index_cache,
-         "positioned-hash index"),
-        # the scrub family's cold runs must clear BOTH caches — the
-        # positioned-hash index AND the shared merged-interval relation
-        ("scrub_duplicated_spans", _clear_scrub,
-         "positioned-hash index + merged intervals"),
-        ("scrub_spans_meta", _clear_scrub,
-         "positioned-hash index + merged intervals"),
-        ("scrub_text_digest", _clear_scrub,
-         "positioned-hash index + merged intervals"),
-        ("incremental_scrub_batch", ic.clear_substr_index_cache,
-         "positioned-hash index"),
-        ("benchmark_decontaminate", ic.clear_decon_eval_cache,
-         "eval hash literals"),
-        ("bloom_decontaminate", ic.clear_bloom_eval_cache,
-         "bloom+audit eval literals"),
-    ]
+
+def cold_specs() -> list[tuple[str, Callable[[], None], str]]:
+    """COLD_ROWS with one clear action per row."""
+    return [(q, partial(clear_session_cache, *names), what)
+            for q, names, what in COLD_ROWS]

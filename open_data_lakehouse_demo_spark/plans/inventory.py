@@ -32,39 +32,17 @@ from open_data_lakehouse_demo_spark.functions.compat import (
     safe_divide,
     timestamp_bucket,
 )
-from open_data_lakehouse_demo_spark.sources.io import read_parquet
-
-
-# (applicationId, sf_dir, name) → resolved scan DataFrame. Building a
-# parquet scan costs ~100ms of DRIVER work per call (file listing +
-# footer schema resolution inside spark.read), and every inventory query
-# pays it for every table it touches — ~0.1-0.3s per query, tens of
-# seconds across a full suite run. Resolving each relation once per
-# session is exactly what a catalog/metastore does; this cache is that
-# catalog for the path-addressed testdata tables. Same contract as
-# inventory_vectors._ANN_RANKED_CACHE: keyed by applicationId (never
-# id(spark) — ids can be reused after GC), valid ONLY under the driver's
-# immutable-fixture assumption (the parquet under sf_dir is never
-# rewritten mid-session; the cached relation pins the file listing), and
-# clearable via clear_scan_cache() for tests or fixture rewrites.
-_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_SCAN_CACHE_CAP = 256  # ~dozens of (session, sf_dir) combos; same reset-on-full policy as the ANN arm cache
-
-
-def clear_scan_cache() -> None:
-    """Drop every cached table scan (call after rewriting fixture files)."""
-    _SCAN_CACHE.clear()
+from open_data_lakehouse_demo_spark.sources.io import read_parquet, session_cached
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table (nanos-timestamp-safe parquet scan),
-    resolved once per (session, sf_dir) — see _SCAN_CACHE."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _SCAN_CACHE:
-        if len(_SCAN_CACHE) >= _SCAN_CACHE_CAP:
-            _SCAN_CACHE.clear()
-        _SCAN_CACHE[key] = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    return _SCAN_CACHE[key]
+    resolved once per session: the ``scan`` session cache is the catalog
+    for the path-addressed testdata tables."""
+    return session_cached(
+        spark, "scan", (sf_dir, name),
+        lambda: read_parquet(spark, f"{sf_dir}/{name}.parquet"),
+    )
 
 
 def dec(c: F.Column | str) -> F.Column:

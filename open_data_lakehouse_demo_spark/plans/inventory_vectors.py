@@ -7,11 +7,14 @@ contract in operators/similarity.py), so comparisons are bit-exact.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_data_lakehouse_demo_spark.operators import similarity as sim
 from open_data_lakehouse_demo_spark.plans.inventory import query, t
+from open_data_lakehouse_demo_spark.sources.io import clear_session_cache, materialize, session_cached
 
 _PROBE_MOD = 50  # probe set = vec_id % 50 == 0 (deterministic query batch)
 _K = 5
@@ -258,8 +261,7 @@ def cosine_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         # built once and shared between training and search; the trained
         # index is session-cached (built once, searched repeatedly)
         train_iterations=3,
-        index_cache=_IVF_INDEX_CACHE,
-        index_cache_key=(spark.sparkContext.applicationId, sf_dir, 3, 16, 2),
+        index_cache_key=(sf_dir, 3, 16, 2),
     )
 
 
@@ -368,8 +370,7 @@ def cosine_topk_ivf_kmeans1(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=2,
         probe_filter=F.col("vid") % _PROBE_MOD == 0,
         train_iterations=1,
-        index_cache=_IVF_INDEX_CACHE,
-        index_cache_key=(spark.sparkContext.applicationId, sf_dir, 1, 16, 2),
+        index_cache_key=(sf_dir, 1, 16, 2),
     )
 
 
@@ -380,39 +381,7 @@ _SWEEP_NPROBES = (1, 2, 4)
 _EVAL_NPROBE = 2
 assert _EVAL_NPROBE in _SWEEP_NPROBES
 
-# (applicationId, sf_dir) → materialized annotated pair table.
-# ann_recall_eval and ann_recall_sweep consume the SAME ground-truth arm
-# (the brute-force pair fan-out + one window sort is ~90% of either
-# query's cost); caching the materialized result lets a session that runs
-# both — the bench suite, the driver's correctness sweep, an actual
-# tuning loop — pay for it once.
-#
-# IMMUTABLE-INPUT ASSUMPTION: entries are valid only while the parquet
-# under sf_dir is unchanged — true for the driver's fixed testdata
-# fixtures. A pipeline that rewrites its eval tables in-session must call
-# clear_ann_ranked_cache() after the rewrite. Keyed by applicationId
-# (stable and unique per SparkContext), never id(spark) — CPython reuses
-# ids after GC, which could silently serve one session's blocks to
-# another. _CAP bounds the dict for long-lived multi-sf sessions.
-_ANN_RANKED_CACHE: dict[tuple[str, str], DataFrame] = {}
-_ANN_RANKED_CACHE_CAP = 8
-
-# (applicationId, sf_dir, iterations) → materialized trained-IVF index
-# (per-vector top-nprobe assignments). Same immutable-fixture contract
-# and clear hook as _ANN_RANKED_CACHE: a vector index is built once and
-# queried many times — warm bench runs measure the SEARCH, the honest
-# steady-state of a serving index (cold cost = one training pass,
-# documented in BENCH_VS_DUCK notes).
-_IVF_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
-def clear_ivf_index_cache() -> None:
-    _IVF_INDEX_CACHE.clear()
-
-
-def clear_ann_ranked_cache() -> None:
-    """Invalidation hook for the shared recall arm (see cache note above)."""
-    _ANN_RANKED_CACHE.clear()
+clear_ivf_index_cache = partial(clear_session_cache, "ivf_index")
 
 
 def _ann_ranked_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,8 +409,6 @@ def _ann_ranked_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe batch. The materialized table keeps only the 3+3 small rank
     columns — vectors and cosines are dropped before storage."""
     from pyspark.sql import Window
-
-    from open_data_lakehouse_demo_spark.sources.io import materialize
 
     emb = t(spark, sf_dir, "embeddings")
     # ONE materialized (vid, vec, nrm) norm table feeds everything; the
@@ -539,21 +506,17 @@ def _ann_ranked_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_ranked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized + cached view of _ann_ranked_pairs_plan (cache
-    contract at _ANN_RANKED_CACHE). The one-time build is the dominant
-    cost (~4.6s at sf0.1); each consumer read is then ~0.3s — recorded in
-    BENCH_VS_DUCK.md so steady-state medians aren't read as cold cost."""
-    from open_data_lakehouse_demo_spark.sources.io import materialize
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ANN_RANKED_CACHE.get(key)
-    if cached is not None:
-        return cached
-    ranked = materialize(_ann_ranked_pairs_plan(spark, sf_dir))
-    if len(_ANN_RANKED_CACHE) >= _ANN_RANKED_CACHE_CAP:
-        _ANN_RANKED_CACHE.clear()
-    _ANN_RANKED_CACHE[key] = ranked
-    return ranked
+    """Materialized view of _ann_ranked_pairs_plan in the ``ann_ranked``
+    session cache: ann_recall_eval and ann_recall_sweep consume the SAME
+    ground-truth arm (the brute-force pair fan-out + one window sort is
+    ~90% of either query's cost), so a session running both pays for it
+    once. The one-time build is the dominant cost (~4.6s at sf0.1); each
+    consumer read is then ~0.3s — recorded in BENCH_VS_DUCK.md so
+    steady-state medians aren't read as cold cost."""
+    return session_cached(
+        spark, "ann_ranked", sf_dir,
+        lambda: materialize(_ann_ranked_pairs_plan(spark, sf_dir)),
+    )
 
 
 @query(
@@ -969,8 +932,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq.ivf_pq_topk(
         emb, k=_K, n_centroids=16, nprobe=_IVFPQ_NPROBE,
         probe_filter=F.col("vid") % _PROBE_MOD == 0,
-        index_cache=_IVF_INDEX_CACHE,
-        index_cache_key=("pq", spark.sparkContext.applicationId, sf_dir, 16),
+        index_cache_key=("pq", sf_dir, 16),
     )
 
 
@@ -1063,6 +1025,5 @@ def ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq.ivf_sq8_topk(
         emb, k=_K, n_centroids=16, nprobe=_IVF_SQ8_NPROBE,
         probe_filter=F.col("vid") % _PROBE_MOD == 0,
-        index_cache=_IVF_INDEX_CACHE,
-        index_cache_key=("sq8", spark.sparkContext.applicationId, sf_dir, 16),
+        index_cache_key=("sq8", sf_dir, 16),
     )

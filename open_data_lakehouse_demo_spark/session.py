@@ -53,7 +53,7 @@ def get_spark(
         # when a stage shuffles < cores × this size, i.e. exactly the
         # byte-light stages; real data-heavy shuffles at cluster scale
         # sit far above either value, so lowering it is scale-neutral.
-        # Interleaved A/B at sf0.1 (tools/ab_config.py, r13): 256k gives
+        # Interleaved A/B at sf0.1 (tools/ab.py --conf-b, r13): 256k gives
         # containment_dups 0.48×, minute_fanout 0.54×, ngram 0.76× with
         # the vector top-k family flat-to-better; 64k overshoots (window
         # stages fragment). Env-overridable for cluster tuning.

@@ -21,6 +21,10 @@ identical either way.
 from __future__ import annotations
 
 import os
+import threading
+import time
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,9 +110,96 @@ def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = N
     return df
 
 
-# spread()'s memoized probe DECISIONS (never data): keyed by
-# (applicationId, analyzed-plan semanticHash, target); see spread().
-_SPREAD_DECISIONS: dict[tuple[str, int, int], bool] = {}
+# Every session cache, declared once: name -> cap (entries kept before a
+# miss resets that name). What each holds and why it pays off:
+SESSION_CACHES = {
+    "scan": 256,  # t(): resolved parquet scans, ~100 ms of file listing + footer reads each
+    "spread": 4096,  # spread(): repartition decisions per analyzed plan, ~100 ms of planning each
+    "ann_ranked": 8,  # the ANN recall ground-truth arm shared by ann_recall_eval/_sweep
+    "ivf_index": 8,  # trained/encoded IVF indexes: built once, searched by every call
+    "decon_eval": 8,  # exact decontamination's eval hash literals (None = oversized)
+    "bloom_eval": 8,  # bloom decontamination's bitmap + audit hash literals
+    "substr_index": 8,  # ExactSubstr positioned-hash index shared by report and scrub
+    "scrub_result": 8,  # the merged-interval relation the three scrub queries apply
+}
+_MISS = object()
+_LOCK = threading.Lock()
+_store: dict[str, dict] = {name: {} for name in SESSION_CACHES}
+_stats = {name: {"hits": 0, "misses": 0, "build_s": 0.0} for name in SESSION_CACHES}
+_store_app: str | None = None
+
+
+def _application_id(spark: SparkSession) -> str:
+    """The SparkContext's applicationId, read over Py4J once per context."""
+    sc = spark.sparkContext
+    app_id = getattr(sc, "_session_cache_app_id", None)
+    if app_id is None:
+        app_id = sc._session_cache_app_id = sc.applicationId
+    return app_id
+
+
+def session_cached(spark: SparkSession, name: str, key: Hashable, build: Callable[[], Any]) -> Any:
+    """Return the value cached under ``(name, key)``, running ``build()``
+    once on a miss. The one way to keep a structure across queries.
+
+    Contract:
+    - Immutable fixtures: a value derived from files (a scan, an index,
+      literal sets) stays valid only while those files are not rewritten
+      in the session. Whoever rewrites them calls the clear hook,
+      ``clear_session_cache()``; ``register_views`` does.
+    - Application scope: the store belongs to the current SparkContext's
+      application and drops every entry when it changes, so keys carry
+      no session identity and never serve one application's blocks to
+      another.
+    - Reset on full: a miss when ``name`` holds its declared cap
+      (``SESSION_CACHES``) clears that name only, then inserts.
+    - ``None`` is a value like any other; ``build()`` runs outside the
+      lock, so it may run Spark jobs and call ``session_cached`` itself.
+    - Counters: hits, misses and build seconds per name, read with
+      ``session_cache_stats()``.
+    """
+    global _store, _store_app
+    if name not in SESSION_CACHES:
+        raise KeyError(f"undeclared session cache {name!r}; declare it in SESSION_CACHES")
+    app_id, stats = _application_id(spark), _stats[name]
+    with _LOCK:
+        if app_id != _store_app:  # a new application: drop every entry
+            _store_app, _store = app_id, {n: {} for n in SESSION_CACHES}
+        entries = _store[name]
+        value = entries.get(key, _MISS)
+        if value is not _MISS:
+            stats["hits"] += 1
+            return value
+        stats["misses"] += 1
+    t0 = time.perf_counter()
+    value = build()
+    with _LOCK:
+        stats["build_s"] += time.perf_counter() - t0
+        if len(entries) >= SESSION_CACHES[name]:
+            entries.clear()
+        entries[key] = value
+    return value
+
+
+def clear_session_cache(*names: str) -> None:
+    """Drop the entries of ``names`` (every cache when none are given)."""
+    with _LOCK:
+        for name in names or SESSION_CACHES:
+            _store[name].clear()
+
+
+def session_cache_stats() -> dict[str, dict[str, float]]:
+    """Per-name hits, misses and build seconds since the process started."""
+    with _LOCK:
+        return {name: dict(s) for name, s in _stats.items()}
+
+
+def _needs_spread(df: DataFrame, target: int) -> bool:
+    try:
+        n = df._jdf.queryExecution().toRdd().getNumPartitions()
+    except Exception:
+        n = df.rdd.getNumPartitions()
+    return n < max(2, target // 2)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -130,40 +221,23 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     planning, which is pure driver work (~100 ms per call via ``df.rdd``).
     Two fixes: (a) probe the internal ``queryExecution().toRdd()`` —
     same partition count, no Python-serializer RDD wrapper; (b) memoize
-    the DECISION per (application, analyzed-plan semanticHash, target) —
-    partition counts derive from the file splits and session conf, both
-    fixed within an application, so re-planning the identical lineage
-    every call re-derives the identical answer. This caches a
-    plan-construction decision only, never data or results.
+    the DECISION per (analyzed-plan semanticHash, target) in the
+    ``spread`` session cache — partition counts derive from the file
+    splits and session conf, both fixed within an application, so
+    re-planning the identical lineage every call re-derives the
+    identical answer. This caches a plan-construction decision only,
+    never data or results.
     """
     if df.isStreaming:
         return df
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
     try:
-        sc = spark.sparkContext
-        app_id = getattr(sc, "_spread_app_id", None)
-        if app_id is None:
-            app_id = sc.applicationId
-            sc._spread_app_id = app_id
-        key = (
-            app_id,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            target,
-        )
-        need = _SPREAD_DECISIONS.get(key)
+        key = (df._jdf.queryExecution().analyzed().semanticHash(), target)
     except Exception:  # non-classic sessions (e.g. Connect): no memo
-        key, need = None, None
-    if need is None:
-        try:
-            n = df._jdf.queryExecution().toRdd().getNumPartitions()
-        except Exception:
-            n = df.rdd.getNumPartitions()
-        need = n < max(2, target // 2)
-        if key is not None:
-            if len(_SPREAD_DECISIONS) > 4096:
-                _SPREAD_DECISIONS.clear()
-            _SPREAD_DECISIONS[key] = need
+        need = _needs_spread(df, target)
+    else:
+        need = session_cached(spark, "spread", key, lambda: _needs_spread(df, target))
     return df.repartition(target) if need else df
 
 
@@ -261,30 +335,10 @@ def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = T
     pushdown and column pruning reach the parquet reader directly.
 
     Re-registering is the "fixtures changed" entry point, so it flushes
-    the session-scoped caches that pin state derived from the parquet
-    files (the t() scan cache and the ANN ground-truth arm) — both are
-    valid only under the immutable-fixture assumption their docstrings
-    state, and this is the documented invalidation hook.
+    every session cache: their entries derive from the parquet files and
+    hold only under the immutable-fixture contract of session_cached().
     """
-    from open_data_lakehouse_demo_spark.plans.inventory import clear_scan_cache
-    from open_data_lakehouse_demo_spark.plans.inventory_corpus import (
-        clear_bloom_eval_cache,
-        clear_decon_eval_cache,
-        clear_scrub_result_cache,
-        clear_substr_index_cache,
-    )
-    from open_data_lakehouse_demo_spark.plans.inventory_vectors import (
-        clear_ann_ranked_cache,
-        clear_ivf_index_cache,
-    )
-
-    clear_scan_cache()
-    clear_ann_ranked_cache()
-    clear_bloom_eval_cache()  # r7: the decontamination eval-set literals
-    clear_ivf_index_cache()  # r7: the trained-IVF assignment table
-    clear_substr_index_cache()  # r8: the shared ExactSubstr positioned-hash index
-    clear_scrub_result_cache()  # r9: the materialized full-corpus scrub output
-    clear_decon_eval_cache()  # r8: the exact-decontamination eval hash literals
+    clear_session_cache()
     for name in tables:
         read_parquet(spark, f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
 

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from open_data_lakehouse_demo_spark.plans.inventory import QUERIES
+from open_data_lakehouse_demo_spark.sources.io import session_cached
 from tests.conftest import SF_DIR
 from tests.oracle_utils import assert_matches_oracle
 
@@ -182,8 +184,9 @@ def test_decontaminate_inset_cap_falls_back_to_semi_join(spark, monkeypatch):
     got = sorted(tuple(r) for r in q.spark(spark, SF_DIR).collect())
     # the oversized verdict memoizes (None sentinel, r9 ADVICE): the
     # expensive cap-probe job must not re-run on every invocation
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    assert key in ic._DECON_EVAL_CACHE and ic._DECON_EVAL_CACHE[key] is None
+    cached = session_cached(spark, "decon_eval", SF_DIR,
+                            lambda: pytest.fail("verdict not cached"))
+    assert cached is None
     again = sorted(tuple(r) for r in q.spark(spark, SF_DIR).collect())
     ic.clear_decon_eval_cache()
     assert got == want

@@ -85,9 +85,10 @@ def test_scrub_canary_twins(spark):
     Cache policy note (carried from the driver artifact into the twins'
     home, VERDICT r10 item #7): all three queries reuse the session's
     cached ExactSubstr positioned-hash index + merged-interval relation
-    (plans/cache_registry.py `_clear_scrub`), so their WARM medians in
-    BENCH_QUERIES.json exclude that one-time build; the artifact's
-    `cold_s` block records one run each with exactly that cache cleared
+    (the `substr_index` and `scrub_result` session caches, which
+    plans/cache_registry.py clears together for these rows), so their
+    WARM medians in BENCH_QUERIES.json exclude that one-time build; the
+    artifact's `cold_s` block records one run each with exactly that cache cleared
     (scan cache warm) — the per-session cost a user pays before the
     warm numbers apply. bench.py keeps timing both canaries (they
     remain registered); retirement changed only the driver-facing

@@ -329,14 +329,22 @@ def test_alter_table_schema_evolution_lifecycle(spark):
 def test_spread_probe_memoizes_decision_not_data(spark):
     """r13: spread() memoizes only the repartition DECISION per analyzed
     plan — same decision on repeat calls, data recomputed per action."""
-    from open_data_lakehouse_demo_spark.sources.io import _SPREAD_DECISIONS, spread
+    from open_data_lakehouse_demo_spark.sources.io import (
+        clear_session_cache,
+        session_cache_stats,
+        spread,
+    )
 
+    def counts():
+        s = session_cache_stats()["spread"]
+        return s["hits"], s["misses"]
+
+    clear_session_cache("spread")
+    hits, misses = counts()
     df = spark.range(0, 1000).toDF("n")  # tiny → needs spreading
-    before = dict(_SPREAD_DECISIONS)
     a = spread(df)
     b = spread(spark.range(0, 1000).toDF("n"))  # same semantic plan
-    new_keys = [k for k in _SPREAD_DECISIONS if k not in before]
-    assert len(new_keys) == 1  # second call hit the memo
+    assert counts() == (hits + 1, misses + 1)  # second call hit the memo
     target = spark.sparkContext.defaultParallelism
     assert a.rdd.getNumPartitions() == target
     assert b.rdd.getNumPartitions() == target

@@ -32,12 +32,16 @@ def test_plan_keeps_required_properties(spark, name, fragments):
 def test_cache_registry_names_are_inventory_queries():
     """Every cold-spec row names a registered query (a rename would
     silently drop its cold_s disclosure from BENCH_QUERIES.json and the
-    BENCH_VS_DUCK appendix), and every clear-fn is callable."""
-    from open_data_lakehouse_demo_spark.plans.cache_registry import cold_specs
+    BENCH_VS_DUCK appendix) and only declared session caches, and every
+    clear action is callable."""
+    from open_data_lakehouse_demo_spark.plans.cache_registry import COLD_ROWS, cold_specs
     from open_data_lakehouse_demo_spark.plans.inventory import QUERIES
+    from open_data_lakehouse_demo_spark.sources.io import SESSION_CACHES
 
     specs = cold_specs()
-    assert len(specs) == len({n for n, _, _ in specs})  # no dup rows
+    assert len(specs) == len(COLD_ROWS) == len({n for n, _, _ in specs})  # no dup rows
     for name, clear, what in specs:
         assert name in QUERIES, f"cold spec {name!r} is not a registered query"
         assert callable(clear) and isinstance(what, str) and what
+    for name, caches, _ in COLD_ROWS:
+        assert caches and set(caches) <= set(SESSION_CACHES), (name, caches)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from open_data_lakehouse_demo_spark.operators import similarity as sim
 from open_data_lakehouse_demo_spark.plans.inventory import QUERIES
+from open_data_lakehouse_demo_spark.sources import io
 from tests.conftest import SF_DIR
 from tests.oracle_utils import assert_matches_oracle
 
@@ -444,58 +445,91 @@ def test_ivf_sq8_subset_of_exhaustive_at_small_nprobe(spark):
         assert r["adc_dist"] >= best_ex[r["query_id"]]
 
 
-def test_ann_ranked_cache_contract(spark):
-    """The shared-arm cache is keyed by applicationId (stable per
-    SparkContext — id(spark) can be reused after GC and would
-    cross-contaminate sessions), exposes an invalidation hook, and stays
-    bounded."""
-    from open_data_lakehouse_demo_spark.plans import inventory_vectors as iv
+@pytest.mark.parametrize("name", sorted(io.SESSION_CACHES))
+def test_session_cache_contract(spark, monkeypatch, name):
+    """Every declared session cache honours one contract: a hit returns
+    the SAME object (no second build), None is a cached value, a miss at
+    the name's cap resets that name only, the clear hook drops only the
+    names it is given, another application's entries are never served,
+    and an undeclared name raises."""
+    other = "spread" if name == "scan" else "scan"
 
-    iv.clear_ann_ranked_cache()
-    df = iv._ann_ranked_pairs(spark, SF_DIR)
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    assert key in iv._ANN_RANKED_CACHE
-    assert iv._ann_ranked_pairs(spark, SF_DIR) is df  # cache hit
+    def counts(n):
+        s = io.session_cache_stats()[n]
+        return s["hits"], s["misses"]
 
-    # a different application's entry never collides with this one
-    other = ("some-other-app-id", SF_DIR)
-    assert other != key
+    def never():
+        pytest.fail("a cached entry was rebuilt")
 
-    # cap: once full, a cache MISS resets the dict instead of growing it
-    # unboundedly (the real key is evicted so the next call must rebuild)
-    iv.clear_ann_ranked_cache()
-    for i in range(iv._ANN_RANKED_CACHE_CAP + 1):
-        iv._ANN_RANKED_CACHE[(f"app-{i}", SF_DIR)] = df
-    iv._ann_ranked_pairs(spark, SF_DIR)  # miss → cap clear → insert
-    assert len(iv._ANN_RANKED_CACHE) == 1
-    assert key in iv._ANN_RANKED_CACHE
+    io.clear_session_cache(name, other)
+    value = object()
+    assert io.session_cached(spark, name, "k", lambda: value) is value
+    assert io.session_cached(spark, name, "k", never) is value  # hit
+    io.session_cached(spark, other, "warm", lambda: "w")
 
-    iv.clear_ann_ranked_cache()
-    assert not iv._ANN_RANKED_CACHE
+    hits, misses = counts(name)
+    assert io.session_cached(spark, name, "none", lambda: None) is None
+    assert io.session_cached(spark, name, "none", never) is None
+    assert counts(name) == (hits + 1, misses + 1)
+
+    # cap: once full, a MISS resets the name instead of growing it
+    for i in range(io.SESSION_CACHES[name] - 2):
+        io.session_cached(spark, name, i, lambda: i)
+    io.session_cached(spark, name, "new", object)  # miss at cap → reset → insert
+    assert io.session_cached(spark, name, "new", never) is not None
+    hits, misses = counts(name)
+    io.session_cached(spark, name, "k", object)  # evicted by the reset
+    assert counts(name) == (hits, misses + 1)
+    assert io.session_cached(spark, other, "warm", never) == "w"
+
+    io.clear_session_cache(name)  # leaves the other name warm
+    assert io.session_cached(spark, name, "new", lambda: "rebuilt") == "rebuilt"
+    assert io.session_cached(spark, other, "warm", never) == "w"
+
+    # a different application never sees this one's entries
+    monkeypatch.setattr(io, "_application_id", lambda _spark: "another-app")
+    assert io.session_cached(spark, other, "warm", lambda: "x") == "x"
+    monkeypatch.undo()
+    assert io.session_cached(spark, other, "warm", lambda: "y") == "y"
+
+    with pytest.raises(KeyError):
+        io.session_cached(spark, "undeclared", "k", object)
+    with pytest.raises(KeyError):
+        io.clear_session_cache("undeclared")
+    io.clear_session_cache(name, other)
 
 
-def test_scan_cache_contract(spark):
-    """t()'s per-session scan cache: keyed by applicationId (never
-    id(spark)), capped with the same reset-on-full policy as the ANN arm
-    cache, clearable, and a hit returns the SAME resolved relation (the
-    point — no second driver-side file/schema resolution)."""
-    from open_data_lakehouse_demo_spark.plans import inventory as inv
+def test_session_cache_threads_lose_no_update(spark):
+    """Concurrent callers on one name: every call counts as exactly one
+    hit or miss, and every caller gets its key's value."""
+    import sys
+    import threading
 
-    inv.clear_scan_cache()
-    df = inv.t(spark, SF_DIR, "region")
-    key = (spark.sparkContext.applicationId, SF_DIR, "region")
-    assert key in inv._SCAN_CACHE
-    assert inv.t(spark, SF_DIR, "region") is df  # cache hit
-    assert df.count() == 5
+    io.clear_session_cache("spread")
+    before = io.session_cache_stats()["spread"]
+    calls, wrong = 2000, []
 
-    inv.clear_scan_cache()
-    for i in range(inv._SCAN_CACHE_CAP):
-        inv._SCAN_CACHE[(f"app-{i}", SF_DIR, "region")] = df
-    inv.t(spark, SF_DIR, "region")  # miss at cap → reset → insert
-    assert len(inv._SCAN_CACHE) == 1
-    assert key in inv._SCAN_CACHE
-    inv.clear_scan_cache()
-    assert not inv._SCAN_CACHE
+    def worker():
+        for i in range(calls):
+            key = ("stress", i % 50)
+            if io.session_cached(spark, "spread", key, lambda: key) != key:
+                wrong.append(key)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    after = io.session_cache_stats()["spread"]
+    assert not wrong
+    assert (after["hits"] + after["misses"]) - (before["hits"] + before["misses"]) == 16 * calls
+    io.clear_session_cache("spread")
 
 
 def test_ann_recall_eval_consistent_with_sweep_level(spark):
@@ -642,14 +676,19 @@ def test_ivf_index_cache_key_includes_search_params(spark):
     from tests.conftest import SF_DIR
 
     emb = read_parquet(spark, f"{SF_DIR}/embeddings.parquet").limit(300)
-    cache: dict = {}
+    io.clear_session_cache("ivf_index")
+    misses0 = io.session_cache_stats()["ivf_index"]["misses"]
+
+    def misses():
+        return io.session_cache_stats()["ivf_index"]["misses"] - misses0
+
     r1 = sim.ivf_topk(emb, k=3, n_centroids=16, nprobe=1, train_iterations=1,
-                      index_cache=cache, index_cache_key="corpus")
+                      index_cache_key="corpus")
     n1 = r1.count()
-    assert len(cache) == 1
+    assert misses() == 1
     r2 = sim.ivf_topk(emb, k=3, n_centroids=16, nprobe=4, train_iterations=1,
-                      index_cache=cache, index_cache_key="corpus")
-    assert len(cache) == 2  # second entry built — no silent reuse
+                      index_cache_key="corpus")
+    assert misses() == 2  # second entry built — no silent reuse
     assert n1 <= r2.count()  # more probes never shrink the result
     # Direct proof nprobe took effect (r9 ADVICE: the old disjunction was
     # satisfied by monotone counts alone): probing EVERY list (nprobe =
@@ -660,14 +699,15 @@ def test_ivf_index_cache_key_includes_search_params(spark):
     # deterministic training make the strict pairs1 != pairs_all gap
     # stable.
     r_all = sim.ivf_topk(emb, k=3, n_centroids=16, nprobe=16, train_iterations=1,
-                         index_cache=cache, index_cache_key="corpus")
-    assert len(cache) == 3
+                         index_cache_key="corpus")
+    assert misses() == 3
     pairs_all = {(r["query_id"], r["neighbor_id"]) for r in r_all.collect()}
     bf = sim.brute_force_topk(emb, emb, k=3)
     pairs_bf = {(r["query_id"], r["neighbor_id"]) for r in bf.collect()}
     assert pairs_all == pairs_bf
     pairs1 = {(r["query_id"], r["neighbor_id"]) for r in r1.collect()}
     assert pairs1 != pairs_all  # 1-probe search provably missed neighbors
+    io.clear_session_cache("ivf_index")
 
 
 def test_sq_code_clamps_both_ends(spark):

@@ -68,23 +68,6 @@ def test_simulation_seed_changes_results(spark):
     ).collect()
 
 
-def test_udtf_expansion_matches_builtin_generator(spark):
-    """The Python-UDTF ride expansion and the pure-built-in generator are
-    row-for-row identical (same hash-derived attributes, same fan-out)."""
-    from open_data_lakehouse_demo_spark.operators.udtf_rides import generate_rides_udtf
-
-    nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    lines = sm.build_bus_lines(nation)
-    start, end = "2024-06-01 06:00:00", "2024-06-01 08:00:00"
-    builtin = sm.generate_rides(lines, start, end)
-    via_udtf = generate_rides_udtf(spark, lines, start, end)
-    cols = sorted(builtin.columns)
-    assert sorted(via_udtf.columns) == cols
-    a = sorted(tuple(r) for r in builtin.select(*cols).collect())
-    b = sorted(tuple(r) for r in via_udtf.select(*cols).collect())
-    assert a == b
-
-
 def test_analyze_table_stats_drive_broadcast(spark):
     """ANALYZE TABLE COMPUTE STATISTICS feeds the CBO: a small analyzed
     table under the broadcast threshold plans a BroadcastHashJoin."""

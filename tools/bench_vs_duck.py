@@ -91,7 +91,7 @@ def main() -> None:
     print("ANN recall-arm cold/warm split: ann_recall_eval and")
     print("ann_recall_sweep share ONE materialized ground-truth arm")
     print("(inventory_vectors._ann_ranked_pairs, cached per")
-    print("(applicationId, sf_dir) under the driver's immutable-fixture")
+    print("(session, sf_dir) under the driver's immutable-fixture")
     print("assumption). The FIRST of the pair to run in a session pays the")
     print("~3-4s arm materialization (3-level assignment + pair fan-out +")
     print("window rank); every later run of either query reads the cached")
@@ -101,7 +101,7 @@ def main() -> None:
     print("session running both queries or either one repeatedly.\n")
     print("Trained ANN indexes are likewise steady-state (r7): the kmeans")
     print("codebook + assignment table and the SQ8 encoded lists are")
-    print("session-cached (inventory_vectors._IVF_INDEX_CACHE, same")
+    print("session-cached (the `ivf_index` session cache, same")
     print("immutable-fixture contract + register_views clear hook), so warm")
     print("runs of cosine_topk_ivf_kmeans*/ivf_sq8_topk measure the SEARCH —")
     print("a vector index is built once and queried many times; the one-off")
@@ -112,14 +112,14 @@ def main() -> None:
     print("flagged here rather than hidden.\n")
     print("The ExactSubstr scrub trio (scrub_duplicated_spans and the two")
     print("r9 canaries) shares ONE session-cached merged-interval relation")
-    print("(inventory_corpus._SCRUB_RESULT_CACHE — span-mass-sized, no text")
+    print("(the `scrub_result` session cache — span-mass-sized, no text")
     print("pinned) on top of the shared positioned-hash index, so their warm")
     print("numbers price the MAP-SIDE text reconstruction only; the duck")
     print("column re-derives index + islands + merge inside every run. The")
     print("cold-build appendix prices the full detect+merge for all three.\n")
     print("Scan resolution is likewise steady-state (r6): t() resolves each")
-    print("parquet relation once per (session, sf_dir) — inventory.py")
-    print("_SCAN_CACHE, ~100ms of driver time per spark.read call that a")
+    print("parquet relation once per (session, sf_dir) — the `scan`")
+    print("session cache, ~100ms of driver time per spark.read call that a")
     print("session otherwise re-pays on every query. First calls pay it;")
     print("warm medians don't. Same immutable-fixture contract as the arm")
     print("cache. Run-to-run caveat: this box is a shared-CPU VM — single")
@@ -167,9 +167,9 @@ def main() -> None:
     # the relevant session cache cleared first, i.e. build + search; the
     # scan cache stays warm so the delta is the index/arm/eval build
     # itself, not parquet footer resolution.
-    from open_data_lakehouse_demo_spark.plans.cache_registry import cold_specs as _cs
+    # shared registry — bench.py records cold_s from the same list
+    from open_data_lakehouse_demo_spark.plans.cache_registry import cold_specs
 
-    cold_specs = _cs()  # shared registry — bench.py records cold_s from the same list
     warm = {n: s for n, s, _ in rows}
     n_cold = int(os.environ.get("SPARK_GRAFT_COLD_RUNS", "3"))
     print("\n## Cache-backed rows: cold-build cost\n")
@@ -185,7 +185,7 @@ def main() -> None:
     print("1.5-4× cross-session noise).\n")
     print("| query | cached structure | warm spark s | cold spark s | loadavg1 before |")
     print("|---|---|---|---|---|")
-    for name, clear, what in cold_specs:
+    for name, clear, what in cold_specs():
         time.sleep(2)  # let the previous row's run drain from the sample
         load = os.getloadavg()[0]
         colds = []
