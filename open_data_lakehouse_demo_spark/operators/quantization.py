@@ -41,7 +41,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
-from open_data_lakehouse_demo_spark.operators.similarity import list_mat, mat_list
+from open_data_lakehouse_demo_spark.operators.similarity import (
+    assign_ids_batch,
+    list_mat,
+    mat_list,
+    seed_codebook,
+)
 
 DIM = 64
 M = 8  # subspaces
@@ -124,22 +129,6 @@ def pq_encode(
         "vid", "s", "code_id", l2sq_fold(F.col("vs"), F.col("cs")).alias("d2")
     )
     return scored.groupBy("vid").agg(*_best_code_cols()).select("vid", _codes_from_best())
-
-
-def pq_seed_matrix(
-    base: DataFrame, id_col: str = "vid", vec_col: str = "vec", n: int = NCODES
-):
-    """(vids, mat32) — the NCODES lowest-id seed vectors collected to the
-    driver: the same justified tiny driver-side materialization as the
-    k-means codebook (operators/similarity.py _kmeans_train) — NCODES×DIM
-    floats (4 KB), independent of corpus size. Collecting it once lets
-    encode/LUT/coarse-assign run as Arrow kernels against a literal
-    codebook instead of explode→broadcast-join→re-aggregate plans (the
-    relational twins pq_encode/_probe_lut remain as the documentation
-    and differential-test path)."""
-    rows = base.orderBy(id_col).limit(n).collect()
-    vids = [int(r[id_col]) for r in rows]
-    return vids, np.array([r[vec_col] for r in rows], dtype=np.float32)
 
 
 def _pq_sub_dists(chunk64: np.ndarray, cb64: np.ndarray) -> np.ndarray:
@@ -277,7 +266,7 @@ def pq_adc_topk(
     scan, not on a repartition.
     """
     base = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-    _, mat32 = pq_seed_matrix(base)
+    _, mat32 = seed_codebook(base, NCODES)
     codes = base.select("vid", pq_codes_batch("vec", mat32).alias("codes"))
     probes = base.filter(probe_filter) if probe_filter is not None else base
     lut = probes.select(
@@ -538,7 +527,7 @@ def _sq8_codebooks(raw: DataFrame, n_centroids: int):
     the per-dim (mns, scales) stats — in ONE Spark job: the two subplans
     union into a single (tag, vid, payload array<double>) frame and one
     collect fetches n_centroids+1 rows. Values are bit-identical to
-    collecting pq_seed_matrix and the sq_stats row separately
+    collecting seed_codebook and the sq_stats row separately
     (float32→double→float32 round-trips exactly; min/max are
     partitioning-invariant);
     the fusion exists because each extra action costs a full job
@@ -587,17 +576,13 @@ def _sq8_ivf_lists(
     assignment/encode work is vectorized Arrow + codegen'd Columns,
     trivial on a one-split local fixture and already-parallel on
     many-way warehouse inputs."""
-    from open_data_lakehouse_demo_spark.operators import similarity as sim
-
     raw = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
     base = raw
     cvids, cmat, mns, scales = _sq8_codebooks(raw, n_centroids)
     with_cid = base.select(
         "vid",
         "vec",
-        F.element_at(sim.assign_ids_batch("vec", cvids, cmat, 1), 1).alias(
-            "centroid_id"
-        ),
+        assign_ids_batch("vec", cvids, cmat)["assigns"][0].alias("centroid_id"),
     )
     assigned = sq_encode(with_cid, mns, scales, extra_cols=("centroid_id",))
     return base, assigned, cvids, cmat, mns, scales
@@ -625,8 +610,8 @@ def ivf_sq8_topk(
 
     Coarse centroids = the n_centroids lowest-id seed vectors (same
     deterministic, oracle-reproducible seeding as ivf_pq_topk; coarse
-    assignment is the shuffle-free Arrow kernel, bit-identical to the
-    assign_centroids join path). The SQ codebook is 2×DIM driver-side
+    assignment is the shuffle-free ``assign_ids_batch`` Arrow kernel).
+    The SQ codebook is 2×DIM driver-side
     literals (collected in the fused _sq8_codebooks job); candidates join
     on centroid_id; probes broadcast (same probe-batch bound as
     pq_adc_topk).
@@ -635,8 +620,6 @@ def ivf_sq8_topk(
     neighbor-id tiebreak, self excluded; distances bit-identical to the
     exhaustive SQ8 scan on the surviving pairs (same fold, same doubles).
     """
-    from open_data_lakehouse_demo_spark.operators import similarity as sim
-
     from open_data_lakehouse_demo_spark.sources.io import materialize, session_cached
 
     def build(cached: bool) -> tuple:
@@ -662,9 +645,9 @@ def ivf_sq8_topk(
     probes = base.filter(probe_filter) if probe_filter is not None else base
     probe_side = probes.select(
         F.col("vid").alias("query_id"),
-        F.explode(
-            sim.assign_ids_batch("vec", cvids, cmat, nprobe)
-        ).alias("centroid_id"),
+        F.explode(assign_ids_batch("vec", cvids, cmat, nprobe)["assigns"]).alias(
+            "centroid_id"
+        ),
         F.transform("vec", lambda x: x.cast("double")).alias("pv"),
     )
     adc = (
@@ -776,8 +759,6 @@ def _search_sq8_lists(
     """Shared IVF-SQ8 search core over an already-loaded lists relation +
     meta row — used by both the plain-parquet and the table_log-versioned
     index (search_sq8_ivf_index / search_sq8_ivf_index_logged)."""
-    from open_data_lakehouse_demo_spark.operators import similarity as sim
-
     from open_data_lakehouse_demo_spark.sources.io import materialize
 
     mns, scales, cvids, cmat = _sq8_unpack_meta(meta)
@@ -790,7 +771,9 @@ def _search_sq8_lists(
     probe_side = materialize(
         probes.select(
             F.col(id_col).alias("query_id"),
-            F.explode(sim.assign_ids_batch(vec_col, cvids, cmat, nprobe)).alias("centroid_id"),
+            F.explode(assign_ids_batch(vec_col, cvids, cmat, nprobe)["assigns"]).alias(
+                "centroid_id"
+            ),
             F.transform(vec_col, lambda x: x.cast("double")).alias("pv"),
         )
     )
@@ -861,7 +844,6 @@ def append_sq8_ivf_index_logged(
     a mix, and ``txn=(writer, version)`` makes a replayed streaming
     micro-batch a no-op (exactly-once, the table_log.append contract).
     Returns the new lists snapshot id."""
-    from open_data_lakehouse_demo_spark.operators import similarity as sim
     from open_data_lakehouse_demo_spark.sources import table_log as tl
 
     meta = tl.read(spark, f"{path}/meta").first()
@@ -870,7 +852,7 @@ def append_sq8_ivf_index_logged(
     with_cid = raw.select(
         "vid",
         "vec",
-        F.element_at(sim.assign_ids_batch("vec", cvids, cmat, 1), 1).alias("centroid_id"),
+        assign_ids_batch("vec", cvids, cmat)["assigns"][0].alias("centroid_id"),
     )
     assigned = sq_encode(with_cid, mns, scales, extra_cols=("centroid_id",))
     return tl.append(spark, f"{path}/lists", assigned, txn=txn)
@@ -921,18 +903,15 @@ def ivf_pq_topk(
 
     Both the coarse centroids and the PQ codes derive from the same
     NCODES lowest-id seed vectors (deterministic, oracle-reproducible;
-    swap in kmeans_codebook/trained sub-codebooks where recall matters).
+    trained sub-codebooks would slot into the same literal kernels).
     The candidate join is an equi-join on centroid_id; probe LUTs
     broadcast (same probe-batch bound as pq_adc_topk).
 
     Output (query_id, neighbor_id, adc_dist) — top-k by ADC per probe,
     neighbor-id tiebreak, self excluded.
     """
-    from open_data_lakehouse_demo_spark.operators import similarity as sim
-
-    # plain (vid, vec) scan — no _ensure_base: the norm column and its
-    # checkpoint are join-path machinery; assign_ids_batch derives the
-    # identical fold-norms from the raw vectors inside the kernel.
+    # plain (vid, vec) scan: no norm column or checkpoint is needed —
+    # assign_ids_batch derives the fold norms inside the kernel.
     # No spread() either (r9): its serial-fold-scoring rationale predates
     # the Arrow kernels — same removal pq_adc_topk/_sq8_ivf_lists made
     # (the seed collect becomes a TakeOrdered on the scan, not on a
@@ -941,8 +920,8 @@ def ivf_pq_topk(
     # one driver-side seed collect serves the coarse quantizer AND the PQ
     # sub-codebooks (both are NCODES-lowest-id constructions); every
     # per-vector stage below is then a shuffle-free Arrow kernel against
-    # literals — coarse assign (assign_ids_batch, bit-identical to the
-    # assign_centroids join path), encode (pq_codes_batch ≡ pq_encode),
+    # literals — coarse assign (assign_ids_batch), encode
+    # (pq_codes_batch ≡ pq_encode),
     # probe LUTs (pq_lut_batch ≡ _probe_lut). The only shuffle left is
     # the centroid_id candidate equi-join itself.
     # Session-scoped index reuse (the ``ivf_index`` cache, same contract
@@ -953,15 +932,13 @@ def ivf_pq_topk(
     from open_data_lakehouse_demo_spark.sources.io import materialize, session_cached
 
     def build(cached: bool) -> tuple:
-        cvids, cmat = pq_seed_matrix(base, n=max(NCODES, n_centroids))
+        cvids, cmat = seed_codebook(base, max(NCODES, n_centroids))
         cvids, cmat_coarse = cvids[:n_centroids], cmat[:n_centroids]
         pq_mat = cmat[:NCODES]
 
         # inverted lists: (centroid_id, vid, codes) — 8 small ints per vector
         lists = base.select(
-            F.element_at(
-                sim.assign_ids_batch("vec", cvids, cmat_coarse, 1), 1
-            ).alias("centroid_id"),
+            assign_ids_batch("vec", cvids, cmat_coarse)["assigns"][0].alias("centroid_id"),
             "vid",
             pq_codes_batch("vec", pq_mat).alias("codes"),
         )
@@ -979,9 +956,9 @@ def ivf_pq_topk(
     # nprobe lists (array order = assignment rank, as the window ranked)
     probe_side = probes.select(
         F.col("vid").alias("query_id"),
-        F.explode(
-            sim.assign_ids_batch("vec", cvids, cmat_coarse, nprobe)
-        ).alias("centroid_id"),
+        F.explode(assign_ids_batch("vec", cvids, cmat_coarse, nprobe)["assigns"]).alias(
+            "centroid_id"
+        ),
         pq_lut_batch("vec", pq_mat).alias("lut"),
     )
     adc = (

@@ -23,7 +23,11 @@ Scale design (local ≈ 500-5k vectors; target = 10^9+):
     pairs via L band-table equi-joins (same shape as MinHash LSH in
     operators/dedup.py); exact cosine verifies candidates.
   - IVF codebook: deterministic sampled (oracle-reproducible) or TRAINED
-    via distributed Lloyd's k-means (``kmeans_codebook``).
+    via Lloyd's k-means (``ivf_topk(train_iterations=...)``). Every
+    codebook is a driver-side (vids, C×DIM float32) literal — seeds come
+    from ``seed_codebook`` — and every vector is assigned by ONE numpy
+    ranking routine (``rank_codebook``) behind ONE Arrow kernel
+    (``assign_ids_batch``); both Lloyd paths rank with the same routine.
   - Dot products: the expression fold is the REFERENCE semantics the
     oracles mirror; the hot pair-fan-out stages (bucket bits, candidate
     verify, IVF scoring) run the Arrow-batched numpy variants, each
@@ -268,35 +272,35 @@ def _with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _is_prepared_base(df: DataFrame) -> bool:
-    """A frame whose columns are EXACTLY (vid, vec, nrm) is a
-    caller-prepared norm table.  Exact-set match (not subset) so a source
-    table that merely happens to carry those names among others is never
-    silently hijacked; the caller's id_col/vec_col are ignored only for
-    frames this function already produced."""
-    return set(df.columns) == {"vid", "vec", "nrm"}
+def _check_int_ids(df: DataFrame, id_col: str, op: str) -> None:
+    """Vector ids ride driver-side int literals (codebook and probe ids);
+    reject a non-integer id column by name and type before any job runs
+    instead of failing inside a collect."""
+    from pyspark.sql import types as T
+
+    dtype = df.schema[id_col].dataType
+    if not isinstance(dtype, T.IntegralType):
+        raise ValueError(
+            f"{op}: id column {id_col!r} has type {dtype.simpleString()}; "
+            "vector ids must be an integer type"
+        )
 
 
-def _ensure_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """No-op when the caller already prepared a (vid, vec, nrm) norm table
-    — lets a multi-arm query (e.g. ann_recall_eval) build and materialize
-    the norm scan ONCE and feed it to several operators."""
-    if _is_prepared_base(df):
-        return df
-    return _with_norm(df, id_col, vec_col)
+def _empty_pairs(spark, query_type, neighbor_type) -> DataFrame:
+    """The empty (query_id, neighbor_id, cosine) result, ids typed like
+    the input id columns so empty and non-empty results share a schema."""
+    from pyspark.sql import types as T
 
-
-def _ensure_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Materialized variant of ``_ensure_norm``.
-
-    CONTRACT: a caller passing a prepared (vid, vec, nrm) frame must have
-    materialized it (re-checkpointing here would copy the blocks; NOT
-    materializing makes every training round re-run the norm lineage)."""
-    if _is_prepared_base(df):
-        return df
-    from open_data_lakehouse_demo_spark.sources.io import materialize
-
-    return materialize(_with_norm(df, id_col, vec_col))
+    return spark.createDataFrame(
+        [],
+        T.StructType(
+            [
+                T.StructField("query_id", query_type),
+                T.StructField("neighbor_id", neighbor_type),
+                T.StructField("cosine", T.DoubleType()),
+            ]
+        ),
+    )
 
 
 def probe_dots_batch(vec_col: str, pmat32: np.ndarray) -> Column:
@@ -352,17 +356,16 @@ def brute_force_topk(
     Output (query_id, neighbor_id, cosine), k rows per probe,
     neighbor_id tiebreak makes the ranking total.
     """
-    corpus = _ensure_norm(df, id_col, vec_col)
-    if _is_prepared_base(probes):
-        p_norm = probes
-    else:
-        # no spread(): this frame is collected whole, not computed wide —
-        # the repartition would only add a shuffle to the bounded probe job
-        p_norm = probes.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("vec"),
-            norm(F.col(vec_col)).alias("nrm"),
-        )
+    _check_int_ids(df, id_col, "brute_force_topk")
+    _check_int_ids(probes, id_col, "brute_force_topk")
+    corpus = _with_norm(df, id_col, vec_col)
+    # no spread(): this frame is collected whole, not computed wide —
+    # the repartition would only add a shuffle to the bounded probe job
+    p_norm = probes.select(
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).alias("vec"),
+        norm(F.col(vec_col)).alias("nrm"),
+    )
     # bounded collect: CollectLimit short-circuits at CAP+1 rows, so an
     # oversized probe side fails loudly without materializing itself
     p_rows = p_norm.limit(_PROBE_COLLECT_CAP + 1).collect()
@@ -372,20 +375,11 @@ def brute_force_topk(
             "the probe side must stay a query batch — shard larger probe "
             "sets into sequential batches"
         )
-    spark = df.sparkSession
+    # ids keep their columns' types: the literal probe-id array would
+    # otherwise type query_id by its values, not by the probe column
+    query_type = probes.schema[id_col].dataType
     if not p_rows:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("neighbor_id", T.LongType()),
-                    T.StructField("cosine", T.DoubleType()),
-                ]
-            ),
-        )
+        return _empty_pairs(df.sparkSession, query_type, df.schema[id_col].dataType)
     p_rows.sort(key=lambda r: r["vid"])
     qvids = F.lit([int(r["vid"]) for r in p_rows])
     qnrms = F.lit([float(r["nrm"]) for r in p_rows])  # JVM fold norms, verbatim
@@ -397,7 +391,7 @@ def brute_force_topk(
             F.posexplode(probe_dots_batch("vec", pmat32)).alias("pidx", "dot"),
         )
         .select(
-            F.element_at(qvids, F.col("pidx") + 1).alias("query_id"),
+            F.element_at(qvids, F.col("pidx") + 1).cast(query_type).alias("query_id"),
             F.col("vid").alias("neighbor_id"),
             # same JVM division / NULL-on-zero-denominator semantics as
             # cosine(): dot ÷ (qnrm · nrm), all three operands bit-equal
@@ -416,257 +410,109 @@ def brute_force_topk(
     )
 
 
-def assign_centroids(
-    df: DataFrame,
-    centroids: DataFrame,
-    n_assign: int = 1,
-) -> DataFrame:
-    """Assign each vector to its ``n_assign`` nearest coarse centroids.
-
-    Broadcast the (tiny) codebook; one O(n·C) scan, ranked by cosine with
-    centroid-id tiebreak. Output (vid, vec, nrm, centroid_id, rank).
+def seed_codebook(raw: DataFrame, n: int) -> tuple[list[int], np.ndarray]:
+    """The ``n`` lowest-id vectors of a (vid, vec) frame as a driver-side
+    codebook (vids ascending, C×DIM float32) — the deterministic,
+    oracle-reproducible IVF/PQ seeding. One bounded TakeOrdered collect:
+    n×DIM floats (4 KB at n=16), independent of corpus size, so every
+    per-vector stage can run as an Arrow kernel against literals. An
+    empty corpus yields ``([], empty)``; callers decide what that means.
     """
-    vecs = df
-    cents = centroids.select(
-        F.col("vid").alias("centroid_id"),
-        F.col("vec").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    )
-    scored = vecs.join(F.broadcast(cents)).select(
-        "vid",
-        "vec",
-        "nrm",
-        "centroid_id",
-        cosine(F.col("vec"), F.col("cvec"), F.col("nrm"), F.col("cnrm")).alias("ccos"),
-    )
-    if n_assign == 1:
-        # argmax as ONE hash aggregate instead of a window (no sort, pure
-        # map-side partial agg): max over struct(ccos, -centroid_id, …)
-        # is exactly rank-1 of ORDER BY ccos DESC, centroid_id ASC —
-        # including NULL cosines (zero norms under non-ANSI division),
-        # which rank last in both paths and fall through to the lowest
-        # centroid id when every cosine is NULL (verified empirically).
-        best = scored.groupBy("vid").agg(
-            F.max(
-                F.struct(
-                    F.col("ccos"),
-                    (-F.col("centroid_id")).alias("neg_cid"),
-                    F.col("centroid_id"),
-                    F.col("vec"),
-                    F.col("nrm"),
-                )
-            ).alias("b")
+    rows = raw.select("vid", "vec").orderBy("vid").limit(n).collect()
+    return [int(r["vid"]) for r in rows], np.array([r["vec"] for r in rows], dtype=np.float32)
+
+
+def _fold_norms(m64: np.ndarray) -> np.ndarray:
+    """Row norms of an f64 matrix holding widened float32 values — the
+    ``norm()`` fold operation for operation: exact squares, summed
+    left-to-right (``np.add.accumulate`` ≡ the fold's rounding at every
+    step) from a +0.0 seed, then IEEE sqrt. Bit-identical to the
+    JVM/DuckDB expression."""
+    return np.sqrt(np.add.accumulate(m64 * m64, axis=1)[:, -1] + 0.0)
+
+
+def rank_codebook(
+    V: np.ndarray, mat32: np.ndarray, n: int = 1
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one codebook ranking: ``(top, nrm)`` for an (r, DIM) f64 batch
+    of widened float32 vectors against a (C, DIM) float32 codebook —
+    ``top`` (r, min(n, C)) holds codebook ROW indices, best first, and
+    ``nrm`` each vector's fold norm. Used by the Arrow kernel
+    (``assign_ids_batch``), both Lloyd paths and the ANN ground-truth arm.
+
+    Bit-exact to the SQL ranking ``ORDER BY cosine DESC, centroid_id``
+    over fold cosines (every oracle encodes that rule):
+      * dots: exact f32→f64 products, sequential ``np.add.accumulate``
+        fold, ``+ 0.0`` zero-seed; norms: ``_fold_norms`` for vectors and
+        codebook alike; cosine = dot ÷ (vnrm·cnrm);
+      * zero norms: with ANSI off (the project session) Spark's x/0.0 is
+        NULL, which ranks LAST; numpy yields ±inf/NaN instead, so every
+        non-finite cosine maps to -inf — zero-norm pairings rank last and
+        an all--inf row falls through to row 0 (the lowest id);
+      * ties: a STABLE argsort of the negated cosines over the
+        ascending-id codebook keeps the lowest id first (argmax, which
+        returns the first maximum, at n == 1).
+    At most C distinct lists exist, so ``n`` is clamped to C: a larger
+    request returns all C, never a broadcast error or a repeated id.
+    Chunked so the (chunk, C, DIM) product tensor stays bounded."""
+    cmat = mat32.astype(np.float64)  # f32→f64 exact
+    cnrm = _fold_norms(cmat)
+    n = min(n, len(cmat))
+    top = np.empty((len(V), n), dtype=np.int64)
+    nrm = np.empty(len(V), dtype=np.float64)
+    for lo in range(0, len(V), 2048):
+        chunk = V[lo : lo + 2048]
+        vnrm = _fold_norms(chunk)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            prods = chunk[:, None, :] * cmat[None, :, :]  # exact products
+            dots = np.add.accumulate(prods, axis=2)[:, :, -1] + 0.0
+            cos = dots / (vnrm[:, None] * cnrm[None, :])
+        cos = np.where(np.isfinite(cos), cos, -np.inf)
+        top[lo : lo + len(chunk)] = (
+            np.argmax(cos, axis=1)[:, None]
+            if n == 1
+            else np.argsort(-cos, axis=1, kind="stable")[:, :n]
         )
-        return best.select(
-            "vid",
-            F.col("b.vec").alias("vec"),
-            F.col("b.nrm").alias("nrm"),
-            F.col("b.centroid_id").alias("centroid_id"),
-            F.lit(1).alias("crank"),
-        )
-    w = Window.partitionBy("vid").orderBy(F.col("ccos").desc(), F.col("centroid_id"))
-    return (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= n_assign)
-        .drop("ccos")
-    )
-
-
-def kmeans_codebook(
-    df: DataFrame,
-    n_centroids: int = 16,
-    n_iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Distributed Lloyd's k-means: the real IVF codebook-training step
-    (replaces the sampled lowest-id codebook where recall matters).
-
-    Deterministic: init = the ``n_centroids`` lowest-id vectors, then
-    ``n_iterations`` rounds of assign-to-nearest + element-wise mean,
-    fused into ONE shuffle-free Arrow pass per round with the codebook
-    carried driver-side between rounds (see ``_kmeans_train`` for the
-    job shape, determinism and scale-limit notes).  Empty clusters keep
-    their previous centroid.  Output (vid = centroid id, vec, nrm) —
-    directly pluggable into ``assign_centroids`` / ``ivf_topk``.
-
-    Scale: each round is one map-only corpus scan emitting C partial
-    rows per partition — at 10^9 vectors the cost is n_iterations
-    corpus scans, the textbook distributed k-means shape.
-    """
-    base = _ensure_base(df, id_col, vec_col)
-    return _kmeans_from_base(base, n_centroids, n_iterations)
-
-
-def _np_norm(vec32: np.ndarray) -> float:
-    """Driver-side twin of the ``norm`` fold: exact f32→f64 self-products
-    summed left-to-right (np.add.accumulate ≡ the fold's rounding at every
-    step), then IEEE sqrt — bit-identical to the JVM/DuckDB expression."""
-    prods = vec32.astype(np.float64) ** 2
-    return float(np.sqrt(np.add.accumulate(prods)[-1] + 0.0))
-
-
-def _codebook_df(spark, vids: list[int], mat32: np.ndarray) -> DataFrame:
-    """(vid, vec, nrm) local-relation DataFrame from a driver-side codebook
-    matrix — broadcastable for free (no job computes it)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vid", T.LongType()),
-            T.StructField("vec", T.ArrayType(T.FloatType())),
-            T.StructField("nrm", T.DoubleType()),
-        ]
-    )
-    rows = [
-        (int(v), [float(x) for x in mat32[i]], _np_norm(mat32[i]))
-        for i, v in enumerate(vids)
-    ]
-    return spark.createDataFrame(rows, schema)
-
-
-def _assign_chunk(chunk64: np.ndarray, cmat64: np.ndarray, cnrm: np.ndarray) -> np.ndarray:
-    """(c, C) cosine matrix for a chunk of vectors vs the codebook — the
-    bit-exact fold math shared by every literal-codebook stage:
-    exact f32→f64 products, ``np.add.accumulate`` sequential fold with the
-    ``+ 0.0`` zero-seed normalization, fold-norm division.
-
-    Zero-norm semantics: with ANSI off (the project session), Spark's
-    x/0.0 is NULL, which ranks LAST under the join path's ``ccos DESC``
-    window / ``max(struct)`` (verified empirically — Spark never produces
-    NaN here).  numpy's division yields ±inf/NaN instead, so every
-    non-finite cosine maps to -inf: zero-norm pairings rank last, and an
-    all--inf row falls through to the first (lowest-vid) centroid —
-    matching the join path's all-NULL tiebreak exactly."""
-    with np.errstate(divide="ignore", invalid="ignore"):
-        prods = chunk64[:, None, :] * cmat64[None, :, :]  # exact products
-        dots = np.add.accumulate(prods, axis=2)[:, :, -1] + 0.0
-        vnrm = np.sqrt(np.add.accumulate(chunk64 * chunk64, axis=1)[:, -1] + 0.0)
-        cos = dots / (vnrm[:, None] * cnrm[None, :])
-    return np.where(np.isfinite(cos), cos, -np.inf)
+        nrm[lo : lo + len(chunk)] = vnrm
+    return top, nrm
 
 
 def assign_ids_batch(
     vec_col: str, vids: list[int], mat32: np.ndarray, n_assign: int = 1
 ) -> Column:
-    """``n_assign`` nearest-centroid ids per vector (ordered, as
-    ``array<bigint>``) against a DRIVER-SIDE codebook — Arrow-batched twin
-    of ``assign_centroids``.
+    """``struct<assigns: array<bigint>, nrm: double>`` per vector against a
+    DRIVER-SIDE codebook: ``assigns`` = the ``n_assign`` nearest centroid
+    ids, best first (``rank_codebook`` — clamped to C), ``nrm`` = the
+    vector's fold norm, bit-identical to the ``norm()`` expression. The
+    one centroid-assignment kernel: IVF/SemDeDup/PQ/SQ8 corpus and probe
+    sides and the IVF ingest sink all call it; callers that need only
+    ids take ``["assigns"]``.
 
-    One Arrow pass over n vectors (each scored against all C centroids via
-    one numpy tensor product) replaces the broadcast-join fan-out of n×C
-    pair rows through ``dot_batch`` — 1/C-th the Arrow traffic and no
-    n×C-row hash aggregate. Bit-identical to the join path:
-
-      * dots/norms: the proven exact-product + sequential-fold math
-        (``_assign_chunk``);
-      * ranking: Spark's ``max(struct(ccos, -centroid_id, …))`` / window
-        ``ORDER BY ccos DESC, centroid_id`` ranks valid cosines first
-        (NULL — zero-norm division under non-ANSI — last, lowest
-        centroid id on ties) — mirrored by mapping non-finite numpy
-        cosines to -inf (see ``_assign_chunk``) and a STABLE ascending
-        argsort of the negated cosines over the ascending-vid codebook
-        (stable ⇒ ties keep the lowest centroid id first; -inf sorts
-        last after negation).
+    One Arrow pass over n vectors, each scored against all C centroids
+    via one numpy tensor product — no n×C pair rows, and the norm comes
+    free from the same pass (no interpreted norm fold, no norm
+    checkpoint ahead of it).
 
     The codebook rides the task closure (C·DIM·4 bytes — 4 KB at C=16;
     HONEST LIMIT: beyond C·DIM ≈ 10^6 floats switch to an explicit
     SparkContext.broadcast handle so it ships once per executor, not per
     task batch).
     """
-    cmat = mat32.astype(np.float64)  # (C, DIM); f32→f64 exact
-    cnrm = np.array([_np_norm(mat32[i]) for i in range(len(vids))], dtype=np.float64)
     vid_arr = np.array(vids, dtype=np.int64)
-    # at most C distinct lists exist: a larger request (nprobe > codebook
-    # size) returns all C, never a broadcast error or a repeated id
-    n = min(n_assign, len(vids))
-
-    @arrow_udf("array<bigint>")
-    def _assign(emb: pa.Array) -> pa.Array:
-        nrows = len(emb)
-        if nrows == 0:
-            return mat_list(np.empty((0, n), np.int64), pa.int64())
-        V = list_mat(emb)  # (nrows, DIM); f32→f64 exact (list_mat, r13)
-        out = np.empty((nrows, n), dtype=np.int64)
-        for lo in range(0, nrows, 2048):
-            chunk = V[lo : lo + 2048]
-            cos = _assign_chunk(chunk, cmat, cnrm)
-            if n == 1:
-                top = np.argmax(cos, axis=1)[:, None]  # first max = lowest vid
-            else:
-                # ascending stable sort of -cos ⇒ cos desc, index (vid) asc
-                top = np.argsort(-cos, axis=1, kind="stable")[:, :n]
-            out[lo : lo + len(chunk)] = vid_arr[top]
-        return mat_list(out, pa.int64())
-
-    return _assign(F.col(vec_col))
-
-
-def assign_ids_nrm_batch(
-    vec_col: str, vids: list[int], mat32: np.ndarray, n_assign: int = 1
-) -> Column:
-    """``struct<assigns array<bigint>, nrm double>`` — ``assign_ids_batch``
-    fused with the vector's own fold-norm in the SAME Arrow pass (r14,
-    guide §4.2/§1.2).
-
-    Why: the trained-IVF index build previously ran ``_ensure_base``
-    first — a full JVM pass evaluating the INTERPRETED ``norm`` fold
-    (64 HOF lambda steps per row) plus a corpus-wide (vid, vec, nrm)
-    localCheckpoint — only so the later assign pass could carry ``nrm``
-    along. The assign kernel already computes every vector's norm inside
-    ``_assign_chunk``; emitting it costs nothing and deletes BOTH the
-    interpreted norm pass and the second corpus checkpoint (the r13
-    HONEST-LIMIT 2× transient block footprint).
-
-    Bit-parity: the emitted norm is ``sqrt(Σ(f64(x)·f64(x)))`` with exact
-    f32→f64 widening, sequential ``np.add.accumulate`` fold and ``+0.0``
-    seed — operation-for-operation the ``norm()`` expression fold (the
-    ``_np_norm`` argument; parity-tested in tests/test_similarity.py).
-    Assignment math/ranking are byte-identical to assign_ids_batch
-    (shared ``_assign_chunk``)."""
-    cmat = mat32.astype(np.float64)
-    cnrm = np.array([_np_norm(mat32[i]) for i in range(len(vids))], dtype=np.float64)
-    vid_arr = np.array(vids, dtype=np.int64)
-    # at most C distinct lists exist: a larger request (nprobe > codebook
-    # size) returns all C, never a broadcast error or a repeated id
-    n = min(n_assign, len(vids))
 
     # annotation must be the generic pa.Array: arrow_udf's type-hint
     # inference treats a non-Array-hinted return as a grouped aggregate
     # (StructArray is returned at runtime — a subclass of pa.Array)
     @arrow_udf("struct<assigns: array<bigint>, nrm: double>")
-    def _assign_nrm(emb: pa.Array) -> pa.Array:
-        nrows = len(emb)
-        if nrows == 0:
-            return pa.StructArray.from_arrays(
-                [mat_list(np.empty((0, n), np.int64), pa.int64()),
-                 pa.array(np.empty(0, np.float64), type=pa.float64())],
-                ["assigns", "nrm"],
-            )
-        V = list_mat(emb)  # (nrows, DIM); f32→f64 exact
-        out = np.empty((nrows, n), dtype=np.int64)
-        nrm = np.empty(nrows, dtype=np.float64)
-        for lo in range(0, nrows, 2048):
-            chunk = V[lo : lo + 2048]
-            cos = _assign_chunk(chunk, cmat, cnrm)
-            if n == 1:
-                top = np.argmax(cos, axis=1)[:, None]
-            else:
-                top = np.argsort(-cos, axis=1, kind="stable")[:, :n]
-            out[lo : lo + len(chunk)] = vid_arr[top]
-            # exact squares (f32 widened), sequential fold, +0.0 seed —
-            # the norm() fold's rounding at every step (_np_norm)
-            nrm[lo : lo + len(chunk)] = np.sqrt(
-                np.add.accumulate(chunk * chunk, axis=1)[:, -1] + 0.0
-            )
+    def _assign(emb: pa.Array) -> pa.Array:
+        V = list_mat(emb) if len(emb) else np.empty((0, DIM))  # f32→f64 exact
+        top, nrm = rank_codebook(V, mat32, n_assign)
         return pa.StructArray.from_arrays(
-            [mat_list(out, pa.int64()), pa.array(nrm, type=pa.float64())],
+            [mat_list(vid_arr[top], pa.int64()), pa.array(nrm, type=pa.float64())],
             ["assigns", "nrm"],
         )
 
-    return _assign_nrm(F.col(vec_col))
-
-
+    return _assign(F.col(vec_col))
 
 
 #: full-corpus local-training threshold for _kmeans_train: below it the
@@ -688,36 +534,25 @@ def assign_ids_nrm_batch(
 _LOCAL_TRAIN_CAP = 65536
 
 
-def _kmeans_train_local(
-    rows: list, n_centroids: int, n_iterations: int
-) -> tuple[list[int], np.ndarray]:
-    """Driver-local Lloyd over collected (vid, vec) rows — the identical
-    chunked recurrence the distributed partials run (_assign_chunk +
-    2048-row np.add.at accumulation), iterated in SORTED-vid order so
-    the result is deterministic regardless of scan/partition order
-    (strictly stronger than the distributed path's fixed-partitioning
-    determinism). Init = the n_centroids lowest-id vectors; empty
-    clusters keep their previous centroid; means cast to f32 per round
-    — same tolerance class the DuckDB oracle differential accepts."""
-    rows = sorted(rows, key=lambda r: r["vid"])
-    vids = [r["vid"] for r in rows[:n_centroids]]
-    mat = np.array([r["vec"] for r in rows[:n_centroids]], dtype=np.float32)
-    n_c = len(vids)
-    all64 = np.array([r["vec"] for r in rows], dtype=np.float64)
-    for _ in range(n_iterations):
-        cmat = mat.astype(np.float64)
-        cnrm = np.array([_np_norm(mat[i]) for i in range(n_c)], dtype=np.float64)
-        counts = np.zeros(n_c, dtype=np.int64)
-        sums = np.zeros((n_c, all64.shape[1]), dtype=np.float64)
-        for lo in range(0, len(all64), 2048):
-            chunk = all64[lo : lo + 2048]
-            idx = np.argmax(_assign_chunk(chunk, cmat, cnrm), axis=1)
-            counts += np.bincount(idx, minlength=n_c)
-            np.add.at(sums, idx, chunk)
-        for i in range(n_c):
-            if counts[i] > 0:
-                mat[i] = (sums[i] / counts[i]).astype(np.float32)
-    return vids, mat
+def _lloyd_partials(batches, mat32: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The one Lloyd accumulation step: per-centroid (count, Σvec) over an
+    iterable of (r, DIM) f64 batches, each vector assigned to its nearest
+    centroid by ``rank_codebook``. Rows are added in input order, so a
+    fixed input order gives bit-identical f64 sums."""
+    counts = np.zeros(len(mat32), dtype=np.int64)
+    sums = np.zeros(mat32.shape, dtype=np.float64)
+    for V in batches:
+        idx = rank_codebook(V, mat32)[0][:, 0]
+        counts += np.bincount(idx, minlength=len(mat32))
+        np.add.at(sums, idx, V)
+    return counts, sums
+
+
+def _lloyd_update(mat32: np.ndarray, counts: np.ndarray, sums: np.ndarray) -> None:
+    """Move every non-empty cluster's centroid to its float32-cast mean
+    (in place); empty clusters keep their previous centroid."""
+    live = counts > 0
+    mat32[live] = (sums[live] / counts[live, None]).astype(np.float32)
 
 
 def _kmeans_train(
@@ -727,94 +562,61 @@ def _kmeans_train(
 ) -> tuple[list[int], np.ndarray]:
     """Lloyd iterations over a (vid, vec[, ...]) relation, returning the
     trained codebook DRIVER-SIDE as (vids, C×DIM float32). Only vid/vec
-    are read, so callers may pass either the materialized (vid, vec, nrm)
-    base (kmeans_codebook — norms reused downstream) or the raw scan
-    projection (ivf_topk's trained arm, r14 — each distributed round is
-    then a column-pruned corpus scan, the textbook k-means shape, with no
-    corpus checkpoint write ahead of it; the bounded local-path collect
-    never needed norms at all).
+    are read, so a distributed round is a column-pruned corpus scan —
+    the textbook k-means shape — with no corpus checkpoint ahead of it.
 
-    The codebook (C×DIM floats, ~4 KB at C=16) is the one legitimate
-    driver-side materialization in the repo: per round the cluster runs
-    exactly ONE shuffle-free job — a fused ``mapInArrow`` pass that
-    assigns each vector to its nearest centroid (``_assign_chunk``, the
-    bit-exact fold math) and accumulates per-partition (count, Σvec)
-    partials in the same numpy sweep, emitting C rows per partition.  The
-    driver sums the partials in partition order (deterministic for a fixed
-    partitioning) and casts the mean to float32 — numerically the same
-    mean as a per-element AVG aggregate up to f64 association order, which
-    the f32 rounding absorbs except on ~2^-29-probability boundary cases.
-    vs the previous in-plan version (broadcast-join fan-out + 64-wide AVG
-    codegen + per-round lazy localCheckpoint): 5.7s → ~2.4s on the
-    trained-IVF query at sf0.1.  Empty clusters keep their previous
-    centroid.
+    Deterministic: init = the ``n_centroids`` lowest-id vectors, then
+    ``n_iterations`` rounds of assign-to-nearest (``rank_codebook``, the
+    bit-exact fold ranking) + float32-cast mean (``_lloyd_partials`` /
+    ``_lloyd_update``, shared by both paths). Empty clusters keep their
+    previous centroid.
+
+    SMALL-CORPUS FAST PATH: one CollectLimit probe; if the whole corpus
+    fits ``_LOCAL_TRAIN_CAP``, every round runs as driver-local numpy in
+    SORTED-vid order (deterministic regardless of scan/partition order)
+    — ZERO per-round Spark jobs (faiss-style bounded training; below the
+    cap the "sample" is the exact corpus). At scale the probe
+    short-circuits after CAP+1 rows and each round is ONE shuffle-free
+    ``mapInArrow`` job emitting C (count, Σvec) partial rows per
+    partition; the driver sums them in partition order (deterministic for
+    a fixed partitioning) — numerically the same mean as a per-element
+    AVG aggregate up to f64 association order, which the f32 rounding
+    absorbs except on ~2^-29-probability boundary cases.
 
     HONEST LIMIT: the driver handles n_partitions×C partial rows — fine to
     ~10^6 (e.g. 10k partitions × 64 lists); for larger C·partition
     products, pre-aggregate the partials with one groupBy before collect.
-
-    Returns (vids, mat). Rounds 2+ run on a row-adaptive task count
-    derived from round 1's partials (Σcnt rows over pid-count
-    partitions: no separate count job); no coalesce once the corpus
-    fills every slot — exactly the 100 TB case.
+    Rounds 2+ run on a row-adaptive task count derived from round 1's
+    partials (Σcnt rows over pid-count partitions: no separate count
+    job); no coalesce once the corpus fills every slot.
     """
-    dim = DIM
-    # SMALL-CORPUS FAST PATH: one CollectLimit probe; if the whole corpus
-    # fits the cap, every Lloyd round runs as driver-local numpy (the
-    # same chunked recurrence) — ZERO per-round Spark jobs. At scale the
-    # probe short-circuits after CAP+1 rows (CollectLimit scans
-    # incrementally) and the distributed path below runs unchanged.
-    # This is the faiss-style training discipline: codebooks train on a
-    # bounded sample; here the bound doubles as the local/distributed
-    # switch, and below it the "sample" is exact (the full corpus), so
-    # results stay within the same f32-absorbed tolerance the oracle
-    # differential already accepts. Driver bound: CAP×DIM f64 ≈ 33 MB.
-    # Measured on the trained-IVF query at sf0.1: 3 rounds × ~0.4s of
-    # pure job-floor removed (2.2s → ~1.0s), invisible at real corpus
-    # sizes where the distributed rounds are scans, not floors.
     probe = base.select("vid", "vec").limit(_LOCAL_TRAIN_CAP + 1).collect()
     if not probe:
         # fail with a CLEAR error — all64.shape[1] on a 0-row array was
         # an IndexError deep in the local path (r9 review finding)
         raise ValueError("k-means codebook training requires a non-empty corpus")
     if len(probe) <= _LOCAL_TRAIN_CAP:
-        return _kmeans_train_local(probe, n_centroids, n_iterations)
+        probe.sort(key=lambda r: r["vid"])
+        vids = [int(r["vid"]) for r in probe[:n_centroids]]
+        mat = np.array([r["vec"] for r in probe[:n_centroids]], dtype=np.float32)
+        all64 = np.array([r["vec"] for r in probe], dtype=np.float64)
+        for _ in range(n_iterations):
+            _lloyd_update(mat, *_lloyd_partials([all64], mat))
+        return vids, mat
     del probe
-    # the n_centroids LOWEST ids (not `vid < n`, which silently yields
-    # an empty codebook when the id space doesn't start at 0)
-    init = base.orderBy("vid").limit(n_centroids).select("vid", "vec").collect()
-    vids = [r["vid"] for r in init]
-    mat = np.array([r["vec"] for r in init], dtype=np.float32)
+    vids, mat = seed_codebook(base, n_centroids)
     n_c = len(vids)
-
-    base_src = base.select("vec")
-    train_src = base_src
-
+    base_src = train_src = base.select("vec")
     for it in range(n_iterations):
-        cmat = mat.astype(np.float64)
-        cnrm = np.array([_np_norm(mat[i]) for i in range(n_c)], dtype=np.float64)
 
-        def partials(batches, _cmat=cmat, _cnrm=cnrm):
-            # r14 (guide §4.2): mapInArrow + list_mat — the vec column is
-            # consumed as ONE contiguous values buffer per batch and the
-            # C partial rows are emitted as one record batch; the old
-            # mapInPandas path built a Python ndarray OBJECT per row
-            # (Series.to_numpy → np.stack) on the input side and a
-            # per-row list on the output side. Accumulation order is
-            # unchanged (same 2048-row sub-chunks of the same Arrow
-            # batches), so the f64 partial sums are bit-identical.
+        def partials(batches, _mat=mat.copy()):
+            # the vec column is consumed as ONE contiguous values buffer
+            # per Arrow batch (list_mat); the C partial rows go out as
+            # one record batch
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
-            counts = np.zeros(n_c, dtype=np.int64)
-            sums = np.zeros((n_c, dim), dtype=np.float64)
-            for batch in batches:
-                V = list_mat(batch.column(0))  # (n, dim) f64, exact widening
-                for lo in range(0, len(V), 2048):
-                    chunk = V[lo : lo + 2048]
-                    idx = np.argmax(_assign_chunk(chunk, _cmat, _cnrm), axis=1)
-                    counts += np.bincount(idx, minlength=n_c)
-                    np.add.at(sums, idx, chunk)
+            counts, sums = _lloyd_partials((list_mat(b.column(0)) for b in batches), _mat)
             yield pa.record_batch(
                 [
                     pa.array(np.full(n_c, pid, dtype=np.int32)),
@@ -829,13 +631,11 @@ def _kmeans_train(
             partials, "pid int, cidx int, cnt long, sums array<double>"
         ).collect()
         total_cnt = np.zeros(n_c, dtype=np.int64)
-        total_sum = np.zeros((n_c, dim), dtype=np.float64)
+        total_sum = np.zeros((n_c, DIM), dtype=np.float64)
         for r in sorted(rows, key=lambda r: (r["pid"], r["cidx"])):
             total_cnt[r["cidx"]] += r["cnt"]
             total_sum[r["cidx"]] += np.asarray(r["sums"], dtype=np.float64)
-        for i in range(n_c):  # empty clusters keep their centroid
-            if total_cnt[i] > 0:
-                mat[i] = (total_sum[i] / total_cnt[i]).astype(np.float32)
+        _lloyd_update(mat, total_cnt, total_sum)
         if it == 0:
             # round 1's partials carry the corpus size (Σcnt) and the
             # native partition count (rows/C) for free — size rounds 2+
@@ -850,15 +650,6 @@ def _kmeans_train(
     return vids, mat
 
 
-def _kmeans_from_base(
-    base: DataFrame, n_centroids: int, n_iterations: int
-) -> DataFrame:
-    """DataFrame view of ``_kmeans_train`` — (vid, vec, nrm) local relation,
-    directly pluggable into ``assign_centroids`` / ``ivf_topk``."""
-    vids, mat = _kmeans_train(base, n_centroids, n_iterations)
-    return _codebook_df(base.sparkSession, vids, mat)
-
-
 def ivf_topk(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -867,170 +658,77 @@ def ivf_topk(
     n_centroids: int = 16,
     nprobe: int = 2,
     probe_filter: Column | None = None,
-    codebook: DataFrame | None = None,
     train_iterations: int = 0,
     index_cache_key=None,
 ) -> DataFrame:
     """IVF-Flat approximate top-k: coarse-quantize, search nprobe lists.
 
     Default codebook = the ``n_centroids`` lowest-id vectors (deterministic
-    sampled codebook — oracle-reproducible); pass
-    ``codebook=kmeans_codebook(df, ...)`` for trained centroids where
-    recall matters. Corpus vectors land in exactly one inverted list;
-    probes search their ``nprobe`` nearest lists. The candidate join is an
-    equi-join on centroid_id — bucket-sized work instead of full-corpus
-    work.
+    sampled codebook — oracle-reproducible); ``train_iterations > 0``
+    trains it with that many Lloyd rounds (``_kmeans_train``) where
+    recall matters. Either way the codebook is a driver-side literal and
+    ONE Arrow pass (``assign_ids_batch``, top-``nprobe`` lists plus the
+    fold norm) serves both search sides: element 0 of the stable top-n
+    ranking IS the corpus vector's one inverted list (argmax ≡ argsort[0]
+    under the same cos-desc/lowest-id tiebreak), and probes explode the
+    full list after the probe filter. The candidate join is an equi-join
+    on centroid_id — bucket-sized work instead of full-corpus work.
     """
-    if train_iterations > 0 and codebook is None:
-        # Trained codebook is DRIVER-SIDE (C×DIM floats), so the search
-        # assignment uses the literal path with the identical bit-exact
-        # ranking math (see assign_ids_batch — parity argument + test).
-        # Trained on THIS base — a separate kmeans_codebook(df) call would
-        # scan + norm + checkpoint the identical corpus twice.
-        #
-        # ONE Arrow pass computes top-nprobe assignments for every vector
-        # and is materialized so BOTH search sides read checkpoint blocks:
-        # element 0 of the stable top-n ranking IS the top-1 corpus
-        # assignment (argmax ≡ argsort[0] under the same cos-desc/
-        # lowest-centroid-id tiebreak), and the probe side explodes the
-        # full list after the probe filter.  vs the previous two separate
-        # ArrowEvalPython scans (corpus top-1 + probe top-n): one Python
-        # pass instead of two and a much simpler main-stage plan —
-        # measured 2.6s → 1.15s for the search phase at sf0.1.
-        # r14 (guide §4.2/§1.2): the pass now runs on the RAW (vid, vec)
-        # projection with the fold-norm fused into the kernel
-        # (assign_ids_nrm_batch — bit-identical to norm(), see its
-        # docstring): no _ensure_base, which deletes (a) the interpreted
-        # JVM norm fold over the corpus, and (b) the r13 HONEST-LIMIT
-        # second corpus checkpoint — the trained index now keeps exactly
-        # ONE corpus-sized block set (this assigned table). Training
-        # reads the raw scan too: the local path's bounded collect never
-        # needed norms, and a >cap distributed round is a column-pruned
-        # corpus scan per Lloyd round — the textbook k-means shape — with
-        # no corpus checkpoint write ahead of it.
-        from open_data_lakehouse_demo_spark.sources.io import materialize, session_cached
+    _check_int_ids(df, id_col, "ivf_topk")
+    from open_data_lakehouse_demo_spark.sources.io import materialize, session_cached
 
-        def build() -> DataFrame:
-            raw = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-            vids, mat = _kmeans_train(raw, n_centroids, train_iterations)
-            return materialize(
-                raw.select(
-                    assign_ids_nrm_batch(
-                        "vec", vids, mat, n_assign=nprobe
-                    ).alias("an"),
-                    "vid",
-                    "vec",
-                ).select(
-                    F.col("an.assigns").alias("assigns"),
-                    "vid",
-                    "vec",
-                    F.col("an.nrm").alias("nrm"),
-                )
-            )
-
+    if train_iterations > 0:
         # The trained index (codebook + per-vector assignments) is
-        # immutable for a given corpus AND build/search configuration:
+        # materialized so both search sides read checkpoint blocks, and
+        # is immutable for a given corpus AND build/search configuration:
         # callers name their corpus with ``index_cache_key`` and the
         # operator composes in every parameter the cached table bakes in
         # (n_centroids, train_iterations, nprobe — the assigns arrays are
         # nprobe-wide), so a same-corpus call with a different recall
         # knob can never silently reuse a mismatched index (r9 review
-        # finding). Production shape: a vector index is built once and
-        # queried many times. Without a key nothing is cached.
+        # finding). Without a key nothing is cached. The scan projection
+        # is built inside build(): a warm search never needs it, and each
+        # DataFrame projection costs an eager analysis on the driver.
+        def build() -> DataFrame:
+            raw = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+            vids, mat = _kmeans_train(raw, n_centroids, train_iterations)
+            return materialize(
+                raw.select("vid", "vec", assign_ids_batch("vec", vids, mat, nprobe).alias("an"))
+            )
+
         assigned = build() if index_cache_key is None else session_cached(
             df.sparkSession, "ivf_index",
             (index_cache_key, n_centroids, train_iterations, nprobe), build,
         )
-        corpus = assigned.select(
-            F.col("assigns")[0].alias("centroid_id"), "vid", "vec", "nrm"
-        )
-        probed_src = (
-            assigned.filter(probe_filter) if probe_filter is not None else assigned
-        )
-        probed = probed_src.select(
-            F.explode("assigns").alias("centroid_id"),
-            F.col("vid").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("nrm").alias("qnrm"),
-        )
-    elif codebook is not None:
-        # explicit codebook DataFrame (e.g. kmeans_codebook output): the
-        # lazy join path — base feeds corpus and probe assignment;
-        # materialize so the norm folds run once
-        base = _ensure_base(df, id_col, vec_col)
-        probes_src = base.filter(probe_filter) if probe_filter is not None else base
-        corpus = assign_centroids(base, codebook, n_assign=1).select(
-            "centroid_id", "vid", "vec", "nrm"
-        )
-        probed = assign_centroids(probes_src, codebook, n_assign=nprobe).select(
-            F.col("centroid_id"),
-            F.col("vid").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("nrm").alias("qnrm"),
-        )
     else:
-        # SAMPLED codebook (r14, guide §4.2/§2.4): the n_centroids
-        # lowest-id seeds are a bounded driver collect (TakeOrdered on
-        # the raw scan — the same justified tiny materialization as
-        # pq_seed_matrix), and both assignment passes run the fused
-        # assign+norm Arrow kernel against the literal codebook —
-        # bit-identical ranking/norms to the assign_centroids join path
-        # (assign_ids_nrm_batch docstring + parity tests). vs the r13
-        # join form this deletes per query: the interpreted corpus norm
-        # pass, the corpus-wide (vid, vec, nrm) localCheckpoint, two
-        # broadcast-join n×C pair fan-outs through dot_batch, and the
-        # payload-carrying max(struct) SortAggregate / ranking window.
-        # (r13's A/B of a literal path measured a wash — but that
-        # variant still paid _ensure_base; with the norm fused into the
-        # kernel the checkpoint goes away entirely, which is what moves
-        # the number. Interleaved fresh-subprocess A/B, 4 pairs, min:
-        # cosine_topk_ivf 2.25 → 1.25 s (0.56×), semantic_dedup 1.48 →
-        # 1.18 s (0.80×) — details in OPTIMIZATION_r14.md.)
         raw = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        seeds = raw.orderBy("vid").limit(n_centroids).collect()
-        if not seeds:
-            from pyspark.sql import types as T
-
+        vids, mat = seed_codebook(raw, n_centroids)
+        if not vids:
             id_type = df.schema[id_col].dataType
-            return df.sparkSession.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField("query_id", id_type),
-                        T.StructField("neighbor_id", id_type),
-                        T.StructField("cosine", T.DoubleType()),
-                    ]
-                ),
-            )
-        seeds.sort(key=lambda r: r["vid"])
-        svids = [int(r["vid"]) for r in seeds]
-        smat = np.array([r["vec"] for r in seeds], dtype=np.float32)
-        corpus = raw.select(
-            assign_ids_nrm_batch("vec", svids, smat, n_assign=1).alias("an"),
-            "vid",
-            "vec",
-        ).select(
-            F.col("an.assigns")[0].alias("centroid_id"),
-            "vid",
-            "vec",
-            F.col("an.nrm").alias("nrm"),
+            return _empty_pairs(df.sparkSession, id_type, id_type)
+        assigned = raw.select(
+            "vid", "vec", assign_ids_batch("vec", vids, mat, nprobe).alias("an")
         )
-        probes_src = raw.filter(probe_filter) if probe_filter is not None else raw
-        probed = probes_src.select(
-            assign_ids_nrm_batch("vec", svids, smat, n_assign=nprobe).alias("an"),
-            "vid",
-            "vec",
-        ).select(
-            F.explode("an.assigns").alias("centroid_id"),
-            F.col("vid").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("an.nrm").alias("qnrm"),
-        )
+    corpus = assigned.select(
+        F.col("an.assigns")[0].alias("centroid_id"),
+        "vid",
+        "vec",
+        F.col("an.nrm").alias("nrm"),
+    )
+    probed_src = (
+        assigned.filter(probe_filter) if probe_filter is not None else assigned
+    )
+    probed = probed_src.select(
+        F.explode("an.assigns").alias("centroid_id"),
+        F.col("vid").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("an.nrm").alias("qnrm"),
+    )
     cand = corpus.join(F.broadcast(probed), "centroid_id").filter(
         F.col("vid") != F.col("query_id")
     )
     # (query_id, neighbor_id) is UNIQUE by construction: every corpus
-    # vector carries exactly one centroid (assigns[0] / n_assign=1) and
+    # vector carries exactly one centroid (assigns[0]) and
     # the probe's nprobe list is distinct, so a pair can collide through
     # at most one inverted list — no dedup aggregate needed (the former
     # groupBy/max was a dead full shuffle of the scored candidates on
@@ -1065,7 +763,7 @@ def lsh_near_dup_pairs(
 
     # base (vec + norm) feeds bucket generation and both verify sides —
     # materialize so the norm folds run once (signature-table shape)
-    base = _ensure_base(df, id_col, vec_col)
+    base = materialize(_with_norm(df, id_col, vec_col))
     # bucket stage = Arrow-batched matmul, proven bit-identical to the
     # lsh_bucket fold (see lsh_buckets_batch docstring + parity test);
     # materialized because BOTH sides of the candidate self-join read it —
@@ -1107,7 +805,6 @@ def semantic_dedup_pairs(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     threshold: float = 0.25,
-    codebook: DataFrame | None = None,
     assignment: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al., arXiv:2303.09540):
@@ -1125,45 +822,28 @@ def semantic_dedup_pairs(
     scale; locally 16 over 500 vectors keeps the same ~n/32 cluster
     width). The self-join is an equi-join on centroid_id; with cluster
     counts in the tens of thousands the join keys spread evenly and AQE
-    splits any skewed list. Default codebook = lowest-id sample (oracle-
-    reproducible); pass kmeans_codebook(...) for trained clusters where
-    removal quality matters.
+    splits any skewed list. Codebook = lowest-id sample (oracle-
+    reproducible), assigned by the ``assign_ids_batch`` kernel.
 
     HONEST LIMIT: with no ``assignment``, both sides of the self-join
     re-derive the assignment lineage (the assigned corpus is fact-scale,
     outside io.materialize's reduced-intermediate contract), so the
-    broadcast-assign scan runs twice — CPU, not storage. ``assignment``
-    is the production escape (the usual SemDeDup shape): pass a
-    PERSISTED cluster-assignment table — the (centroid_id, vid, vec,
-    nrm) relation assign_centroids(base, centroids, n_assign=1)
-    produces, e.g. written once by the ivf_ingest_stream sink or a prior
-    job — and the scan is paid once at write time (same parameter
+    assignment scan runs twice — CPU, not storage; a re-derived side is
+    one column-pruned scan + one Arrow pass. ``assignment`` is the
+    production escape (the usual SemDeDup shape): pass a PERSISTED
+    cluster-assignment table — the (centroid_id, vid, vec, nrm) relation
+    the ``streaming.ingest.ivf_ingest_stream`` sink or a prior job
+    writes — and the scan is paid once at write time (same parameter
     pattern as the scrub family's ``index`` and the minhash family's
-    ``sets``). ``codebook``/``n_clusters`` are ignored when it is given.
+    ``sets``). ``n_clusters`` is ignored when it is given.
     """
+    _check_int_ids(df, id_col, "semantic_dedup_pairs")
     if assignment is not None:
         assigned = assignment.select("centroid_id", "vid", "vec", "nrm")
-    elif codebook is not None:
-        base = _ensure_base(df, id_col, vec_col)
-        assigned = assign_centroids(base, codebook, n_assign=1).select(
-            "centroid_id", "vid", "vec", "nrm"
-        )
     else:
-        # SAMPLED codebook (r14, same restructure as ivf_topk's sampled
-        # arm): bounded seeds collect + the fused assign+norm Arrow
-        # kernel on the raw scan — bit-identical to the
-        # assign_centroids join path (cross-path equivalence pinned by
-        # test_semantic_dedup_assignment_param_equivalence). The HONEST
-        # LIMIT below still applies: each self-join side re-derives this
-        # lineage, but a re-derived side is now one column-pruned scan +
-        # one Arrow pass instead of a checkpoint read + broadcast n×C
-        # fan-out + payload-carrying argmax aggregate.
         raw = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        seeds = sorted(
-            raw.orderBy("vid").limit(n_clusters).collect(),
-            key=lambda r: r["vid"],
-        )
-        if not seeds:  # empty corpus ⇒ empty pair output, schema kept
+        vids, mat = seed_codebook(raw, n_clusters)
+        if not vids:  # empty corpus ⇒ empty pair output, schema kept
             assigned = raw.select(
                 F.lit(None).cast("bigint").alias("centroid_id"),
                 "vid",
@@ -1171,13 +851,8 @@ def semantic_dedup_pairs(
                 F.lit(0.0).alias("nrm"),
             ).limit(0)
         else:
-            svids = [int(r["vid"]) for r in seeds]
-            smat = np.array([r["vec"] for r in seeds], dtype=np.float32)
-            assigned = raw.select(
-                assign_ids_nrm_batch("vec", svids, smat, n_assign=1).alias("an"),
-                "vid",
-                "vec",
-            ).select(
+            an = assign_ids_batch("vec", vids, mat).alias("an")
+            assigned = raw.select("vid", "vec", an).select(
                 F.col("an.assigns")[0].alias("centroid_id"),
                 "vid",
                 "vec",

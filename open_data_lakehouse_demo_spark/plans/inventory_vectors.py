@@ -244,7 +244,7 @@ SELECT query_id, neighbor_id, cosine FROM (
 )
 def cosine_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat top-5 with a TRAINED codebook: 3 rounds of distributed
-    Lloyd's k-means (operators/similarity.py kmeans_codebook) replace the
+    Lloyd's k-means (operators/similarity.py _kmeans_train) replace the
     sampled lowest-id quantizer — the production IVF training step.
     Hash-checked since r7: a FIXED round count unrolls into plain SQL
     (_ivf_kmeans_oracle), so the full 3-round refinement gets the DuckDB
@@ -257,9 +257,9 @@ def cosine_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=16,
         nprobe=2,
         probe_filter=F.col("vid") % _PROBE_MOD == 0,
-        # train INSIDE ivf_topk so the (vid, vec, nrm) corpus table is
-        # built once and shared between training and search; the trained
-        # index is session-cached (built once, searched repeatedly)
+        # train INSIDE ivf_topk so one corpus scan feeds training and the
+        # assignment pass; the trained index is session-cached (built
+        # once, searched repeatedly)
         train_iterations=3,
         index_cache_key=(sf_dir, 3, 16, 2),
     )
@@ -401,38 +401,35 @@ def _ann_ranked_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers go through _ann_ranked_pairs, which materializes and caches
     it per (application, sf_dir).
 
-    HONEST LIMIT (eval harness only): probe_cids broadcasts, and the
-    probe set is corpus-proportional under the vid % _PROBE_MOD filter —
+    Assignment is the IVF operators' own: the 16-seed codebook
+    (sim.seed_codebook) ranked by sim.rank_codebook — on the driver for
+    the collected probe batch (each probe's top-max(_SWEEP_NPROBES)
+    lists, and its fold norm), and by the sim.assign_ids_batch kernel in
+    the same corpus projection as the pair fan-out (each neighbour's one
+    list, assigns[0], and its fold norm). No assignment join, no argmax
+    aggregate, no probe-side window.
+
+    HONEST LIMIT (eval harness only): the probe set is corpus-proportional
+    under the vid % _PROBE_MOD filter and rides the plan as literals —
     acceptable here because the brute-force ground-truth arm is ALREADY
     |probes|·n work, so the eval batch must be small for the measurement
     to be feasible at all; a production tuning run samples a fixed-size
     probe batch. The materialized table keeps only the 3+3 small rank
     columns — vectors and cosines are dropped before storage."""
+    import numpy as np
     from pyspark.sql import Window
 
     emb = t(spark, sf_dir, "embeddings")
-    # ONE materialized (vid, vec, nrm) norm table feeds everything; the
-    # probe×corpus cosine PAIR table is scored ONCE — the IVF arm is the
-    # same pairs restricted by list membership, identical cosines by
-    # construction.
-    base = materialize(sim._with_norm(emb, "vec_id", "embedding"))
-    p = base.filter(F.col("vid") % _PROBE_MOD == 0)
-    # r13 (guide §8/§4.2, same fix as brute_force_topk): the pair fan-out
-    # previously shipped BOTH 64-float vectors through the Arrow boundary
-    # per (corpus, probe) pair. The probe batch is collected to a
-    # driver-side matrix (reading the base checkpoint — the same driver
-    # materialization the broadcast already performed), each corpus
-    # vector crosses the boundary once and returns its P-wide exact-fold
-    # dot array, and the pair rows are reconstituted JVM-side from
-    # literal probe id/norm arrays — division and ranking semantics
-    # byte-identical to the join form (probe_dots_batch parity).
-    import numpy as np
-
-    # bounded collect (r14, same guard as brute_force_topk): the arm's
-    # probe batch must stay driver-sized; fail loudly beyond the cap
-    # instead of OOMing the driver
+    raw = emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
+    cvids, cmat = sim.seed_codebook(raw, 16)
+    # bounded collect (same guard as brute_force_topk): the arm's probe
+    # batch must stay driver-sized; fail loudly beyond the cap instead of
+    # OOMing the driver
     p_rows = sorted(
-        p.limit(sim._PROBE_COLLECT_CAP + 1).collect(), key=lambda r: r["vid"]
+        raw.filter(F.col("vid") % _PROBE_MOD == 0)
+        .limit(sim._PROBE_COLLECT_CAP + 1)
+        .collect(),
+        key=lambda r: r["vid"],
     )
     if len(p_rows) > sim._PROBE_COLLECT_CAP:
         raise ValueError(
@@ -440,52 +437,43 @@ def _ann_ranked_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{sim._PROBE_COLLECT_CAP} rows; sample a bounded probe batch "
             "for recall evaluation"
         )
-    qvids = F.lit([int(r["vid"]) for r in p_rows])
-    qnrms = F.lit([float(r["nrm"]) for r in p_rows])
     pmat32 = np.array([r["vec"] for r in p_rows], dtype=np.float32)
-    pairs = (
-        base.select(
+    ptop, pnrm = sim.rank_codebook(
+        pmat32.astype(np.float64), cmat, max(_SWEEP_NPROBES)
+    )
+    qvids = F.lit([int(r["vid"]) for r in p_rows])
+    qnrms = F.lit([float(x) for x in pnrm])  # ≡ the JVM norm() fold
+    qlists = F.lit(np.array(cvids, dtype=np.int64)[ptop].tolist())
+    # each corpus vector crosses the Arrow boundary once per kernel: its
+    # P-wide exact-fold dot array against the probe matrix, and its list
+    # id + fold norm; the pair rows are reconstituted JVM-side from the
+    # literal probe arrays (division and ranking byte-identical to the
+    # join form — probe_dots_batch / assign_ids_batch parity). The
+    # assignment gets its own projection below the generator: beside
+    # posexplode Spark evaluates it after the Generate, once per PAIR.
+    pidx = F.col("pidx") + 1
+    pos = F.array_position(F.element_at(qlists, pidx), F.col("ncid"))
+    ann = (
+        raw.select("vid", "vec", sim.assign_ids_batch("vec", cvids, cmat).alias("an"))
+        .select(
             "vid",
-            "nrm",
+            "an",
             F.posexplode(sim.probe_dots_batch("vec", pmat32)).alias("pidx", "dot"),
         )
         .select(
-            F.element_at(qvids, F.col("pidx") + 1).alias("query_id"),
+            F.element_at(qvids, pidx).alias("query_id"),
             F.col("vid").alias("neighbor_id"),
-            (
-                F.col("dot")
-                / (F.element_at(qnrms, F.col("pidx") + 1) * F.col("nrm"))
-            ).alias("cosine"),
+            (F.col("dot") / (F.element_at(qnrms, pidx) * F.col("an.nrm"))).alias("cosine"),
+            "pidx",
+            F.col("an.assigns")[0].alias("ncid"),
         )
         .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    centroids = base.orderBy("vid").limit(16)
-    corpus_cid = sim.assign_centroids(base, centroids, n_assign=1).select(
-        F.col("vid").alias("neighbor_id"), F.col("centroid_id").alias("ncid")
-    )
-    probe_cids = sim.assign_centroids(
-        p, centroids, n_assign=max(_SWEEP_NPROBES)
-    ).select(
-        F.col("vid").alias("query_id"),
-        F.col("centroid_id").alias("qcid"),
-        F.col("crank").alias("crank"),
-    )
-    # membership rank instead of a filtering join: each pair matches at
-    # most one (ncid == qcid) row — a neighbor has ONE list and the
-    # probe's lists are distinct — so the left join never fans out
-    ann = (
-        pairs.join(corpus_cid, "neighbor_id")
-        .join(
-            F.broadcast(probe_cids),
-            (pairs["query_id"] == probe_cids["query_id"])
-            & (F.col("qcid") == F.col("ncid")),
-            "left",
-        )
+        # 1-based position of the neighbour's list among the probe's
+        # lists; array_position's 0 (absent) must become NULL, or it
+        # would pass every pair_rank <= np test
         .select(
-            pairs["query_id"].alias("query_id"),
-            "neighbor_id",
-            "cosine",
-            F.col("crank").alias("pair_rank"),
+            "query_id", "neighbor_id", "cosine",
+            F.when(pos > 0, pos).cast("int").alias("pair_rank"),
         )
     )
     wo = Window.partitionBy("query_id").orderBy(

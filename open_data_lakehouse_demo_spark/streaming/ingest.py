@@ -25,9 +25,10 @@ Scale shape at 100 TB/day ingest:
     Bloom-gated incremental path (incremental_near_dups' pattern).
   - ivf_ingest_stream: the codebook is a driver-side literal (C×DIM
     floats — same HONEST LIMIT as operators/similarity.assign_ids_batch);
-    assignment is one Arrow-batched projection per micro-batch and the
-    sink partitions by centroid_id, so the inverted lists ARE the
-    directory layout and a later search job prunes lists by path.
+    assignment and the vector norm are one Arrow-batched projection per
+    micro-batch and the sink partitions by centroid_id, so the inverted
+    lists ARE the directory layout and a later search job prunes lists
+    by path.
 """
 
 from __future__ import annotations
@@ -95,21 +96,21 @@ def ivf_ingest_stream(
 ) -> DataFrame:
     """Assign arriving vectors to their IVF inverted list at ingest.
 
-    (centroid_id, vid, vec, nrm) per input vector — the SAME
-    bit-exact literal-codebook ranking as the batch search corpus side
-    (operators/similarity.assign_ids_batch top-1, see the parity
-    argument there), so a search job over the partitioned sink and the
-    batch ivf_topk over the same rows consult identical lists. Write
-    with ``.partitionBy("centroid_id")`` to make the inverted lists
-    the directory layout."""
+    (centroid_id, vid, vec, nrm) per input vector from ONE pass of the
+    kernel the batch search corpus side runs
+    (operators/similarity.assign_ids_batch: top-1 list id and the fold
+    norm, bit-identical to ``norm()`` — see the parity argument there),
+    so a search job over the partitioned sink and the batch ivf_topk
+    over the same rows consult identical lists and norms. Write with
+    ``.partitionBy("centroid_id")`` to make the inverted lists the
+    directory layout."""
     from open_data_lakehouse_demo_spark.operators import similarity as sim
 
     return vecs.select(
-        sim.assign_ids_batch(vec_col, vids, mat)[0].alias("centroid_id"),
+        sim.assign_ids_batch(vec_col, vids, mat).alias("an"),
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
-        sim.norm(F.col(vec_col)).alias("nrm"),
-    )
+    ).select(F.col("an.assigns")[0].alias("centroid_id"), "vid", "vec", "an.nrm")
 
 
 def init_scrub_ingest(spark, index_path: str, clean_path: str, like: DataFrame,

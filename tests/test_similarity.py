@@ -158,47 +158,84 @@ def test_bucket_udf_parity(spark):
         assert list(r["bb"]) == list(r["be"])
 
 
-def test_literal_assignment_matches_join_path_with_zero_vector(spark):
-    """Zero-norm vectors/centroids: Spark's non-ANSI x/0.0 is NULL (ranks
-    last); the literal path maps non-finite numpy cosines to -inf. Both
-    paths must produce identical assignments on a corpus containing a
-    zero vector — including the all-NULL fallthrough to the lowest id."""
-    import numpy as np
+def _sql_ranking(base, cents, n):
+    """Test-local reference for centroid assignment: the rule every oracle
+    encodes — CROSS JOIN the codebook, fold cosine (sim.cosine; NULL on a
+    zero norm), ROW_NUMBER() OVER (PARTITION BY vid ORDER BY ccos DESC,
+    centroid_id) — as {vid: (ids best first)}."""
+    c = cents.select(
+        F.col("vid").alias("centroid_id"), F.col("vec").alias("cvec"),
+        F.col("nrm").alias("cnrm"),
+    )
+    base.crossJoin(c).select(
+        "vid", "centroid_id",
+        sim.cosine(F.col("vec"), F.col("cvec"), F.col("nrm"), F.col("cnrm")).alias("ccos"),
+    ).createOrReplaceTempView("ref_scored")
+    rows = base.sparkSession.sql(
+        f"""SELECT vid, centroid_id, rn FROM (
+              SELECT vid, centroid_id, ROW_NUMBER() OVER (
+                PARTITION BY vid ORDER BY ccos DESC, centroid_id) AS rn
+              FROM ref_scored) WHERE rn <= {n}"""
+    ).collect()
+    out = {}
+    for r in sorted(rows, key=lambda r: (r["vid"], r["rn"])):
+        out.setdefault(r["vid"], []).append(r["centroid_id"])
+    return {v: tuple(ids) for v, ids in out.items()}
 
-    rng = np.random.default_rng(7)
-    vs = rng.normal(size=(12, sim.DIM)).astype(np.float32)
-    vs[3] = 0.0  # zero vector: NULL cosine vs every centroid
-    rows = [(int(i), [float(x) for x in vs[i]]) for i in range(len(vs))]
-    df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<FLOAT>")
-    base = sim._with_norm(df, "vec_id", "embedding")
-    cents_rows = base.orderBy("vid").limit(4).select("vid", "vec").collect()
-    vids = [r["vid"] for r in cents_rows]
-    mat = np.array([r["vec"] for r in cents_rows], dtype=np.float32)
-    lit = {
-        r["vid"]: r["cid"]
+
+@pytest.mark.parametrize(
+    "corpus,n_cent,n_assign",
+    [("fixture", 4, 2), ("fixture", 3, 5), ("fixture", 1, 2),
+     ("zero", 4, 1), ("zero", 4, 2)],
+)
+def test_assign_ids_batch_matches_sql_ranking(spark, emb_df, corpus, n_cent, n_assign):
+    """The one assignment kernel against the SQL ranking every oracle
+    encodes: assigns equal the reference ranking (including nprobe > C,
+    C = 1, and a zero vector whose NULL/-inf cosines rank last), nrm is
+    BIT-equal to the norm() expression fold (downstream cosine hashes
+    depend on it), every list holds min(n, C) distinct codebook ids, and
+    the zero vector falls through to the lowest centroid id."""
+    if corpus == "fixture":
+        df, _ = emb_df
+    else:
+        rng = np.random.default_rng(7)
+        vs = rng.normal(size=(12, sim.DIM)).astype(np.float32)
+        vs[3] = 0.0  # zero vector: NULL cosine vs every centroid
+        df = spark.createDataFrame(
+            [(int(i), [float(x) for x in vs[i]]) for i in range(len(vs))],
+            "vec_id BIGINT, embedding ARRAY<FLOAT>",
+        )
+    base = df.select(
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"),
+        sim.norm(F.col("embedding")).alias("nrm"),
+    )
+    vids, mat = sim.seed_codebook(base, n_cent)
+    got = {
+        r["vid"]: (tuple(r["an"]["assigns"]), r["an"]["nrm"], r["nrm"])
         for r in base.select(
-            "vid", sim.assign_ids_batch("vec", vids, mat)[0].alias("cid")
+            "vid", "nrm", sim.assign_ids_batch("vec", vids, mat, n_assign).alias("an")
         ).collect()
     }
-    joined = {
-        r["vid"]: r["centroid_id"]
-        for r in sim.assign_centroids(
-            base, sim._codebook_df(spark, vids, mat), n_assign=1
-        ).collect()
-    }
-    assert lit == joined
-    assert lit[3] == min(vids)  # all-NULL/-inf row -> lowest centroid id
+    ref = _sql_ranking(base, base.orderBy("vid").limit(n_cent), n_assign)
+    assert {v: a for v, (a, _, _) in got.items()} == ref
+    assert all(_bits(kn) == _bits(fn) for _, kn, fn in got.values())
+    want = min(n_assign, n_cent)
+    assert all(
+        len(a) == want and len(set(a)) == want and set(a) <= set(vids)
+        for a, _, _ in got.values()
+    )
+    if corpus == "zero":
+        assert got[3][0][0] == min(vids)  # all-NULL/-inf row -> lowest id
 
 
-def test_kmeans_codebook_matches_numpy_lloyd(emb_df):
+def test_kmeans_train_matches_numpy_lloyd(emb_df):
     """3 Lloyd rounds on the 40-vector fixture must match a numpy
     reference (same deterministic init, same cosine assignment rule)."""
     df, vecs = emb_df  # vecs: float64 copy of the float32 fixture
     k, iters = 4, 3
-    got = {
-        int(r["vid"]): np.array(r["vec"], dtype=np.float64)
-        for r in sim.kmeans_codebook(df, n_centroids=k, n_iterations=iters).collect()
-    }
+    raw = df.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
+    vids, mat = sim._kmeans_train(raw, k, iters)
+    got = {int(v): mat[i].astype(np.float64) for i, v in enumerate(vids)}
     # numpy reference
     cents = {i: vecs[i].copy() for i in range(k)}
     for _ in range(iters):
@@ -206,7 +243,7 @@ def test_kmeans_codebook_matches_numpy_lloyd(emb_df):
         assign = {}
         for vid in range(len(vecs)):
             v = vecs[vid] / np.linalg.norm(vecs[vid])
-            # cosine desc, centroid-id asc tiebreak — mirror assign_centroids
+            # cosine desc, centroid-id asc tiebreak — the oracles' rule
             best = max(cn, key=lambda i: (float(v @ cn[i]), -i))
             assign.setdefault(best, []).append(vid)
         for i in range(k):
@@ -240,7 +277,7 @@ def test_ivf_kmeans_recall_not_worse_than_sampled(emb_df):
                            probe_filter=F.col("vid") < 10)
     trained = sim.ivf_topk(
         df, k=3, n_centroids=4, nprobe=1, probe_filter=F.col("vid") < 10,
-        codebook=sim.kmeans_codebook(df, n_centroids=4, n_iterations=3),
+        train_iterations=3,
     )
     assert recall(trained) >= recall(sampled) - 1  # allow one-probe jitter
 
@@ -270,16 +307,17 @@ def test_semantic_dedup_keep_first_semantics(spark):
 
 def test_semantic_dedup_assignment_param_matches_internal_build(spark, tmp_path):
     """The production SemDeDup shape (r10): a PERSISTED cluster-assignment
-    table passed via ``assignment`` must yield byte-identical removals to
-    the internal assign path with the same codebook — and the persisted
-    path must not re-derive the assignment lineage (same contract family
-    as the scrub ``index`` and minhash ``sets`` params)."""
+    table passed via ``assignment`` — written by its named producer, the
+    ivf_ingest_stream sink, with the same seed codebook — must yield
+    byte-identical removals to the internal assign path (same contract
+    family as the scrub ``index`` and minhash ``sets`` params)."""
     from open_data_lakehouse_demo_spark.operators import similarity as sim
     from open_data_lakehouse_demo_spark.sources.io import read_parquet
+    from open_data_lakehouse_demo_spark.streaming import ingest
 
     emb = read_parquet(spark, f"{SF_DIR}/embeddings.parquet").limit(300)
-    base = sim._ensure_base(emb, "vec_id", "embedding")
-    centroids = base.orderBy("vid").limit(16)
+    raw = emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
+    vids, mat = sim.seed_codebook(raw, 16)
     want = sorted(
         (r["removed_id"], r["keeper_id"], round(r["cosine_to_keeper"], 9))
         for r in sim.semantic_dedup_pairs(
@@ -289,9 +327,7 @@ def test_semantic_dedup_assignment_param_matches_internal_build(spark, tmp_path)
     assert want
     # persist the assignment once (the usual pipeline shape), read back
     apath = str(tmp_path / "assignment")
-    sim.assign_centroids(base, centroids, n_assign=1).select(
-        "centroid_id", "vid", "vec", "nrm"
-    ).write.parquet(apath)
+    ingest.ivf_ingest_stream(emb, vids, mat).write.parquet(apath)
     got = sorted(
         (r["removed_id"], r["keeper_id"], round(r["cosine_to_keeper"], 9))
         for r in sim.semantic_dedup_pairs(
@@ -374,7 +410,7 @@ def test_pq_batch_kernels_match_relational_twins(spark):
 
     emb = read_parquet(spark, f"{SF_DIR}/embeddings.parquet")
     base = emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
-    _, mat32 = pq.pq_seed_matrix(base)
+    _, mat32 = sim.seed_codebook(base, pq.NCODES)
 
     rel_codes = {r["vid"]: list(r["codes"]) for r in
                  pq.pq_encode(base, pq.pq_codebook(base)).collect()}
@@ -572,14 +608,12 @@ def test_persisted_sq8_ivf_index_matches_inmemory(spark, tmp_path):
     # partition pruning: the probed-id IN filter sits on the partition
     # column, so the scan reads only those centroid directories
     import glob
+    raw = emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     probe_cids = {
         r["cid"] for r in probes.select(
-            F.explode(__import__(
-                "open_data_lakehouse_demo_spark.operators.similarity",
-                fromlist=["similarity"],
-            ).assign_ids_batch("embedding", *pq.pq_seed_matrix(
-                emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")),
-                n=16), 2)).alias("cid")
+            F.explode(
+                sim.assign_ids_batch("embedding", *sim.seed_codebook(raw, 16), 2)["assigns"]
+            ).alias("cid")
         ).distinct().collect()
     }
     all_parts = len(glob.glob(f"{idx}/lists/centroid_id=*"))
@@ -734,7 +768,7 @@ def test_kmeans_train_empty_corpus_raises_cleanly(spark):
     from open_data_lakehouse_demo_spark.operators import similarity as sim
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    base = sim._ensure_base(empty, "vec_id", "embedding")
+    base = empty.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     with _pytest.raises(ValueError, match="non-empty"):
         sim._kmeans_train(base, 8, 1)
 
@@ -754,42 +788,6 @@ def test_probe_collect_cap_raises_loudly(emb_df, monkeypatch):
     assert ok.count() == 6
 
 
-def test_assign_ids_nrm_batch_parity(emb_df):
-    """r14 fused kernel: assign_ids_nrm_batch's assigns must be
-    byte-identical to assign_ids_batch and its nrm bit-identical to the
-    norm() expression fold (the trained-IVF arm substitutes it for the
-    _ensure_base norm column, so the downstream cosine hashes depend on
-    exact equality). Codebooks smaller than the request (nprobe > C,
-    and C = 1) return each of the C ids once."""
-    df, _ = emb_df
-    base = df.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
-    for n_cent, n_assign in [(4, 2), (3, 5), (1, 2)]:
-        rows = base.orderBy("vid").limit(n_cent).collect()
-        vids = [r["vid"] for r in rows]
-        mat = np.array([r["vec"] for r in rows], dtype=np.float32)
-        fused = {
-            r["vid"]: (tuple(r["an"]["assigns"]), r["an"]["nrm"])
-            for r in base.select(
-                "vid",
-                sim.assign_ids_nrm_batch("vec", vids, mat, n_assign=n_assign).alias("an"),
-            ).collect()
-        }
-        ref = {
-            r["vid"]: (tuple(r["assigns"]), r["nrm"])
-            for r in base.select(
-                "vid",
-                sim.assign_ids_batch("vec", vids, mat, n_assign=n_assign).alias("assigns"),
-                sim.norm(F.col("vec")).alias("nrm"),
-            ).collect()
-        }
-        assert fused == ref  # exact equality incl. the norm doubles
-        want = min(n_assign, n_cent)
-        assert all(
-            len(a) == want and len(set(a)) == want and set(a) <= set(vids)
-            for a, _nrm in fused.values()
-        ), (n_cent, n_assign)
-
-
 def test_ivf_topk_small_codebook_and_empty_int_ids(emb_df):
     """The sampled-codebook arm with nprobe above the codebook size probes
     every list (here: exact top-k), and an empty corpus keeps the id
@@ -807,6 +805,40 @@ def test_ivf_topk_small_codebook_and_empty_int_ids(emb_df):
     empty = sim.ivf_topk(ints.limit(0), k=2, n_centroids=3, nprobe=5)
     assert empty.collect() == []
     assert empty.schema == full.schema
+    # brute force: both id columns take the id column's type, whether or
+    # not the probe set is empty
+    for corpus, id_type in [(ints, "int"), (df, "bigint")]:
+        full = sim.brute_force_topk(corpus, corpus.filter(F.col("vec_id") < 2), k=2)
+        empty = sim.brute_force_topk(corpus, corpus.limit(0), k=2)
+        assert full.count() == 4 and empty.collect() == []
+        assert empty.schema == full.schema
+        assert [f.dataType.simpleString() for f in full.schema.fields] == [
+            id_type, id_type, "double"
+        ]
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda df: sim.brute_force_topk(df, df, k=2),
+        lambda df: sim.ivf_topk(df, k=2, n_centroids=2),
+        lambda df: sim.semantic_dedup_pairs(df, n_clusters=2),
+    ],
+    ids=["brute_force_topk", "ivf_topk", "semantic_dedup_pairs"],
+)
+def test_string_ids_fail_before_any_job(spark, emb_df, run):
+    """A STRING id column is rejected by name and type when the plan is
+    built — not as an int() error after a Spark job has run."""
+    df, _ = emb_df
+    strs = df.select(F.concat(F.lit("a"), "vec_id").alias("vec_id"), "embedding")
+    sc = spark.sparkContext
+    sc.setJobGroup("string-ids", "no job may run")
+    try:
+        with pytest.raises(ValueError, match="'vec_id' has type string"):
+            run(strs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("string-ids") == []
 
 
 def test_kmeans_distributed_rounds_match_local(emb_df, monkeypatch):

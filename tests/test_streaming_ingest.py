@@ -152,7 +152,7 @@ def test_ivf_ingest_stream_matches_batch_assignment(spark, tmp_path):
     emb.limit(300).coalesce(1).write.parquet(src)
     batch = spark.read.parquet(src)
 
-    base = sim._ensure_base(batch, "vec_id", "embedding")
+    base = batch.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     vids, mat = sim._kmeans_train(base, 8, 1)
 
     expected = _rows(ingest.ivf_ingest_stream(batch, vids, mat))

@@ -256,18 +256,21 @@ CHECKS = [
     ),
     (
         "ann_ranked_pairs_arm",
-        ["2x:Window (", "BroadcastNestedLoopJoin|BroadcastHashJoin",
+        ["1x:Window (", "Generate", "0x:Join", "0x:Aggregate",
          "0x:CartesianProduct"],
         "The shared ground-truth substrate behind ann_recall_eval AND "
-        "ann_recall_sweep (_ann_ranked_pairs_plan): the probe batch "
-        "broadcasts against the corpus for the pair fan-out, and ONE "
-        "(cosine DESC, neighbor) window sort over the pairs carries the "
-        "exact rank plus every nprobe level's cumulative admission count "
-        "(same partition/order spec ⇒ Catalyst fuses them into a single "
-        "Window operator). The only other Window is the probe-side "
-        "nprobe-rank assignment — probe-batch-sized, "
-        "WindowGroupLimit-pruned (corpus-side assignment is the hash-agg "
-        "argmax, windowless). Consumers read the materialized result.",
+        "ann_recall_sweep (_ann_ranked_pairs_plan): ONE corpus scan feeds "
+        "two Arrow kernels — each vector's P-wide exact-fold dot array "
+        "against the driver-collected probe batch (posexploded into the "
+        "pair rows by a Generate) and its one inverted list from the "
+        "shared assignment kernel; each probe's swept lists are ranked "
+        "on the driver by the same ranking routine and ride the plan as "
+        "literals, so pair_rank is an array_position, not a join. ONE "
+        "(cosine DESC, neighbor) window sort carries the exact rank plus "
+        "every nprobe level's cumulative admission count (same "
+        "partition/order spec ⇒ Catalyst fuses them into a single Window "
+        "operator) — no assignment join, no argmax aggregate, no "
+        "probe-side window. Consumers read the materialized result.",
     ),
     (
         "ann_recall_sweep",
