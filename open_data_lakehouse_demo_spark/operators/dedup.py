@@ -36,8 +36,6 @@ Scale design (local tests ≈ 500-5k docs; target = 10^9+ docs):
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -92,11 +90,6 @@ def shingle_hash_set(text: Column | str, n: int = 3) -> Column:
     return F.array_sort(
         F.array_distinct(F.transform(word_shingles(tokenize(text), n), token_hash))
     )
-
-
-def _perm(j: int):
-    a, b = MINHASH_A[j], MINHASH_B[j]
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
 
 
 def minhash_signature(shingle_hashes: str = "sh") -> Column:
@@ -474,81 +467,6 @@ BLOOM_K = 4  # hash functions: 4 disjoint 8-hex slices of one md5 digest
 # (the eval suite), never to the growing corpus it filters.
 
 
-def bloom_digest(s: Column) -> Column:
-    """The one md5 digest all BLOOM_K bit positions slice (hex chars
-    8j+1..8j+8 → independent 32-bit values; 4×8 hex consumes the whole
-    128-bit digest) — the classic one-hash/partitioned-digest Bloom
-    construction, at identical FP behavior to K salted hashes.
-
-    Callers probing a corpus should PROJECT this column once and pass
-    it to ``bloom_contains``: FilterExec does not eliminate common
-    subexpressions across conjuncts, so an md5 embedded in each of the
-    K bit tests would be recomputed K times per probed string."""
-    return F.md5(F.concat(F.lit("bloom:"), s))
-
-
-def _bloom_bit(dig: Column, j: int) -> Column:
-    """Bit position 0..BLOOM_M-1 of hash j for digest ``dig``."""
-    h = F.conv(F.substring(dig, 1 + 8 * j, 8), 16, 10).cast("bigint")
-    return h % F.lit(BLOOM_M)
-
-
-def _bloom_mask(offset: Column) -> Column:
-    """1 << offset for a COLUMN offset 0..61 (F.shiftleft takes only a
-    Python-int shift): powers of two are exactly representable doubles up
-    to 2^62, so pow→bigint is bit-exact here."""
-    return F.pow(F.lit(2.0), offset.cast("double")).cast("bigint")
-
-
-def bloom_sketch(members: DataFrame, member_col: str = "s") -> DataFrame:
-    """1-row (words map<bigint,bigint>) Bloom bitmap over a member-string
-    relation: K bit positions sliced from one md5 digest per member,
-    OR-folded into BLOOM_WORDS 62-bit words.
-
-    Mergeable contract: shard sketches merge by per-word bitwise OR (the
-    same bit_or aggregate), like the portable HLL/CMS registers. The
-    whole sketch is ≤ BLOOM_WORDS rows before pivoting — the shuffle
-    carries at most BLOOM_WORDS rows per partition regardless of member
-    count.
-    """
-    bits = members.select(bloom_digest(F.col(member_col)).alias("dig")).select(
-        F.explode(
-            F.array(*[_bloom_bit(F.col("dig"), j) for j in range(BLOOM_K)])
-        ).alias("bit")
-    )
-    words = bits.groupBy(F.floor(F.col("bit") / BLOOM_BITS_PER_WORD).alias("word")).agg(
-        F.bit_or(_bloom_mask(F.col("bit") % BLOOM_BITS_PER_WORD)).alias("bits")
-    )
-    return words.groupBy().agg(
-        F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("words")
-    )
-
-
-def bloom_contains(words: Column, dig: Column) -> Column:
-    """TRUE iff all K bloom bits of digest ``dig`` (= ``bloom_digest(s)``,
-    projected ONCE by the caller — see its docstring) are set in the
-    ``words`` map (absent words read as 0) — pure Column logic,
-    evaluated map-side against the broadcast 1-row sketch.
-
-    Apply it to a FLAT digest column (e.g. after an explode), not inside
-    an array higher-order function: HOF lambdas evaluate interpreted,
-    which defeats codegen and measured ~6× slower on the
-    decontamination probe."""
-    def bit_set(j: int) -> Column:
-        bit = _bloom_bit(dig, j)
-        word_bits = F.coalesce(
-            F.element_at(words, F.floor(bit / BLOOM_BITS_PER_WORD).cast("bigint")),
-            F.lit(0).cast("bigint"),
-        )
-        mask = _bloom_mask(bit % BLOOM_BITS_PER_WORD)
-        return word_bits.bitwiseAND(mask) != 0
-
-    out = bit_set(0)
-    for j in range(1, BLOOM_K):
-        out = out & bit_set(j)
-    return out
-
-
 def token_hash_local(s: str) -> int:
     """Driver-side twin of token_hash — bit-identical by construction
     (md5 of the UTF-8 bytes, first 8 hex chars as an integer)."""
@@ -558,13 +476,15 @@ def token_hash_local(s: str) -> int:
 
 
 def bloom_sketch_local(members: list[str]) -> list[int]:
-    """Driver-side twin of bloom_sketch for a CONSTANT-SIZE member set
-    (the decontamination eval suite): returns the DENSE word list
-    (BLOOM_WORDS 62-bit ints, index = word id) instead of the 1-row map
-    relation, so a probe can embed the whole bitmap as an array LITERAL
-    — zero broadcast/crossJoin rounds in the corpus pass. Bit-identical
-    to the SQL arithmetic in bloom_sketch/_bloom_bit (same md5 slices,
-    same modulus), which the DuckDB oracle also replicates.
+    """The Bloom bitmap of a CONSTANT-SIZE member set (the
+    decontamination eval suite), built on the driver: K bit positions
+    sliced from one md5 digest per member (hex chars 8j+1..8j+8 →
+    independent 32-bit values, the one-hash/partitioned-digest
+    construction), OR-folded into the DENSE word list (BLOOM_WORDS
+    62-bit ints, index = word id), so a probe can embed the whole bitmap
+    as an array LITERAL — zero broadcast/crossJoin rounds in the corpus
+    pass. The probe (bloom_contains_sql) and the DuckDB oracle slice the
+    same digest with the same modulus.
 
     Driver materialization bound: len(members) is the eval-suite
     shingle count (~240 here, capped by construction) and the output is
@@ -581,35 +501,18 @@ def bloom_sketch_local(members: list[str]) -> list[int]:
     return words
 
 
-def bloom_contains_dense(words: Column, dig: Column) -> Column:
-    """bloom_contains against a DENSE literal word array (from
-    bloom_sketch_local; element index = word id, 1-based element_at)
-    instead of the word→bits map — same K-conjunct codegen shape."""
-
-    def bit_set(j: int) -> Column:
-        bit = _bloom_bit(dig, j)
-        word_bits = F.coalesce(
-            F.element_at(words, (F.floor(bit / BLOOM_BITS_PER_WORD) + 1).cast("int")),
-            F.lit(0).cast("bigint"),
-        )
-        mask = _bloom_mask(bit % BLOOM_BITS_PER_WORD)
-        return word_bits.bitwiseAND(mask) != 0
-
-    out = bit_set(0)
-    for j in range(1, BLOOM_K):
-        out = out & bit_set(j)
-    return out
-
-
 def bloom_contains_sql(words: list[int], dig_sql: str = "dig") -> str:
-    """bloom_contains_dense as ONE SQL expression string over a literal
-    word list: the K-conjunct probe builds as text instead of ~50 Py4J
+    """TRUE iff all K Bloom bits of the digest column ``dig_sql``
+    (md5('bloom:' || s), projected ONCE by the caller — FilterExec does
+    not eliminate common subexpressions across conjuncts) are set in
+    the literal word list from bloom_sketch_local: ONE SQL expression
+    string, so the K-conjunct probe builds as text instead of ~50 Py4J
     column objects — the same plan-construction-cost fix the simhash
     block expression uses (each Py4J round trip costs more than the
     whole parse; measured ~0.3s/construction saved on the
-    decontamination probe). shiftleft replaces the pow(2.0, offset)
-    double round-trip of the Column version — bit-identical for
-    offsets 0..61."""
+    decontamination probe). Apply it to a FLAT digest column (after an
+    explode), not inside an array higher-order function: HOF lambdas
+    evaluate interpreted, measured ~6x slower."""
     arr = "array(" + ",".join(f"{w}L" for w in words) + ")"
     tests = []
     for j in range(BLOOM_K):

@@ -34,7 +34,6 @@ path where recall matters.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
@@ -627,7 +626,7 @@ def ivf_sq8_topk(
         return (base, materialize(assigned) if cached else assigned, *codebooks)
 
     # Optional session-scoped index reuse (the ``ivf_index`` cache, same
-    # contract as ivf_topk's; build_sq8_ivf_index is the persisted form):
+    # contract as ivf_topk's; build_sq8_ivf_index_logged is the persisted form):
     # the encoded + coarse-assigned lists and the collected codebooks are
     # immutable for a given corpus — build once, search repeatedly. The
     # cached assigned table is materialized so warm searches read blocks
@@ -661,63 +660,6 @@ def ivf_sq8_topk(
     )
     w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     return adc.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
-
-
-def build_sq8_ivf_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-) -> None:
-    """Persist the IVF-SQ8 index: build once, search many — the workflow
-    the per-query index construction in ``ivf_sq8_topk`` only simulates.
-    At 10⁹ vectors the encode+assign pass is the expensive step; amortizing
-    it across every future probe batch is how ANN actually deploys.
-
-    Layout on disk:
-      {path}/lists  parquet PARTITIONED BY centroid_id, rows (vid, codes)
-                    — 4× compressed corpus; partitioning means a search
-                    with nprobe lists READS only those directories
-                    (partition pruning, not just row filtering);
-      {path}/meta   one row (mns, scales, cvids, cmat) — the SQ codebook
-                    and coarse centroids (float32 values stored as exact
-                    doubles), a few KB regardless of corpus size.
-    """
-    _, assigned, cvids, cmat, mns, scales = _sq8_ivf_lists(
-        df, id_col, vec_col, n_centroids
-    )
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(f"{path}/lists")
-    spark = df.sparkSession
-    meta = _sq8_meta_df(spark, mns, scales, cvids, cmat)
-    meta.write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def search_sq8_ivf_index(
-    spark,
-    path: str,
-    probes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Search a persisted IVF-SQ8 index (``build_sq8_ivf_index``) with an
-    arbitrary probe DataFrame. Bit-identical to ``ivf_sq8_topk`` run over
-    the same corpus with the same parameters: codes, codebook, coarse
-    assignment, reconstruction and the Arrow scoring kernel are all the
-    same arithmetic — the only difference is WHERE the lists come from.
-
-    Scale shape: the meta row and the probed centroid ids are the only
-    driver-side materializations (≤ n_centroids + a few KB, independent
-    of corpus size). The probed ids become a literal IN filter on the
-    lists scan's PARTITION column, so only nprobe/n_centroids of the
-    index bytes are read — file skipping, not post-scan filtering.
-    """
-    meta = spark.read.parquet(f"{path}/meta").first()
-    lists = spark.read.parquet(f"{path}/lists")
-    return _search_sq8_lists(lists, meta, probes, id_col, vec_col, k, nprobe, exclude_self)
 
 
 # The SQ8 index meta row, in ONE place each way: build/search/append all
@@ -756,9 +698,12 @@ def _search_sq8_lists(
     nprobe: int,
     exclude_self: bool,
 ) -> DataFrame:
-    """Shared IVF-SQ8 search core over an already-loaded lists relation +
-    meta row — used by both the plain-parquet and the table_log-versioned
-    index (search_sq8_ivf_index / search_sq8_ivf_index_logged)."""
+    """IVF-SQ8 search core over an already-loaded lists relation + meta
+    row (search_sq8_ivf_index_logged). Scale shape: the meta row and the
+    probed centroid ids are the only driver-side materializations
+    (≤ n_centroids + a few KB, independent of corpus size); the probed
+    ids become a literal IN filter on the lists' partition column, so
+    only nprobe/n_centroids of the index files are read."""
     from open_data_lakehouse_demo_spark.sources.io import materialize
 
     mns, scales, cvids, cmat = _sq8_unpack_meta(meta)
@@ -801,12 +746,13 @@ def build_sq8_ivf_index_logged(
     vec_col: str = "embedding",
     n_centroids: int = 16,
 ) -> int:
-    """IVF-SQ8 index as a SNAPSHOT-VERSIONED logged table pair
-    (sources/table_log.py) — the build-once/search-many workflow of
-    build_sq8_ivf_index plus the table-format contracts a production
-    index store needs: atomic visibility of each maintenance batch,
-    time-travel searches against any prior index version, exactly-once
-    streaming appends, compaction.
+    """Persist the IVF-SQ8 index as a SNAPSHOT-VERSIONED logged table
+    pair (sources/table_log.py): build once, search many — the workflow
+    the per-query index construction in ``ivf_sq8_topk`` only simulates
+    (at 10⁹ vectors the encode+assign pass is the expensive step) — plus
+    the table-format contracts a production index store needs: atomic
+    visibility of each maintenance batch, time-travel searches against
+    any prior index version, exactly-once streaming appends, compaction.
 
       {path}/lists  logged table PARTITIONED BY centroid_id
                     (vid, codes, centroid_id); a search's nprobe lists
@@ -871,9 +817,12 @@ def search_sq8_ivf_index_logged(
 ) -> DataFrame:
     """Search a versioned IVF-SQ8 index at any snapshot (default latest):
     ``snapshot`` pins the lists manifest, so 'what did this query return
-    before yesterday's ingest?' is a first-class, reproducible question —
-    the same arithmetic as search_sq8_ivf_index, same file-level list
-    pruning via the pinned manifest's partition values."""
+    before yesterday's ingest?' is a first-class, reproducible question.
+    Bit-identical to ``ivf_sq8_topk`` over the same corpus and
+    parameters: codes, codebook, coarse assignment, reconstruction and
+    the Arrow scoring kernel are the same arithmetic — only WHERE the
+    lists come from differs; the probed lists prune at file level via
+    the pinned manifest's partition values."""
     from open_data_lakehouse_demo_spark.sources import table_log as tl
 
     meta = tl.read(spark, f"{path}/meta").first()

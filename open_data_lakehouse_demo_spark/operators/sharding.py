@@ -49,10 +49,10 @@ def assign_token_shards(
     duplicate keys the within-partition ROWS-frame running sum — and the
     plain ``SUM() OVER (ORDER BY …)`` oracle — are both tie-order-
     nondeterministic, so the "bit-identical to the single-partition
-    window" claim only holds for a total order; and ``write_token_shards``
-    joins back on ``order_col``, which would multiply rows under dups.
-    Callers with a non-unique sort key should concat a unique suffix
-    (e.g. ``concat(sort_key, '#', doc_id)``) before calling.
+    window" claim only holds for a total order; and a caller joining
+    shards back on ``order_col`` would multiply rows under dups. Callers
+    with a non-unique sort key should concat a unique suffix (e.g.
+    ``concat(sort_key, '#', doc_id)``) before calling.
     """
     from open_data_lakehouse_demo_spark.sources.io import materialize
 
@@ -232,20 +232,3 @@ def global_row_number(
         .drop("_pid", "_offset")
     )
 
-
-def write_token_shards(
-    docs: DataFrame,
-    path: str,
-    order_col: str,
-    tokens_col: str,
-    target_tokens: int,
-) -> None:
-    """Materialize shard-partitioned parquet: one directory per shard,
-    ready for per-shard streaming by a tokenizer job."""
-    assigned = docs.join(
-        assign_token_shards(docs, order_col, tokens_col, target_tokens).select(
-            order_col, "shard"
-        ),
-        order_col,
-    )
-    assigned.write.mode("overwrite").partitionBy("shard").parquet(path)

@@ -365,11 +365,11 @@ ORDER BY doc_id
 def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination membership via a PORTABLE Bloom filter (124×62-bit
     words, k=4 hash slices of one md5 digest — operators/dedup.py
-    bloom_sketch): benchmark 8-gram shingles OR-fold into a ≤64-row
-    bitmap that pivots to ONE broadcast map row; the corpus probe is a
-    map-side explode + whole-stage-codegen bloom_contains filter against
-    the broadcast sketch — the ONLY full-corpus shuffle is the flagged
-    doc-id distinct, which is output-sized (contaminated docs + the FP
+    bloom_sketch_local): benchmark 8-gram shingles OR-fold on the driver
+    into one dense word list embedded as an array literal; the corpus
+    probe is a map-side explode + whole-stage-codegen bloom_contains_sql
+    filter against that literal — the ONLY full-corpus shuffle is the
+    flagged doc-id distinct, which is output-sized (contaminated docs + the FP
     trickle), the way a 100 TB scan consults an eval-set filter.  (An
     F.exists HOF over each doc's shingle array has the same semantics
     with zero shuffle but evaluates interpreted — measured 6× slower;
@@ -438,7 +438,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would serialize the HOF shingle construction (measured 4-5s serial
     # vs sub-second wide — the same reason _doc_shingle_sets spreads).
     # digest projected ONCE per shingle — FilterExec would recompute an
-    # inlined md5 in each of the K bit conjuncts (bloom_digest doc).
+    # inlined md5 in each of the K bit conjuncts (bloom_contains_sql doc).
     # The whole probe builds as SQL text (selectExpr): the 124-word
     # bitmap literal, 240-hash IN list and K bloom conjuncts would cost
     # hundreds of Py4J round trips as Column objects (~0.8s/construction

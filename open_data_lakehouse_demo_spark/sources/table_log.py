@@ -50,7 +50,8 @@ Scale notes (the honest 100 TB picture):
     files; real formats add manifest LISTS + metadata compaction beyond
     that, out of scope here;
   * reads pin the snapshot's exact file list and hand it to the normal
-    parquet reader with ``basePath`` set, so column pruning, predicate
+    parquet reader with ``basePath`` set and the MANIFEST's schema (never
+    inferred from the files — _scan), so column pruning, predicate
     pushdown and hive-style partition pruning all still apply; since r7
     manifests also carry per-file column bounds (parquet footer min/max
     + partition values — Iceberg's lower/upper_bounds) consumed by
@@ -498,9 +499,9 @@ def append(
     """Append rows as a new snapshot: previous files + new files.
 
     Schema evolution is additive: the committed schema is the UNION of
-    the previous schema and df's (new columns scan as NULL in old files
-    via mergeSchema — the same additive contract plans/ddl.py documents
-    for Iceberg).
+    the previous schema and df's (every read scans under that schema,
+    so a new column reads as NULL in older files — the same additive
+    contract plans/ddl.py documents for Iceberg).
 
     ``txn=(writer_id, version)`` makes the append IDEMPOTENT (the
     Delta txnAppId/txnVersion contract): if any committed manifest
@@ -706,8 +707,7 @@ def _changes_first(spark: SparkSession, path: str, cols: list[str], changes):
         return {}, None
     df = changes()
     files = _write_change_data(df, path)
-    back = (spark.read.parquet(*[os.path.join(path, f) for f in files])
-            if files else df.limit(0))
+    back = _scan(spark, path, {"schema": df.schema.json()}, files, base_dir=path)
     return {"change_data": files}, back
 
 
@@ -735,9 +735,7 @@ def _delete(
 
     prev = pin[1]
     cols = [f["name"] for f in json.loads(prev["schema"])["fields"]]
-    src = _fill_to_contract(
-        _scan(spark, path, prev, files, with_lineage=True), prev["schema"]
-    )
+    src = _scan(spark, path, prev, files, with_lineage=True)
     hit = f"coalesce(({predicate_sql}), false)"
     cd, gone = _changes_first(spark, path, cols, lambda: (
         src.filter(hit).select(*cols, "__fname", "__ri")
@@ -828,8 +826,8 @@ def merge(
     target = _scan(spark, path, prev, prev["files"])
     cols = target.columns
     # Conform the source to the target's declared types (r12: an INT
-    # source column merged into a BIGINT table used to write mixed-type
-    # files the mergeSchema read then refused) — but ONLY along provably
+    # source column merged into a BIGINT table used to write files whose
+    # stored type disagreed with the declared one) — but ONLY along provably
     # LOSSLESS widenings: sessions run ANSI-off, where cast() silently
     # NULLs un-parseable values and overflow-wraps, so a blanket cast at
     # this choke point would corrupt both the table and the CDF sidecar
@@ -1043,12 +1041,12 @@ def rollback(spark: SparkSession, path: str, snapshot: int) -> int:
 #
 #   manifest["physical_names"] = {current: [current, older, ...]}
 #   manifest["retired_names"]  = [names that may never be (re)used]
-#   manifest["conform"]        = True  (readers must project/cast)
+#   manifest["conform"]        = True  (the table was altered)
 #
-# Reads of a conform table scan with an EXPLICIT physical schema (every
+# Every read (_scan) scans with an EXPLICIT physical schema (every
 # historical name, declared at the column's CURRENT — widest — type;
 # Spark's parquet reader upcasts int32→long / float→double in place and
-# returns typed NULLs for names a file lacks), then project each current
+# returns typed NULLs for names a file lacks), then projects each current
 # column as coalesce(physical names) cast to its declared type. Name
 # reuse is forbidden (ValueError) instead of silently resurrecting old
 # physical values — the one contract that genuinely needs field-ids;
@@ -1219,26 +1217,31 @@ def _scan(
     raw_where: list[tuple] | None = None,
     base_dir: str | None = None,
 ) -> DataFrame:
-    """Scan ``files`` under manifest ``m``'s reader contract: the plain
-    mergeSchema scan for ordinary tables; for conform (altered) tables,
-    an explicit physical-schema scan (all historical names at current
-    types — mergeSchema would refuse mixed int32/int64 files, the
-    explicit schema upcasts them) projected onto the committed schema:
-    each column = coalesce(current, older physical names) cast to its
-    declared type. Column pruning still reaches the parquet reader —
-    the projection is a plain Project over the scan, so Catalyst prunes
-    unreferenced physical columns out of ReadSchema.
+    """THE read primitive: scan ``files`` (table files, a pruned subset,
+    change-data sidecars, staged files) under manifest ``m``'s schema.
+    The manifest, not the files, is the schema's source (Delta readers
+    take it from the log the same way): ONE ``spark.read.schema(...)``
+    read declaring every physical name at its current type — the
+    identity map unless the table was altered, all historical names
+    after a rename — so no job infers it, a file lacking a column reads
+    it as NULL, narrower stored integers upcast, and partition values
+    parse to their declared types (a string '01' stays '01'). One
+    projection then pins the manifest's column order: a column with
+    several physical names is coalesce(current, older names) cast to
+    its declared type. Column pruning still reaches the parquet reader
+    — the projection is a plain Project over the scan, so Catalyst
+    prunes unreferenced physical columns out of ReadSchema.
 
     Snapshots carrying deletion vectors (delete_rows_mor) anti-join the
     deleted (file, row_index) pairs out before the projection; lineage
-    comes from the parquet source's ``_metadata`` hidden column, which
-    coexists with both the mergeSchema and explicit-schema paths.
-    ``with_lineage=True`` keeps the ``__fname``/``__ri`` columns in the
-    output (internal callers: delete_rows_mor)."""
+    comes from the parquet source's ``_metadata`` hidden column.
+    ``with_lineage=True`` keeps the ``__fname``/``__ri`` columns after
+    the table columns (internal callers: the DELETE body,
+    delete_rows_mor, the change feed)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    schema = T.StructType.fromJson(json.loads(m["schema"]))
+    schema = _schema_of(m)
     if not files:
         if with_lineage:
             schema = T.StructType(
@@ -1248,33 +1251,24 @@ def _scan(
             )
         return spark.createDataFrame([], schema)
     paths = [os.path.join(path, f) for f in files]
-    need_lineage = with_lineage or bool(m.get("delete_vectors"))
     # hive partition discovery is anchored at data/; sidecar scans
     # (change-data files under _changes/, which embed partition values
     # as ordinary columns) anchor at the table root instead — no k=v
-    # segments below it, so no partition columns are inferred
+    # segments below it, so every column is a file column
     base = base_dir if base_dir is not None else _data_dir(path)
-    if m.get("conform"):
-        phys_fields = []
-        for f in schema.fields:
-            for p in _phys_names(m, f.name):
-                phys_fields.append(T.StructField(p, f.dataType, True))
-        src = (
-            spark.read.schema(T.StructType(phys_fields))
-            .option("basePath", base)
-            .parquet(*paths)
-        )
-    else:
-        src = (
-            spark.read.option("basePath", base)
-            .option("mergeSchema", "true")
-            .parquet(*paths)
-        )
+    src = (
+        spark.read.schema(T.StructType([
+            T.StructField(p, f.dataType, True)
+            for f in schema.fields for p in _phys_names(m, f.name)
+        ]))
+        .option("basePath", base)
+        .parquet(*paths)
+    )
     if raw_where:
         pre = _raw_prefilter(m, raw_where)
         if pre is not None:
             src = src.filter(pre)
-    if need_lineage:
+    if with_lineage or m.get("delete_vectors"):
         # lineage key = the manifest-relative path 'data/[k=v/]file' —
         # NOT the basename: one partitioned write stages identically-
         # named part files into every k=v/ dir, so basenames collide
@@ -1291,18 +1285,20 @@ def _scan(
             "__ri": F.col("_metadata.row_index"),
         })
         src = _apply_delete_vectors(spark, path, m, src)
-    if m.get("conform"):
-        exprs = []
-        for f in schema.fields:
-            phys = _phys_names(m, f.name)
-            col = F.col(phys[0]) if len(phys) == 1 else F.coalesce(*[F.col(p) for p in phys])
-            exprs.append(col.cast(f.dataType).alias(f.name))
-        if with_lineage:
-            exprs += [F.col("__fname"), F.col("__ri")]
-        return src.select(*exprs)
-    if need_lineage and not with_lineage:
-        src = src.drop("__fname", "__ri")
-    return src
+
+    def col(name: str):
+        return F.col("`" + name.replace("`", "``") + "`")
+
+    exprs = []
+    for f in schema.fields:
+        phys = _phys_names(m, f.name)
+        if len(phys) == 1:
+            exprs.append(col(phys[0]).alias(f.name))
+        else:
+            exprs.append(F.coalesce(*map(col, phys)).cast(f.dataType).alias(f.name))
+    if with_lineage:
+        exprs += [F.col("__fname"), F.col("__ri")]
+    return src.select(*exprs)
 
 
 def _dv_carry(prev: dict) -> dict:
@@ -1467,7 +1463,7 @@ def widen_column(path: str, name: str, dtype) -> int:
     """ALTER TABLE ALTER COLUMN TYPE (metadata-only), restricted to the
     promotions the parquet reader performs in place — int→long,
     float→double (Iceberg's allowed set). Old files keep their narrow
-    physical type; the conform scan reads them at the widened type."""
+    physical type; every read (_scan) reads them at the widened type."""
     dt = _parse_type(dtype)
 
     def mutate(prev: dict) -> dict:
@@ -1544,11 +1540,12 @@ def read(
     ``as_of_ts_ms`` (latest snapshot committed at or before that time —
     Iceberg's FOR SYSTEM_TIME AS OF).
 
-    The read pins the manifest's exact file list and hands it to the
-    ordinary parquet reader with basePath + mergeSchema, so pruning /
-    pushdown / hive-partition columns behave exactly as a direct scan
-    of those files; a concurrent append or delete commits a NEW
-    manifest and cannot change this DataFrame's inputs."""
+    The read pins the manifest's exact file list and scans it under the
+    manifest's schema (_scan): columns in the manifest's order and
+    declared types, partition columns included, with pruning /
+    pushdown / hive-partition pruning exactly as a direct scan of those
+    files; a concurrent append or delete commits a NEW manifest and
+    cannot change this DataFrame's inputs."""
     snaps = _list_snapshots(path)
     if not snaps:
         raise ValueError(f"no table at {path}")
@@ -1664,26 +1661,6 @@ def _where_sql(where: list[tuple]) -> str:
     return " AND ".join(parts) or "TRUE"
 
 
-def _ensure_predicate_columns(df: DataFrame, schema_json: str,
-                              where: list[tuple]) -> DataFrame:
-    """Predicate columns the scanned files don't carry (schema evolution:
-    every candidate/touched file predates the column) resolve to typed
-    NULLs from the COMMITTED schema instead of an AnalysisException —
-    matching read().filter() semantics, where mergeSchema over the full
-    file set would have supplied the column (r9 review finding)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    missing = {c for c, _op, _v in where} - set(df.columns)
-    if not missing:
-        return df
-    schema = T.StructType.fromJson(json.loads(schema_json))
-    for f in schema.fields:
-        if f.name in missing:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return df
-
-
 def _prune(m: dict, where: list[tuple]) -> tuple[list[str], list[str]]:
     """(candidates, skipped) of manifest ``m``'s files for a conjunction
     — THE bounds-pruning loop behind scan planning (plan_scan,
@@ -1735,12 +1712,7 @@ def read_where(
     skipped files never reach the engine at all, on top of whatever
     row-group pushdown the parquet reader does inside candidates."""
     m, keep, _skip = _plan(path, where, snapshot)
-    if not keep:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType.fromJson(json.loads(m["schema"])))
-    src = _scan(spark, path, m, keep, raw_where=where)
-    return _ensure_predicate_columns(src, m["schema"], where).filter(_where_sql(where))
+    return _scan(spark, path, m, keep, raw_where=where).filter(_where_sql(where))
 
 
 def delete_rows(spark: SparkSession, path: str, where: list[tuple]) -> int:
@@ -1823,12 +1795,10 @@ def update_where(
     touched, untouched = _prune(prev, where)
     if not touched:
         return latest
-    # conform the SUBSET scan to the full contract before applying SETs:
-    # a touched file may predate a column an additive append introduced,
-    # and mergeSchema only unions the files actually read — without the
-    # fill, a SET on such a column would silently vanish from the
-    # rewrite (r11 review: lost update, manifest claiming otherwise)
-    src = _fill_to_contract(_scan(spark, path, prev, touched), prev["schema"])
+    # the SUBSET scan carries the full contract: a touched file that
+    # predates a column an additive append introduced reads it as NULL,
+    # so a SET on that column lands in the rewrite (no lost update)
+    src = _scan(spark, path, prev, touched)
     cond = F.expr(f"coalesce(({_where_sql(where)}), false)")
     cols = [f.name for f in schema.fields]
 
@@ -1944,7 +1914,6 @@ def delete_rows_mor(spark: SparkSession, path: str, where: list[tuple]) -> int:
     if not touched:
         return latest
     src = _scan(spark, path, prev, touched, with_lineage=True)
-    src = _ensure_predicate_columns(src, prev["schema"], where)
     hits = (
         src.filter(f"coalesce(({_where_sql(where)}), false)")
         .select("__fname", "__ri")
@@ -2011,42 +1980,38 @@ def _op_kind(op: str) -> str:
 
 def walk_appends(path: str, from_snapshot: int, to_snapshot: int,
                  ignore_rewrites: bool = False, inspect=None) -> list[str]:
-    """THE append-tailing range walk shared by table_changes and the
-    streaming source (one implementation, so the two faces of the
-    format cannot drift): collect the data files appended in
-    ``(from_snapshot, to_snapshot]``. Raises on expired (vacuumed)
-    history; raises on a rewrite/delete snapshot unless
-    ``ignore_rewrites`` (the no-retraction trade); metadata-only
-    snapshots contribute no files; ROW-PRESERVING maintenance
-    (compact / zorder — _ROW_PRESERVING_OPS) is SKIPPED, not raised
-    (r12): every row it rewrites was already emitted from its original
-    file, so routine OPTIMIZE never breaks a tailing consumer.
+    """The append-only face of the one range walk (_changes_walk),
+    shared by table_changes and the streaming source so the two faces
+    of the format cannot drift: the data files appended in
+    ``(from_snapshot, to_snapshot]``, in commit order. Raises on expired
+    (vacuumed) history; raises on a rewrite/delete snapshot unless
+    ``ignore_rewrites`` (the no-retraction trade — even a rewrite the
+    change feed can represent, since appends cannot); metadata-only
+    snapshots contribute no files; ROW-PRESERVING maintenance (compact /
+    zorder — _ROW_PRESERVING_OPS) is SKIPPED, not raised (r12): every
+    row it rewrites was already emitted from its original file, so
+    routine OPTIMIZE never breaks a tailing consumer.
     ``inspect(snapshot, manifest, kind)`` — kind ∈ {"append",
     "metadata", "maintenance", "rewrite"} — runs first for every
     in-range snapshot and may raise to impose a stricter policy (the
     streaming source's schema-change stop)."""
-    _require_history(path, from_snapshot, to_snapshot)
-    new_files: list[str] = []
-    prev_files: set[str] = set()
-    if from_snapshot >= 0:
-        prev_files = set(_read_manifest(path, from_snapshot)["files"])
-    for s in range(from_snapshot + 1, to_snapshot + 1):
-        m = _read_manifest(path, s)
-        cur = set(m["files"])
-        op = m["operation"]
-        kind = _op_kind(op)
+
+    def _append_only(s: int, m: dict, kind: str) -> None:
         if inspect is not None:
             inspect(s, m, kind)
-        if kind == "append":
-            new_files.extend(sorted(cur - prev_files))
-        elif kind == "rewrite" and not ignore_rewrites:
+        if kind == "rewrite" and not ignore_rewrites:
             raise ValueError(
-                f"snapshot {s} ({op}) rewrote or deleted rows; incremental "
-                "append-only read cannot represent it — re-seed with a "
-                "full read, or pass ignore_rewrites=True to skip it"
+                f"snapshot {s} ({m['operation']}) rewrote or deleted rows; "
+                "incremental append-only read cannot represent it — re-seed "
+                "with a full read, or pass ignore_rewrites=True to skip it"
             )
-        prev_files = cur
-    return new_files
+
+    _require_history(path, from_snapshot, to_snapshot)
+    insert_files, _dvs, _changes = _changes_walk(
+        path, from_snapshot, to_snapshot, ignore_rewrites=True,
+        inspect=_append_only,
+    )
+    return list(insert_files)
 
 
 def table_changes(
@@ -2070,8 +2035,9 @@ def table_changes(
     file changes (Delta's ignoreDeletes/ignoreChanges trade: rows
     deleted or rewritten in the range are not retracted downstream).
     Metadata-only snapshots (alters, no-op txns) emit nothing; the
-    emitted rows read under the LATEST manifest's contract, so a rename
-    or widen in the range applies to older appends too. Deletion
+    emitted rows read under the LATEST manifest's schema (_scan: its
+    column order and declared types), so a rename, widen or added
+    column in the range applies to older appends too. Deletion
     vectors are deliberately NOT applied — appended content is
     immutable once emitted; the deletes surface as the rewrite error /
     skip above. The format("table_log") streaming source (the other
@@ -2084,40 +2050,15 @@ def table_changes(
     if not snaps:
         raise ValueError(f"no table at {path}")
     latest = snaps[-1]
-    if from_snapshot >= latest:
-        m = _read_manifest(path, latest)
-        return _scan(spark, path, {**m, "files": []}, []), latest
-    new_files = walk_appends(path, from_snapshot, latest,
-                             ignore_rewrites=ignore_rewrites)
+    new_files = [] if from_snapshot >= latest else walk_appends(
+        path, from_snapshot, latest, ignore_rewrites=ignore_rewrites)
     latest_m = _read_manifest(path, latest)
     emit_m = {k: v for k, v in latest_m.items() if k != "delete_vectors"}
-    emitted = _fill_to_contract(
-        _scan(spark, path, emit_m, new_files), latest_m["schema"]
-    )
-    return emitted, latest
+    return _scan(spark, path, emit_m, new_files), latest
 
 
 #: CDF metadata columns appended to every table_changes_feed row
 _CDF_COLS = ("_change_type", "_commit_snapshot")
-
-
-def _fill_to_contract(df: DataFrame, schema_json: str) -> DataFrame:
-    """Conform a SUBSET scan to the manifest contract: a range/file
-    subset may predate a column another file's additive append
-    introduced, and mergeSchema can only union the schemas of the files
-    actually read — the contract's missing columns null-fill here (the
-    same rule the conform/alter path and the data-source worker apply),
-    and the select pins the contract's column order. Lineage columns
-    (__fname/__ri), when present, ride along untouched."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    schema = T.StructType.fromJson(json.loads(schema_json))
-    extras = [c for c in df.columns if c not in {f.name for f in schema.fields}]
-    for f in schema.fields:
-        if f.name not in df.columns:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return df.select(*[f.name for f in schema.fields], *extras)
 
 
 def _require_history(path: str, from_snapshot: int, to_snapshot: int) -> None:
@@ -2176,9 +2117,9 @@ def _changes_walk(
     ignore_rewrites: bool = False,
     inspect=None,
 ) -> tuple[dict[str, int], dict[str, int], dict[str, int]]:
-    """THE change-feed range walk, shared by table_changes_feed and the
-    format("table_log") CDF readers (one implementation, like
-    walk_appends for the append-only faces): returns
+    """THE range walk, shared by table_changes_feed, the
+    format("table_log") CDF readers and walk_appends (the append-only
+    faces' thin caller — one loop, so no face can drift): returns
     ``({appended rel file: snapshot}, {new DV rel file: snapshot},
     {change-data sidecar rel file: snapshot})`` for
     ``(from_snapshot, to_snapshot]``. Merge-on-read deletes are
@@ -2280,14 +2221,13 @@ def table_changes_feed(
     sidecar changes read only the sidecar files (sized by rows the DML
     actually matched) — never the whole table."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     snaps = _list_snapshots(path)
     if not snaps:
         raise ValueError(f"no table at {path}")
     latest = snaps[-1]
     m_latest = _read_manifest(path, latest)
-    schema = T.StructType.fromJson(json.loads(m_latest["schema"]))
+    schema = _schema_of(m_latest)
     clash = set(_CDF_COLS) & {f.name for f in schema.fields}
     if clash:
         raise ValueError(
@@ -2306,23 +2246,16 @@ def table_changes_feed(
         sel.append(F.col("_commit_snapshot").cast("long").alias("_commit_snapshot"))
         return df.select(*sel)
 
-    if from_snapshot >= latest:
-        empty = _scan(spark, path, emit_m, []).withColumns({
-            "_change_type": F.lit(None).cast("string"),
-            "_commit_snapshot": F.lit(None).cast("long"),
-        })
-        return empty, latest
-    _require_history(path, from_snapshot, latest)
-    insert_files, dv_delta, change_files = _changes_walk(
-        path, from_snapshot, latest, ignore_rewrites
-    )
+    insert_files, dv_delta, change_files = {}, {}, {}
+    if from_snapshot < latest:
+        _require_history(path, from_snapshot, latest)
+        insert_files, dv_delta, change_files = _changes_walk(
+            path, from_snapshot, latest, ignore_rewrites
+        )
 
     parts: list[DataFrame] = []
     if insert_files:
-        ins = _fill_to_contract(
-            _scan(spark, path, emit_m, sorted(insert_files), with_lineage=True),
-            m_latest["schema"],
-        )
+        ins = _scan(spark, path, emit_m, sorted(insert_files), with_lineage=True)
         fmap = spark.createDataFrame(
             [(f, s) for f, s in insert_files.items()],
             "__fname string, _commit_snapshot long",
@@ -2330,10 +2263,7 @@ def table_changes_feed(
         parts.append(_with_meta(ins.join(F.broadcast(fmap), "__fname"), "insert"))
     if dv_delta:
         dv_df, touched = _dv_delta_df(spark, path, dv_delta)
-        rows = _fill_to_contract(
-            _scan(spark, path, emit_m, touched, with_lineage=True),
-            m_latest["schema"],
-        )
+        rows = _scan(spark, path, emit_m, touched, with_lineage=True)
         # broadcast only while the vectors are small (MoR's premise);
         # a bulk delete's positions stay worker-side either way
         dv_df = _maybe_broadcast_dvs(
@@ -2358,10 +2288,8 @@ def table_changes_feed(
         for f, s in change_files.items():
             by_snap.setdefault(s, []).append(f)
         for s, fs in sorted(by_snap.items()):
-            ch = _fill_to_contract(
-                _scan(spark, path, sc_m, sorted(fs), base_dir=path),
-                sc_m["schema"],
-            ).withColumn("_commit_snapshot", F.lit(s).cast("long"))
+            ch = _scan(spark, path, sc_m, sorted(fs), base_dir=path).withColumn(
+                "_commit_snapshot", F.lit(s).cast("long"))
             parts.append(_with_meta(ch))
     if not parts:
         empty = _scan(spark, path, emit_m, []).withColumns({

@@ -586,19 +586,21 @@ def test_ann_recall_eval_consistent_with_sweep_level(spark):
 
 
 def test_persisted_sq8_ivf_index_matches_inmemory(spark, tmp_path):
-    """build_sq8_ivf_index + search_sq8_ivf_index must be BIT-identical to
-    ivf_sq8_topk over the same corpus/params (same codes, codebook, coarse
-    assignment, scoring kernel — only the list source differs), and the
-    lists scan must be PARTITION-pruned to the probed centroids."""
+    """build_sq8_ivf_index_logged + search_sq8_ivf_index_logged must be
+    BIT-identical to ivf_sq8_topk over the same corpus/params (same codes,
+    codebook, coarse assignment, scoring kernel — only the list source
+    differs), and the lists scan must be PARTITION-pruned to the probed
+    centroids."""
     from open_data_lakehouse_demo_spark.operators import quantization as pq
+    from open_data_lakehouse_demo_spark.sources import table_log as tl
     from open_data_lakehouse_demo_spark.sources.io import read_parquet
 
     emb = read_parquet(spark, f"{SF_DIR}/embeddings.parquet")
     idx = str(tmp_path / "sq8ivf")
-    pq.build_sq8_ivf_index(emb, idx, n_centroids=16)
+    pq.build_sq8_ivf_index_logged(emb, idx, n_centroids=16)
 
     probes = emb.filter(F.col("vec_id") % 50 == 0)
-    got = pq.search_sq8_ivf_index(spark, idx, probes, k=5, nprobe=2)
+    got = pq.search_sq8_ivf_index_logged(spark, idx, probes, k=5, nprobe=2)
     want = pq.ivf_sq8_topk(
         emb, k=5, n_centroids=16, nprobe=2,
         probe_filter=F.col("vid") % 50 == 0,
@@ -616,8 +618,8 @@ def test_persisted_sq8_ivf_index_matches_inmemory(spark, tmp_path):
             ).alias("cid")
         ).distinct().collect()
     }
-    all_parts = len(glob.glob(f"{idx}/lists/centroid_id=*"))
-    lists = spark.read.parquet(f"{idx}/lists").filter(
+    all_parts = len(glob.glob(f"{idx}/lists/data/centroid_id=*"))
+    lists = tl.read(spark, f"{idx}/lists").filter(
         F.col("centroid_id").isin(sorted(probe_cids))
     )
     files_read = {
@@ -637,14 +639,15 @@ def test_persisted_index_search_external_probes(spark, tmp_path):
 
     emb = read_parquet(spark, f"{SF_DIR}/embeddings.parquet")
     idx = str(tmp_path / "sq8ivf2")
-    pq.build_sq8_ivf_index(emb, idx, n_centroids=8)
+    pq.build_sq8_ivf_index_logged(emb, idx, n_centroids=8)
     rng = np.random.default_rng(5)
     qs = spark.createDataFrame(
         [(int(1_000_000 + i), [float(x) for x in rng.normal(size=pq.DIM)])
          for i in range(7)],
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
     )
-    out = pq.search_sq8_ivf_index(spark, idx, qs, k=3, nprobe=2, exclude_self=False)
+    out = pq.search_sq8_ivf_index_logged(
+        spark, idx, qs, k=3, nprobe=2, exclude_self=False)
     rows = out.collect()
     by_q = {}
     for r in rows:

@@ -42,6 +42,55 @@ def tbl(spark, tmp_path):
     return path
 
 
+_CODES = [(0, "01", 10), (1, "007", 20), (2, "1e3", 30)]
+
+
+@pytest.mark.parametrize("face", [
+    "read", "read_snapshot", "read_where_hit", "read_where_pruned",
+    "table_changes", "table_changes_feed", "format", "compact",
+])
+def test_string_partition_column_reads_as_declared(registered, spark, tmp_path, face):
+    """A STRING partition column whose values look numeric ('01',
+    '007', '1e3') reads back as the manifest declares it on every face:
+    the manifest's column order (the partition column in the middle),
+    type string, the exact values — no partition-type inference turning
+    '01' into 1 — and a compaction keeps the files in the same hive
+    directories."""
+    path = str(tmp_path / "codes")
+    schema = "id long, code string, v int"
+    tl.create(spark, path, spark.createDataFrame(_CODES[:1], schema).coalesce(1),
+              partition_by=["code"])
+    tl.append(spark, path, spark.createDataFrame(_CODES[1:], schema).coalesce(1))
+    want, cols = _CODES, ["id", "code", "v"]
+    if face == "read":
+        df = tl.read(spark, path)
+    elif face == "read_snapshot":
+        df, want = tl.read(spark, path, snapshot=0), _CODES[:1]
+    elif face == "read_where_hit":
+        df, want = tl.read_where(spark, path, [("code", "=", "007")]), _CODES[1:2]
+    elif face == "read_where_pruned":
+        assert tl.plan_scan(path, [("v", ">", 100)])[0] == []
+        df, want = tl.read_where(spark, path, [("v", ">", 100)]), []
+    elif face == "table_changes":
+        df = tl.table_changes(spark, path, -1)[0]
+    elif face == "table_changes_feed":
+        df = tl.table_changes_feed(spark, path, -1)[0]
+        cols = cols + ["_change_type", "_commit_snapshot"]
+        want = [(*r, "insert", s) for r, s in zip(_CODES, (0, 1, 1))]
+    elif face == "format":
+        df = spark.read.format("table_log").option("path", path).load()
+    else:
+        tl.compact(spark, path, target_files=1)
+        df = tl.read(spark, path)
+        m = tl._read_manifest(path, tl._list_snapshots(path)[-1])
+        assert m["operation"] == "compact"
+        assert {f.split("/")[1] for f in m["files"]} == {
+            "code=01", "code=007", "code=1e3"}
+    assert df.columns == cols
+    assert dict(df.dtypes)["code"] == "string"
+    assert _rows(df) == sorted(want)
+
+
 def _drain(spark, path, out, ck, **opts):
     sdf = spark.readStream.format("table_log").option("path", path)
     for k, v in opts.items():
