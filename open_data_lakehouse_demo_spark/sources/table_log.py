@@ -311,16 +311,22 @@ def _reject_reserved_columns(cols) -> None:
         )
 
 
-def _coerce_partition_value(v: str, unescape: bool = True):
+def _coerce_partition_value(v: str, dtype=None, unescape: bool = True):
     """Hive path segments are strings; unescape Spark's path encoding,
-    then coerce numerics so partition 'stats' compare correctly against
-    typed predicate values. Returns None for the NULL-partition marker
-    (no usable bound — pruning must keep the file conservative)."""
+    then coerce by the column's declared type (``dtype``, its Spark JSON
+    type name) so partition 'stats' compare correctly against typed
+    predicate values: string → the raw string ('01' stays '01'),
+    float/double → float; any other or unknown type → int, then float,
+    when the value parses as one (an integral value always parses as
+    int). Returns None for the NULL-partition marker (no usable bound —
+    pruning must keep the file conservative)."""
     if unescape:
         v = _unescape_path_name(v)
     if v == "__HIVE_DEFAULT_PARTITION__":
         return None
-    for cast in (int, float):
+    if dtype == "string":
+        return v
+    for cast in (float,) if dtype in ("float", "double") else (int, float):
         try:
             return cast(v)
         except ValueError:
@@ -343,16 +349,19 @@ def _partition_raw_values(rel_path: str) -> dict[str, str]:
     return out
 
 
-def _collect_stats(path: str, rel_files: list[str]) -> dict[str, dict]:
+def _collect_stats(path: str, rel_files: list[str],
+                   schema_json: str) -> dict[str, dict]:
     """rel file → column stats ({col: [min, max, null_count]}) for the
     manifest: parquet footer min/max per flat primitive column, plus the
-    hive partition values as exact-equality [v, v] stats so partition
-    pruning rides the same code path as data-column pruning."""
+    hive partition values as exact-equality [v, v] stats, coerced by
+    their declared type in ``schema_json`` (the manifest schema), so
+    partition pruning rides the same code path as data-column pruning."""
+    types = {f["name"]: f["type"] for f in json.loads(schema_json)["fields"]}
     out: dict[str, dict] = {}
     for f in rel_files:
         stats = _file_column_stats(os.path.join(path, f))
         for k, raw in _partition_raw_values(f).items():
-            pv = _coerce_partition_value(raw, unescape=False)
+            pv = _coerce_partition_value(raw, types.get(k), unescape=False)
             if pv is None:  # NULL partition: no usable bound
                 stats.pop(k, None)
                 continue
@@ -484,7 +493,7 @@ def create(
         0,
         _manifest(
             "create", files, df.schema.json(), partition_by,
-            file_stats=_collect_stats(path, files),
+            file_stats=_collect_stats(path, files, df.schema.json()),
         ),
     )
     return 0
@@ -550,7 +559,7 @@ def _append_loop(path, write_files, new_schema_json: str,
         partition_by = prev["partition_by"] or None
         if files is None:
             files = write_files(partition_by)
-            new_stats = _collect_stats(path, files)
+            new_stats = _collect_stats(path, files, prev["schema"])
         # CHECK constraints: stats-proven where bounds suffice, scan of
         # the unproven files otherwise; re-checked per retry because a
         # concurrent alter may have added a constraint we rebased onto
@@ -674,8 +683,9 @@ def _rewrite(
     to the pinned schema."""
     latest, prev, txns = pin
     partition_by = prev["partition_by"] or None
+    schema_json = schema_json or prev["schema"]
     new_files = _write_data_files(rows, path, partition_by)
-    new_stats = _collect_stats(path, new_files)
+    new_stats = _collect_stats(path, new_files, schema_json)
     _enforce_constraints(path, prev, new_files, new_stats)
     stats_map = prev.get("file_stats", {})
     file_stats = {f: stats_map[f] for f in carried if f in stats_map}
@@ -684,7 +694,7 @@ def _rewrite(
         latest + 1,
         _manifest(
             operation, sorted([*carried, *new_files]),
-            schema_json or prev["schema"], partition_by,
+            schema_json, partition_by,
             {"txns": txns, **_evo_carry(prev),
              **_dv_shed(path, prev, set(carried)), **extra},
             file_stats={**file_stats, **new_stats},
@@ -1240,16 +1250,16 @@ def _scan(
     delete_rows_mor, the change feed)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = _schema_of(m)
     if not files:
         if with_lineage:
-            schema = T.StructType(
-                schema.fields
-                + [T.StructField("__fname", T.StringType()),
-                   T.StructField("__ri", T.LongType())]
-            )
-        return spark.createDataFrame([], schema)
+            schema = schema.add("__fname", "string").add("__ri", "long")
+        # an empty LocalRelation (a local list would build an RDD scan):
+        # the optimizer drops it — and any join over it — statically, so
+        # an empty change-feed arm runs no job
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     paths = [os.path.join(path, f) for f in files]
     # hive partition discovery is anchored at data/; sidecar scans
     # (change-data files under _changes/, which embed partition values
@@ -2077,6 +2087,30 @@ def _require_history(path: str, from_snapshot: int, to_snapshot: int) -> None:
         )
 
 
+def _stamp_snapshots(df: DataFrame, key, snap_of: dict[str, int]) -> DataFrame:
+    """THE one place ``_commit_snapshot`` is derived from files: add it
+    to ``df`` from ``snap_of`` ({file key: committing snapshot}), looked
+    up by the ``key`` column. Files sharing one snapshot (or none) get a
+    literal; several snapshots get one literal map lookup, its keys and
+    values passed as two numpy arrays so building it costs a constant
+    number of Py4J calls whatever the file count (``lit`` of a list
+    makes one call per element). Delta readers take the commit version
+    from the log the same way — no join."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    snaps = set(snap_of.values())
+    if len(snaps) <= 1:
+        stamp = F.lit(snaps.pop() if snaps else None)
+    else:
+        keys = sorted(snap_of)
+        stamp = F.element_at(F.map_from_arrays(
+            F.lit(np.array(keys)),
+            F.lit(np.array([snap_of[k] for k in keys], dtype=np.int64)),
+        ), key)
+    return df.withColumn("_commit_snapshot", stamp.cast("long"))
+
+
 def _dv_delta_df(spark: SparkSession, path: str,
                  dv_delta: dict[str, int]) -> tuple[DataFrame, list[str]]:
     """A range's new deletion-vector entries as a DISTRIBUTED DataFrame
@@ -2087,22 +2121,21 @@ def _dv_delta_df(spark: SparkSession, path: str,
     delete of 10⁶ rows now flows worker-side through the retraction
     join — and the data-source CDF face matches (r13): its delete
     partitions carry DV file PATHS, read in _read_cdf_part worker-side,
-    so no face materializes positions on the driver. One Spark read per
-    committing snapshot (its files get that snapshot as a literal
-    column); legacy basename keys fail loudly from the same
-    distinct-filename pass that plans the touched scan."""
+    so no face materializes positions on the driver. One Spark read of
+    every new vector under the fixed vector schema (no inference job;
+    no vectors → an empty relation), each row stamped with its vector
+    file's committing snapshot by the vector's own file name — unique,
+    since ``_deletes/`` is flat and every name carries its write token;
+    legacy basename keys fail loudly from the same distinct-filename
+    pass that plans the touched scan."""
     from pyspark.sql import functions as F
 
-    by_snap: dict[int, list[str]] = {}
-    for dv, s in dv_delta.items():
-        by_snap.setdefault(s, []).append(dv)
-    out = None
-    for s, fs in sorted(by_snap.items()):
-        d = (
-            spark.read.parquet(*[os.path.join(path, f) for f in sorted(fs)])
-            .withColumn("_commit_snapshot", F.lit(s).cast("long"))
-        )
-        out = d if out is None else out.unionByName(d)
+    out = _stamp_snapshots(
+        spark.read.schema("__fname string, __ri long").parquet(
+            *[os.path.join(path, f) for f in sorted(dv_delta)]),
+        F.col("_metadata.file_name"),
+        {os.path.basename(f): s for f, s in dv_delta.items()},
+    )
     touched = [
         r["__fname"] for r in out.select("__fname").distinct().collect()
     ]
@@ -2217,9 +2250,12 @@ def table_changes_feed(
 
     Scale shape: inserts read only the appended files; retractions read
     only the files the delta deletion vectors touch (MoR's premise is
-    deletes ≪ data), each joined against a broadcast file→snapshot map;
-    sidecar changes read only the sidecar files (sized by rows the DML
-    actually matched) — never the whole table."""
+    deletes ≪ data); sidecar changes read only the sidecar files (sized
+    by rows the DML actually matched) — never the whole table. Each of
+    the three arms is one scan whose rows take ``_commit_snapshot`` from
+    the file that carries them (_stamp_snapshots: a literal, or one
+    literal map lookup — no join, no per-snapshot read); an empty arm
+    is an empty relation, so the three always union."""
     from pyspark.sql import functions as F
 
     snaps = _list_snapshots(path)
@@ -2238,13 +2274,10 @@ def table_changes_feed(
     cols = [f.name for f in schema.fields]
 
     def _with_meta(df: DataFrame, change_type=None) -> DataFrame:
-        sel = list(cols)
         # change_type=None: the df already carries _change_type as data
         # (change-data sidecar rows)
-        sel.append(F.lit(change_type).alias("_change_type")
-                   if change_type is not None else F.col("_change_type"))
-        sel.append(F.col("_commit_snapshot").cast("long").alias("_commit_snapshot"))
-        return df.select(*sel)
+        ct = F.col("_change_type") if change_type is None else F.lit(change_type)
+        return df.select(*cols, ct.alias("_change_type"), "_commit_snapshot")
 
     insert_files, dv_delta, change_files = {}, {}, {}
     if from_snapshot < latest:
@@ -2253,53 +2286,29 @@ def table_changes_feed(
             path, from_snapshot, latest, ignore_rewrites
         )
 
-    parts: list[DataFrame] = []
-    if insert_files:
-        ins = _scan(spark, path, emit_m, sorted(insert_files), with_lineage=True)
-        fmap = spark.createDataFrame(
-            [(f, s) for f, s in insert_files.items()],
-            "__fname string, _commit_snapshot long",
-        )
-        parts.append(_with_meta(ins.join(F.broadcast(fmap), "__fname"), "insert"))
-    if dv_delta:
-        dv_df, touched = _dv_delta_df(spark, path, dv_delta)
-        rows = _scan(spark, path, emit_m, touched, with_lineage=True)
-        # broadcast only while the vectors are small (MoR's premise);
-        # a bulk delete's positions stay worker-side either way
-        dv_df = _maybe_broadcast_dvs(
-            dv_df, [os.path.join(path, dv) for dv in dv_delta])
-        dels = rows.join(dv_df, ["__fname", "__ri"])
-        parts.append(_with_meta(dels, "delete"))
-    if change_files:
-        # change-data sidecars carry _change_type as DATA and embed
-        # partition values as ordinary columns; read them under the
-        # latest contract EXTENDED by the _change_type field, grouped
-        # per committing snapshot (one sidecar file set per DML op, so
-        # the group count is the number of in-range DML snapshots)
-        sc_schema = json.loads(m_latest["schema"])
-        sc_m = {**emit_m, "schema": json.dumps({
-            **sc_schema,
-            "fields": sc_schema["fields"] + [{
-                "name": "_change_type", "type": "string",
-                "nullable": True, "metadata": {},
-            }],
-        })}
-        by_snap: dict[int, list[str]] = {}
-        for f, s in change_files.items():
-            by_snap.setdefault(s, []).append(f)
-        for s, fs in sorted(by_snap.items()):
-            ch = _scan(spark, path, sc_m, sorted(fs), base_dir=path).withColumn(
-                "_commit_snapshot", F.lit(s).cast("long"))
-            parts.append(_with_meta(ch))
-    if not parts:
-        empty = _scan(spark, path, emit_m, []).withColumns({
-            "_change_type": F.lit(None).cast("string"),
-            "_commit_snapshot": F.lit(None).cast("long"),
-        })
-        return empty, latest
-    feed = parts[0]
-    for p in parts[1:]:
-        feed = feed.unionByName(p)
+    inserts = _stamp_snapshots(
+        _scan(spark, path, emit_m, sorted(insert_files), with_lineage=True),
+        F.col("__fname"), insert_files)
+    dv_df, touched = _dv_delta_df(spark, path, dv_delta)
+    rows = _scan(spark, path, emit_m, touched, with_lineage=True)
+    # broadcast only while the vectors are small (MoR's premise); a bulk
+    # delete's positions stay worker-side either way
+    dv_df = _maybe_broadcast_dvs(
+        dv_df, [os.path.join(path, dv) for dv in dv_delta])
+    dels = rows.join(dv_df, ["__fname", "__ri"])
+    # change-data sidecars carry _change_type as DATA and embed partition
+    # values as ordinary columns; one read of every in-range sidecar
+    # under the latest contract EXTENDED by the _change_type field,
+    # stamped by sidecar file name (flat _changes/, token-prefixed names)
+    sc_m = {**emit_m, "schema": _schema_of(m_latest).add("_change_type", "string").json()}
+    changes = _stamp_snapshots(
+        _scan(spark, path, sc_m, sorted(change_files), base_dir=path),
+        F.col("_metadata.file_name"),
+        {os.path.basename(f): s for f, s in change_files.items()},
+    )
+    feed = (_with_meta(inserts, "insert")
+            .unionByName(_with_meta(dels, "delete"))
+            .unionByName(_with_meta(changes)))
     return feed, latest
 
 

@@ -11,7 +11,6 @@ from open_data_lakehouse_demo_spark.streaming.job import (  # noqa: F401
     latest_state_agg,
     windowed_boardings,
     latest_state_stateful,
-    latest_state_tws,
     parse_envelope,
     read_json_stream,
     relief_join,

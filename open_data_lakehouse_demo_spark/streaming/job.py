@@ -381,100 +381,6 @@ def enriched_alerts(
     )
 
 
-def latest_state_tws(parsed: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """T3 via transformWithStateInPandas — Spark 4's arbitrary-state API.
-
-    Third implementation of the same observable semantics as
-    latest_state_agg / latest_state_stateful, on the state-v2 operator:
-    typed per-key ValueState, explicit key deletion (deleteIfExists on
-    last_stop), TTL/timers available when session logic needs them. This
-    is the forward-looking scale path — state lives in the versioned
-    state store with per-state-variable schemas, and the processor
-    survives query restarts via the checkpoint.
-
-    REQUIRES the RocksDB state store provider (state-v2 does not run on
-    the default HDFS-backed provider):
-      spark.sql.streaming.stateStore.providerClass=
-        org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-    and the ``protobuf`` python package (the state-v2 worker's wire
-    protocol) — import-gated in tests since this image lacks it; the
-    applyInPandasWithState variant is the fully-exercised fallback.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_schema = (
-        "bus_line STRING, remaining_at_stop BIGINT, total_passengers BIGINT, "
-        "total_capacity BIGINT, update_timestamp TIMESTAMP, bus_ride_id STRING"
-    )
-
-    class LatestStateProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState("latest", state_schema)
-            self._handle = handle
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._latest.get()
-            if prev is not None:
-                (line, remaining, total, cap, ts, rid) = prev
-                best = (pd.Timestamp(ts), rid, line, remaining, total, cap, False)
-            else:
-                best = None
-            for pdf in rows:
-                for row in pdf.itertuples(index=False):
-                    cand = (
-                        pd.Timestamp(row.timestamp_at_stop),
-                        row.bus_ride_id,
-                        row.bus_line,
-                        int(row.remaining_at_stop),
-                        int(row.total_passengers),
-                        int(row.total_capacity),
-                        bool(row.last_stop),
-                    )
-                    if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                        best = cand
-            ts, rid, line, remaining, total, cap, last = best
-            if last:
-                # ride finished ⇒ remove the key, emit nothing
-                self._latest.clear()
-                return iter(())
-            self._latest.update(
-                (line, remaining, total, cap, ts.to_pydatetime(), rid)
-            )
-            return iter(
-                [
-                    pd.DataFrame(
-                        [
-                            {
-                                "bus_line_id": key[0],
-                                "bus_line": line,
-                                "remaining_at_stop": remaining,
-                                "total_passengers": total,
-                                "total_capacity": cap,
-                                "update_timestamp": ts,
-                            }
-                        ]
-                    )
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        parsed.withWatermark("timestamp_at_stop", watermark)
-        .groupBy("bus_line_id")
-        .transformWithStateInPandas(
-            LatestStateProcessor(),
-            outputStructType=STATE_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def session_boardings(
     parsed: DataFrame,
     gap: str = "15 minutes",

@@ -879,7 +879,7 @@ class _TableLogWriterBase:
                     tl._manifest(
                         "create", rels, schema_json, self.partition_by or None,
                         {"txns": {txn[0]: txn[1]}} if txn else None,
-                        file_stats=tl._collect_stats(self.path, rels),
+                        file_stats=tl._collect_stats(self.path, rels, schema_json),
                     ),
                 )
                 return

@@ -336,65 +336,6 @@ def test_stream_stream_relief_join_left_outer_emits_unrelieved(spark, dirs, tmp_
     assert any(r["pickup_ride_id"] is None for r in by_alert["r1"])
 
 
-def _protobuf_available() -> bool:
-    # state-v2's python worker speaks protobuf to the state server;
-    # absent in this container (do-not-install policy) → gate, don't fail
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason=(
-        "PERMANENT environment gate (decided r7): transformWithStateInPandas "
-        "requires google.protobuf for the state-v2 python<->JVM state-server "
-        "wire protocol; the package is not in this image and installs are "
-        "out of policy, so this runs only where protobuf exists. The same "
-        "semantics are covered unconditionally by the agg and "
-        "applyInPandasWithState T3 variants above."
-    ),
-)
-def test_tws_variant_matches_agg_semantics(spark, dirs, tmp_path):
-    """transformWithStateInPandas branch (Spark 4 state-v2 API): same final
-    snapshot as the agg and applyInPandasWithState views, including
-    last_stop key removal."""
-    _drop(dirs["src"], "b1.jsonl", BATCH_1)
-    _drop(dirs["src"], "b2.jsonl", BATCH_2)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    parsed = st.parse_envelope(st.read_json_stream(spark, dirs["src"]))
-    out_dir = str(tmp_path / "tws_out")
-
-    def append_updates(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = (
-        st.latest_state_tws(parsed)
-        .writeStream.foreachBatch(append_updates)
-        .option("checkpointLocation", f"{dirs['ckpt']}/tws")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.read.parquet(out_dir).collect()
-    latest = {}
-    for r in sorted(rows, key=lambda r: r["update_timestamp"]):
-        latest[r["bus_line_id"]] = r
-    assert latest[1]["remaining_at_stop"] == 7
-    assert latest[1]["total_passengers"] == 40
-    # line 2's latest update is its last_stop → key removed, never emitted
-    assert 2 not in latest
-
-
 def test_session_window_boardings(spark, dirs, tmp_path):
     """Session windows: events ≤15 min apart merge; a >15-min gap starts a
     new session. Sessions finalize (append mode) once the watermark passes."""

@@ -1458,6 +1458,21 @@ def test_table_changes_feed_emits_inserts_and_delete_retractions(
         tl.table_changes_feed(spark, path, 4)
     feed5, hw5 = tl.table_changes_feed(spark, path, 4, ignore_rewrites=True)
     assert hw5 == 5 and feed5.count() == 0
+    # two MoR deletes, a COW update and a COW delete in ONE range: every
+    # retraction and sidecar row carries its own committing snapshot
+    tl.delete_rows_mor(spark, path, [("id", "=", 2)])  # snap 6
+    tl.update_where(spark, path, [("id", "=", 3)], {"tag": "'u'"})  # snap 7
+    tl.delete_rows(spark, path, [("id", "=", 4)])  # snap 8
+    tl.delete_rows_mor(spark, path, [("id", "=", 5)])  # snap 9
+    feed6, hw6 = tl.table_changes_feed(spark, path, 5)
+    assert hw6 == 9
+    assert sorted((r["id"], r["_change_type"], r["_commit_snapshot"], r["tag"])
+                  for r in feed6.collect()) == [
+        (2, "delete", 6, "v1"),
+        (3, "update_postimage", 7, "u"), (3, "update_preimage", 7, "v1"),
+        (4, "delete", 8, "v1"),
+        (5, "delete", 9, "v1"),
+    ]
 
 
 def test_table_changes_feed_latest_contract_and_collision_guard(
@@ -2131,9 +2146,11 @@ def test_cdc_mirror_fuzz_update_interleavings(spark, tmp_path):
 def test_table_changes_feed_retraction_join_plan(spark, tmp_path):
     """Plan pin: while deletion vectors are small (MoR's premise) the
     feed's retraction join broadcasts the DV side — no SortMergeJoin,
-    no Cartesian — and the insert branch's file→snapshot map broadcasts
-    too. At 100 TB the retraction read touches only DV-named files with
-    a broadcast join against kilobytes of positions."""
+    no Cartesian. It is the plan's only join: the insert branch takes
+    its snapshot from a literal map keyed by file, with no driver-built
+    relation (ExistingRDD) to join. At 100 TB the retraction read
+    touches only DV-named files with a broadcast join against kilobytes
+    of positions."""
     path = str(tmp_path / "t")
     tl.create(spark, path, spark.range(1000).select(
         "id", (F.col("id") % 7).alias("v")).coalesce(2))
@@ -2143,9 +2160,34 @@ def test_table_changes_feed_retraction_join_plan(spark, tmp_path):
     tl.delete_rows_mor(spark, path, [("v", "=", 3)])
     feed, _ = tl.table_changes_feed(spark, path, s0)
     plan = feed._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    assert plan.count("BroadcastHashJoin") == 1
+    assert "ExistingRDD" not in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_table_changes_feed_runs_no_more_jobs_than_table_changes(
+    spark, base, tmp_path
+):
+    """Layer pin: on an append-only range the feed is a read like
+    table_changes — its inserts take their snapshot from a literal, and
+    its empty retraction and sidecar arms are empty local relations the
+    optimizer drops — so it runs no more Spark jobs."""
+    path = str(tmp_path / "t")
+    tl.create(spark, path, base)
+    tl.append(spark, path, base)
+    sc = spark.sparkContext
+
+    def jobs(face):
+        group = f"feed-jobs-{face.__name__}"
+        sc.setJobGroup(group, "count the jobs of one change read")
+        try:
+            face(spark, path, 0)[0].collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(tl.table_changes_feed) <= jobs(tl.table_changes)
 
 
 def test_table_changes_feed_bulk_mor_delete_is_distributed(

@@ -47,7 +47,8 @@ _CODES = [(0, "01", 10), (1, "007", 20), (2, "1e3", 30)]
 
 @pytest.mark.parametrize("face", [
     "read", "read_snapshot", "read_where_hit", "read_where_pruned",
-    "table_changes", "table_changes_feed", "format", "compact",
+    "plan_scan_string", "table_changes", "table_changes_feed", "format",
+    "compact",
 ])
 def test_string_partition_column_reads_as_declared(registered, spark, tmp_path, face):
     """A STRING partition column whose values look numeric ('01',
@@ -71,6 +72,12 @@ def test_string_partition_column_reads_as_declared(registered, spark, tmp_path, 
     elif face == "read_where_pruned":
         assert tl.plan_scan(path, [("v", ">", 100)])[0] == []
         df, want = tl.read_where(spark, path, [("v", ">", 100)]), []
+    elif face == "plan_scan_string":
+        # the partition stats keep the declared string type, so a string
+        # predicate prunes (numeric bounds [7, 7] would keep every file)
+        keep, _skip = tl.plan_scan(path, [("code", "=", "007")])
+        assert [f.split("/")[1] for f in keep] == ["code=007"]
+        df, want = tl.read_where(spark, path, [("code", "=", "007")]), _CODES[1:2]
     elif face == "table_changes":
         df = tl.table_changes(spark, path, -1)[0]
     elif face == "table_changes_feed":

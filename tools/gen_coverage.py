@@ -44,7 +44,7 @@ STATIC = {
     "P2": ("withColumn/Renamed/drop — pervasive", "all queries"),
     "T1": ("streaming/job.py withWatermark", "tests/test_streaming.py"),
     "T2": ("streaming/job.py alerts_stream", "tests/test_streaming.py + capacity_alerts_batch"),
-    "T3": ("streaming/job.py latest_state_agg + latest_state_stateful + latest_state_tws (state-v2; PERMANENT env gate: google.protobuf absent from image + do-not-install policy, decided r7)", "tests/test_streaming.py + latest_bus_state_batch"),
+    "T3": ("streaming/job.py latest_state_agg + latest_state_stateful", "tests/test_streaming.py + latest_bus_state_batch"),
     "T4": ("streaming/job.py run_pipeline overwrite sink", "tests/test_streaming.py"),
     "T5": ("streaming/job.py run_pipeline dual queries", "tests/test_streaming.py"),
     "T6": ("streaming/replay.py", "tests/test_streaming.py, test_integration.py"),
