@@ -127,10 +127,17 @@ def distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern as bloom_decontaminate's false_positive; at 100 TB the audit
     arm runs on a sample, the sketch on everything."""
     events = t(spark, sf_dir, "events")
-    agg = events.groupBy("event_type").agg(
+    # One row per (event_type, user_id) first: the exact count is then a
+    # plain count and the sketch sees each user once. A countDistinct
+    # beside the sketch would instead make Spark build and shuffle a
+    # partial HLL++ buffer per (event_type, user_id) group. The estimate
+    # is unchanged: registers keep a per-bucket maximum, so duplicates
+    # never move them (Spark's HLL++ is dense-only).
+    per_user = events.groupBy("event_type", "user_id").count()
+    agg = per_user.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=0.02).alias("est"),
-        F.countDistinct("user_id").alias("exact_users"),
-        F.count("*").alias("n_events"),
+        F.count("user_id").alias("exact_users"),
+        F.sum("count").alias("n_events"),
     )
     return agg.select(
         "event_type",

@@ -1112,6 +1112,10 @@ def _translate_where(m: dict, where: list[tuple], stats: dict | None) -> list[tu
 #: a signal to compact, which materializes the deletes)
 _DV_BROADCAST_BYTES = 64 * 1024 * 1024
 
+#: every deletion-vector file's schema: (data file name, row index).
+#: Readers pass it to spark.read.schema, so no read infers it with a job.
+_DV_SCHEMA = "__fname string, __ri long"
+
 
 def _maybe_broadcast_dvs(df: DataFrame, abs_paths: list[str]) -> DataFrame:
     """Broadcast the deletion-vector side of an anti-/retraction join
@@ -1135,7 +1139,7 @@ def _apply_delete_vectors(
     if not dv_files:
         return src
     paths = [os.path.join(path, f) for f in dv_files]
-    dv = spark.read.parquet(*paths)
+    dv = spark.read.schema(_DV_SCHEMA).parquet(*paths)
     _reject_legacy_dv_keys(spark, paths)
     dv = _maybe_broadcast_dvs(dv, paths)
     return src.join(dv, on=["__fname", "__ri"], how="left_anti")
@@ -2131,7 +2135,7 @@ def _dv_delta_df(spark: SparkSession, path: str,
     from pyspark.sql import functions as F
 
     out = _stamp_snapshots(
-        spark.read.schema("__fname string, __ri long").parquet(
+        spark.read.schema(_DV_SCHEMA).parquet(
             *[os.path.join(path, f) for f in sorted(dv_delta)]),
         F.col("_metadata.file_name"),
         {os.path.basename(f): s for f, s in dv_delta.items()},

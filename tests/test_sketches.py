@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -35,10 +36,16 @@ def test_hll_close_to_exact_distinct(spark):
     """The query now EMITS its accuracy contract (hll_within_3rsd — the
     r7 oracle-ized form); cross-check the exact column and the flag
     against an independent exact aggregate."""
-    rows = {
-        r["event_type"]: r
-        for r in QUERIES["distinct_users_hll"].spark(spark, SF_DIR).collect()
-    }
+    df = QUERIES["distinct_users_hll"].spark(spark, SF_DIR)
+    rows = {r["event_type"]: r for r in df.collect()}
+    # The sketch runs over users pre-aggregated per (event_type, user_id):
+    # no aggregate grouping on user_id may carry an HLL++ buffer, which
+    # would be one partial sketch per (event_type, user_id) group.
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    aggs = re.findall(r"Aggregate\(keys=\[([^\]]*)\], functions=\[(.*)\]", plan)
+    assert aggs
+    for keys, functions in aggs:
+        assert not ("user_id" in keys and "approx_count_distinct" in functions)
     events = read_parquet(spark, f"{SF_DIR}/events.parquet")
     exact = {
         r["event_type"]: r["n"]

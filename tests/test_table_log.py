@@ -2166,6 +2166,17 @@ def test_table_changes_feed_retraction_join_plan(spark, tmp_path):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
+def _jobs(spark, group, action) -> int:
+    """Spark jobs that ``action()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count the jobs of one read")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_table_changes_feed_runs_no_more_jobs_than_table_changes(
     spark, base, tmp_path
 ):
@@ -2176,18 +2187,27 @@ def test_table_changes_feed_runs_no_more_jobs_than_table_changes(
     path = str(tmp_path / "t")
     tl.create(spark, path, base)
     tl.append(spark, path, base)
-    sc = spark.sparkContext
 
     def jobs(face):
-        group = f"feed-jobs-{face.__name__}"
-        sc.setJobGroup(group, "count the jobs of one change read")
-        try:
-            face(spark, path, 0)[0].collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return _jobs(spark, f"feed-jobs-{face.__name__}",
+                     lambda: face(spark, path, 0)[0].collect())
 
     assert jobs(tl.table_changes_feed) <= jobs(tl.table_changes)
+
+
+def test_read_with_deletion_vectors_infers_no_schema(spark, base, tmp_path):
+    """Layer pin: a read through deletion vectors takes their fixed
+    schema (_DV_SCHEMA) instead of inferring it, which cost one Spark job
+    on every such read. Two jobs remain: the broadcast of the vectors
+    and the scan itself."""
+    path = str(tmp_path / "t")
+    tl.create(spark, path, base.coalesce(1))
+    tl.delete_rows_mor(spark, path, [("id", "=", 3)])
+    rows = []
+    n = _jobs(spark, "dv-read-jobs",
+              lambda: rows.extend(tl.read(spark, path).collect()))
+    assert sorted(r["id"] for r in rows) == [i for i in range(10) if i != 3]
+    assert n <= 2
 
 
 def test_table_changes_feed_bulk_mor_delete_is_distributed(

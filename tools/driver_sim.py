@@ -8,6 +8,15 @@ timezone-sensitive paths before the driver does:
 
 Prints one line per query (PASS/FAIL/rows-only) + a failure summary.
 
+Partition-hostile mode (opt-in) reruns the same sweep with partitioning
+that differs from every default, so an answer that depends on partition
+count, split size or join strategy shows up as a FAIL:
+
+    TZ=America/New_York PYTHONPATH=. python tools/driver_sim.py --hostile-partitions
+
+sets local[3], spark.sql.shuffle.partitions=7, AQE off,
+spark.sql.files.maxPartitionBytes=64k and auto-broadcast off.
+
 Pre-snapshot checklist gate (the two regressions that shipped in round 5
 were exactly these, unchecked):
 
@@ -48,6 +57,16 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # passes, or vice versa).
 ORACLE_TABLES = ("region nation customer supplier part orders lineitem "
                  "events documents embeddings").split()
+
+
+# --hostile-partitions: partitioning unlike any default (odd shuffle
+# width on 3 cores, 64k splits, no AQE re-planning, shuffle joins only).
+_HOSTILE_PARTITIONS = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.files.maxPartitionBytes": "64k",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
 
 def create_oracle_views(con, sf_dir: str) -> None:
@@ -223,13 +242,16 @@ def main() -> None:
     import duckdb
     from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[8]")
+    hostile = "--hostile-partitions" in sys.argv
+    builder = (
+        SparkSession.builder.master("local[3]" if hostile else "local[8]")
         .appName("driver-sim")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
     )
+    for k, v in (_HOSTILE_PARTITIONS if hostile else {}).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e

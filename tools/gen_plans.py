@@ -164,6 +164,14 @@ CHECKS = [
         "single-window cumsum with none of its one-partition sort.",
     ),
     (
+        "distinct_users_hll",
+        ["HashAggregate", "0x:Join"],
+        "Built-in HLL++ over users pre-aggregated per (event_type, user_id): "
+        "the lower aggregates carry only a count, so the sketch's partial "
+        "buffers exist per event type, not per (event_type, user_id) group "
+        "(tests/test_sketches.py pins this).",
+    ),
+    (
         "distinct_users_hll_portable",
         ["HashAggregate", "0x:Join", "0x:Window"],
         "Portable-register HLL is two chained hash aggregates (register "
