@@ -33,9 +33,10 @@ Scale notes:
     binary columns zero-copy.
   - spark.sql.execution.arrow.maxRecordsPerBatch bounds decode working
     sets (payloads can be MBs each; set it low for video).
-  - frame sampling fans out rows inside the Python stage — the explode
-    happens in the worker, not as a JVM generator, so frame payload bytes
-    are produced exactly once.
+  - frame sampling with payloads fans out rows inside the Python stage —
+    the explode happens in the worker, not as a JVM generator, so frame
+    payload bytes are produced exactly once; the schedule-only path has
+    no bytes to produce and explodes as a JVM generator instead.
   - repartition on media_id before heavy decode stages to balance skew
     from variable payload sizes.
 """
@@ -456,23 +457,35 @@ FRAME_SCHEMA = "media_id BIGINT, frame_idx INT, ts_ms INT, frame_payload BINARY"
 def sample_video_frames(
     media: DataFrame, every_ms: int = 500, with_payloads: bool = True
 ) -> DataFrame:
-    """Sample one frame every ``every_ms`` from each video payload. The
-    fan-out happens inside the Python stage; output rows carry the frame
-    bytes (fake codec: per-frame md5 keystream keyed by (payload, idx)).
+    """Sample one frame every ``every_ms`` from each video payload:
+    ``max(1, duration_ms // every_ms)`` frames per video, in
+    ``FRAME_SCHEMA``. The payload fan-out happens inside the Python stage;
+    output rows carry the frame bytes (fake codec: per-frame md5
+    keystream keyed by (payload, idx)).
 
     ``with_payloads=False`` emits the same fan-out rows with empty
     ``frame_payload`` bytes, for consumers that only need the sampling
-    SCHEDULE: Spark cannot prune columns through an opaque mapInPandas
-    (guide §4.1), so a schedule-only reader would otherwise pay for
-    generating and Arrow-shipping every frame's pixel bytes just to drop
-    them. The schedule branch also ships only (media_id, duration_ms)
-    into Python and builds rows vectorized."""
-    cols = (
-        ["media_id", "payload", "meta.duration_ms", "meta.width", "meta.height"]
-        if with_payloads
-        else ["media_id", "meta.duration_ms"]
-    )
-    vid = spread(media.filter(F.col("kind") == "video").select(*cols))
+    SCHEDULE. The schedule is pure arithmetic over the media metadata, so
+    it is one Catalyst projection, ``explode(sequence(...))``, with no
+    Python stage: Spark cannot prune columns through an opaque
+    mapInPandas (guide §4.1), and the worker round-trip would only ship
+    (media_id, duration_ms) out and integers back. A NULL
+    ``duration_ms`` emits no frames on this path (the payload path
+    raises on it)."""
+    vid = media.filter(F.col("kind") == "video")
+    if not with_payloads:
+        return vid.where("meta.duration_ms IS NOT NULL").selectExpr(
+            "media_id",
+            f"explode(sequence(0, greatest(meta.duration_ms div {every_ms}, 1) - 1)) AS i",
+        ).selectExpr(
+            "media_id",
+            "CAST(i AS INT) AS frame_idx",
+            f"CAST(i * {every_ms} AS INT) AS ts_ms",
+            "X'' AS frame_payload",
+        )
+    vid = spread(vid.select(
+        "media_id", "payload", "meta.duration_ms", "meta.width", "meta.height"
+    ))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -492,20 +505,7 @@ def sample_video_frames(
                     )
             yield pd.DataFrame(rows)
 
-    def fn_schedule(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = np.maximum(1, pdf["duration_ms"].to_numpy() // every_ms)
-            idx = np.concatenate([np.arange(k) for k in n]) if len(n) else np.empty(0, np.int64)
-            yield pd.DataFrame(
-                {
-                    "media_id": np.repeat(pdf["media_id"].to_numpy(), n),
-                    "frame_idx": idx.astype(np.int32),
-                    "ts_ms": (idx * every_ms).astype(np.int32),
-                    "frame_payload": [b""] * len(idx),
-                }
-            )
-
-    return vid.mapInPandas(fn if with_payloads else fn_schedule, FRAME_SCHEMA)
+    return vid.mapInPandas(fn, FRAME_SCHEMA)
 
 
 AUDIO_FEATURE_SCHEMA = (

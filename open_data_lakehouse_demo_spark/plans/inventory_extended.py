@@ -281,14 +281,20 @@ def table_profile_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = t(spark, sf_dir, "customer")
     prof = profile_table(cust).select("column", "dtype", "n_rows", "approx_distinct")
-    cols = [c for c, _dt in _PROFILE_COLS]
-    exacts = cust.agg(
-        *[F.countDistinct(F.col(c)).alias(f"ed_{c}") for c in cols]
-    ).selectExpr(
-        f"stack({len(cols)}, "
-        + ", ".join(f"'{c}', ed_{c}" for c in cols)
-        + ") AS (column, exact_distinct)"
-    )
+    # one distinct aggregate over the unpivoted values: N countDistincts
+    # side by side plan as an Expand whose slot and key order follow
+    # expression-id hashing, so their generated code differs every run
+    # and never hits the codegen cache. Values compare as strings:
+    # Spark's double-to-string round-trips, `+ 0.0D` folds -0.0 into 0.0
+    # as countDistinct does, and NULLs stay NULL.
+    exacts = cust.selectExpr(
+        f"stack({len(_PROFILE_COLS)}, "
+        + ", ".join(
+            f"'{c}', CAST({c}{' + 0.0D' if dt == 'double' else ''} AS STRING)"
+            for c, dt in _PROFILE_COLS
+        )
+        + ") AS (column, v)"
+    ).groupBy("column").agg(F.countDistinct("v").alias("exact_distinct"))
     return prof.join(F.broadcast(exacts), "column").select(
         "column",
         "dtype",

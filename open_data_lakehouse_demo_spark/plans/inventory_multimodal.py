@@ -58,15 +58,15 @@ WHERE d.doc_id % 3 = 2
 
 @query("video_frame_sample", ("MM3",), oracle=_MM3_ORACLE, tags=("multimodal",))
 def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling (1 frame / 500ms) with in-worker fan-out
-    (operators/multimodal.py). The sampling SCHEDULE — one row per
+    """Video frame sampling (1 frame / 500ms) over the synthesized media
+    table (operators/multimodal.py). The sampling SCHEDULE — one row per
     (video doc, frame index) with its timestamp — is pure arithmetic
     over the media metadata (duration = n_chars % 2000 + 200 ms), so it
     oracle-checks as SQL; the per-frame payload bytes (fake codec by
     design — no tier-1 video container) remain pytest-verified.
-    with_payloads=False (r13): this query discards frame_payload, and
-    Spark can't prune columns through the opaque Python stage — the
-    schedule branch skips generating the bytes it would drop."""
+    with_payloads=False: this query discards frame_payload, so it takes
+    the schedule path, one JVM ``explode(sequence(...))`` projection with
+    no Python stage and no frame bytes."""
     media = mm.synth_media_from_documents(t(spark, sf_dir, "documents"))
     return mm.sample_video_frames(media, every_ms=500, with_payloads=False).select(
         "media_id", "frame_idx", "ts_ms"

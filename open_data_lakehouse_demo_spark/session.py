@@ -19,6 +19,15 @@ local[N]):
     98 queries compiles ~1,170 distinct sources at both sf0.01 and sf0.1
     (the working set depends on plan shapes, not data size), so 2048
     entries keep every warm query at zero Janino compiles.
+  - Python call-site capture off (``dataFrameDebugging``): plan building
+    is Py4J-bound, and the capture cost ~10 round-trips per API call, so
+    a warm build pass of the 16 perfbench query_mix queries falls from
+    8,086 to 3,040 Py4J commands (plus ~1,300-1,900 proxy detaches that
+    follow Python's garbage collector). Given up: DataFrame errors no
+    longer carry the Python call-site fragment in their query context;
+    analysis errors keep their messages.
+    An external driver that brings its own plain session keeps the
+    capture on, since only this factory sets the conf.
 """
 
 from __future__ import annotations
@@ -80,6 +89,16 @@ def get_spark(
         # Static conf: it only takes effect here, before the session starts.
         .config("spark.sql.codegen.cache.maxEntries", "2048")
         # -- python interchange -----------------------------------------
+        # PySpark 4.1 wraps every DataFrame/Column/functions call in
+        # pyspark.errors.utils._with_origin, which, while this is true,
+        # fetches the active session, reads
+        # spark.sql.stackTracesInDataFrameContext, walks the Python stack
+        # and sets/clears the JVM's PySparkCurrentOrigin: ~10 Py4J
+        # round-trips per API call, only to label error contexts with a
+        # Python call site that nothing here reads (pricing_summary's
+        # build: 482 -> 122 commands). Read once per process
+        # (is_debugging_enabled caches it).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Python DataSource filter pushdown (Spark 4.1): lets the

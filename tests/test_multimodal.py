@@ -198,16 +198,26 @@ def test_real_media_partition_invariant(spark):
 
 
 def test_video_schedule_path_matches_payload_path(media):
-    """r13: with_payloads=False must emit the identical fan-out schedule
-    (media_id, frame_idx, ts_ms) with empty payload bytes."""
+    """with_payloads=False must emit the identical fan-out schedule
+    (media_id, frame_idx, ts_ms) with empty payload bytes, in
+    FRAME_SCHEMA's types, from a plan with no Python stage; a NULL
+    duration has no frames."""
     full = mm.sample_video_frames(media, every_ms=500)
     sched = mm.sample_video_frames(media, every_ms=500, with_payloads=False)
     key = lambda r: (r["media_id"], r["frame_idx"], r["ts_ms"])  # noqa: E731
     assert sorted(map(key, full.collect())) == sorted(map(key, sched.collect()))
     assert all(bytes(r["frame_payload"]) == b"" for r in sched.collect())
-    assert [f.name for f in sched.schema.fields] == [
-        "media_id", "frame_idx", "ts_ms", "frame_payload",
+    assert sched.dtypes == [
+        ("media_id", "bigint"), ("frame_idx", "int"), ("ts_ms", "int"),
+        ("frame_payload", "binary"),
     ]
+    plan = sched._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" in plan
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+    no_duration = media.withColumn(
+        "meta", F.col("meta").withField("duration_ms", F.lit(None).cast("int"))
+    )
+    assert mm.sample_video_frames(no_duration, with_payloads=False).count() == 0
 
 
 def test_synth_real_media_kind_filter_prunes_other_branch(spark):

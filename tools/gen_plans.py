@@ -530,6 +530,14 @@ CHECKS = [
         "iterator-mode MapInPandas (Arrow batches; binary column never "
         "row-serialized through Python pickling).",
     ),
+    (
+        "video_frame_sample",
+        ["Generate", "0x:MapInPandas", "0x:ArrowEvalPython"],
+        "Frame schedule without frame bytes: pure arithmetic over the "
+        "media metadata, so one JVM explode(sequence(0, greatest("
+        "duration_ms div 500, 1) - 1)) projection — no Python stage, no "
+        "worker round-trip.",
+    ),
 ]
 
 
